@@ -17,8 +17,14 @@ object SparkEntry {
     * TRAINER class whose construction runs a whole fit: llm_bpe_train
     * / llm_bpe_encode (one job per merge round), llm_quality_model
     * (the LBFGS fit), llm_ann_ivf* (KMeans / the bounded
-    * lowestIdCentroids + codebook collects). Plan-only tooling should
-    * construct once and reuse the returned frame. */
+    * lowestIdCentroids + codebook collects). Memoized construction
+    * jobs go through [[graft.plans.PlanMemo]], whose scaladoc holds
+    * the staleness caveat (inputs rewritten in place under an equal
+    * plan serve the old artifact). dedupClusters' bounded probe
+    * (≤ 200k pairs by default) is deliberately NOT memoized and runs
+    * on every construction: its labels are query results, not a
+    * trained artifact. Plan-only tooling should construct once and
+    * reuse the returned frame. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.all ++ OperatorQueries.all ++ LlmQueries.all
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

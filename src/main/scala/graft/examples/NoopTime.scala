@@ -8,9 +8,11 @@ import java.util.concurrent.atomic.AtomicInteger
   * sink — evaluates every output column, no count-time join
   * elimination) and report min-of-N plus job/stage counts and
   * plan-construction time. The honest A/B harness for optimization
-  * work: QueryTime's count() lets Catalyst eliminate unique-key left
+  * work: a count() harness lets Catalyst eliminate unique-key left
   * joins and prune expensive output columns (CLAUDE.md probe lesson),
   * so recompute-vs-checkpoint A/Bs measured there can be artifacts.
+  * Jobs and stages are split by phase: construct (cjobs), building
+  * the executed plan (pjobs) and exec.
   *
   * Usage: runMain graft.examples.NoopTime <name>[,<name>...] [sfDir] [reps]
   */
@@ -40,6 +42,7 @@ object NoopTime {
         val t0 = System.nanoTime()
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
         val tPlan = System.nanoTime()
+        val jp0 = jobs.get(); val sp0 = stages.get()
         df.queryExecution.executedPlan // force analysis+optimize+plan
         val tPlanned = System.nanoTime()
         val j0 = jobs.get(); val s0 = stages.get()
@@ -53,7 +56,8 @@ object NoopTime {
           f"(construct ${(tPlan - t0) / 1e9}%.2f, " +
           f"plan ${(tPlanned - tPlan) / 1e9}%.2f, " +
           f"exec ${(t1 - tPlanned) / 1e9}%.2f; " +
-          f"cjobs ${j0 - jc0}, cstages ${s0 - sc0}, " +
+          f"cjobs ${jp0 - jc0}, cstages ${sp0 - sc0}, " +
+          f"pjobs ${j0 - jp0}, pstages ${s0 - sp0}, " +
           f"jobs ${jobs.get() - j0}, stages ${stages.get() - s0})")
         total
       }

@@ -209,19 +209,24 @@ object GraftFunctions {
         zValueTree(x, y, intArg("graft_zvalue", "bits", b))
     })
 
-  /** Widen an integral layout axis to LongType; reject fractional
-    * types loudly instead of letting a non-ANSI Cast truncate them
+  /** Widen an integral layout axis to LongType; an untyped NULL
+    * becomes a BIGINT null (so the key is NULL, like any NULL axis).
+    * Every other type — DECIMAL included, even at scale 0 — is
+    * rejected loudly instead of letting a non-ANSI Cast truncate it
     * into a plausible-but-wrong key (ADVICE r15). */
   private def longAxis(fname: String, what: String, e: Expression)
       : Expression = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, NullType,
+      ShortType}
     e.dataType match {
       case LongType => e
-      case ByteType | ShortType | IntegerType => Cast(e, LongType)
+      case ByteType | ShortType | IntegerType | NullType =>
+        Cast(e, LongType)
       case dt => throw new IllegalArgumentException(
         s"$fname: $what must be an integral type (TINYINT/SMALLINT/" +
-          s"INT/BIGINT), got ${dt.sql} — a fractional value would be " +
-          "silently truncated into a wrong layout key; cast explicitly")
+          s"INT/BIGINT) or NULL, got ${dt.sql} — DECIMAL is rejected " +
+          "even at scale 0 and a fractional value would be silently " +
+          "truncated into a wrong layout key; cast explicitly")
     }
   }
 

@@ -99,40 +99,21 @@ object Bpe {
           array(element_at(mm, concat(element_at(out, -1), lit(Sep), s)))))
         .otherwise(concat(out, array(s))))
 
-  // mergesFor memo: one trained merge table per (corpus plan, params)
-  // per JVM — the WordPiece.trainVocab construction-memo discipline
-  // (bounded access-ordered LRU, single-flight via synchronizedMap,
-  // immutable inputs assumed under a canonically-equal plan).
-  private type MergesKey = (
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    String, Int, Long)
-  private val mergesCache: java.util.Map[
-      MergesKey, Seq[(Int, String, String, String, Long)]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[
-          MergesKey, Seq[(Int, String, String, String, Long)]](
-          16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[
-            MergesKey, Seq[(Int, String, String, String, Long)]]): Boolean =
-          size() > 16
-      })
+  private val mergesMemo =
+    new graft.plans.PlanMemo[Seq[(Int, String, String, String, Long)]](16)
 
   /** The merge table the ENCODE path bakes into [[BpeEncodeExpr]],
     * training it if this (corpus, params) combination has not been
     * trained in this JVM yet — memoized, so encode-after-train in one
     * session pays the nMerges training rounds once (the
     * WordPiece.trainVocab precedent; [[trainBpe]]/[[trainMerges]]
-    * stay unmemoized: the trainer API always trains).
-    *
-    * Caveat (the dropHotKeys contract at SparkEntry.queries): the memo
-    * keys on the canonicalized PLAN — rewriting the corpus files in
-    * place within one JVM serves the STALE merge table. Immutable
-    * inputs assumed; write to a new path for a retrain. */
+    * stay unmemoized: the trainer API always trains). A
+    * [[graft.plans.PlanMemo]]: rewriting the corpus files in place
+    * within one JVM serves the STALE merge table. */
   def mergesFor(df: DataFrame, nMerges: Int, minFreq: Long = 2L,
       textCol: String = "text"): Seq[(Int, String, String, String, Long)] =
-    mergesCache.computeIfAbsent(
-      (df.queryExecution.analyzed.canonicalized, textCol, nMerges, minFreq),
-      _ => trainMerges(df, nMerges, minFreq, textCol))
+    mergesMemo(df, textCol, nMerges, minFreq)(
+      trainMerges(df, nMerges, minFreq, textCol))
 
   /** [[trainBpe]] returning the merge list driver-side — the form
     * the encode path ([[BpeEncodeExpr]]) consumes as literals. */

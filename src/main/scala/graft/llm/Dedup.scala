@@ -552,32 +552,11 @@ object Dedup {
     sets.select(col("id"), col("sz"), explode_outer(col("sh")).as("h"))
       .where(col("h").isNotNull)
 
-  /** Probe memo for [[dropHotKeys]]: canonicalized hot-key aggregate
-    * plan → collected keys. The probe is an EAGER job at
-    * plan-construction time (the plan SHAPE depends on its result),
-    * so re-constructing the same capped query — Bench passes, Verify
-    * after a suite, repeated `queries(name)(...)` calls — would
-    * re-run the job each time; the memo keys on the CANONICALIZED
-    * logical plan (structural, exprId-normalized), so identical
-    * constructions pay the probe once per JVM. Assumes immutable
-    * inputs between identical constructions (true of any batch
-    * source; a changed path yields a different plan). Bounded: each
-    * entry holds ≤ maxHotLiteral+1 bare-key rows; the map is a
-    * 64-entry access-ordered LRU (the HeavyHitters sketch-memo
-    * discipline — eviction drops only the least-recently-used shape,
-    * never the whole memo, and synchronizedMap keeps computeIfAbsent
-    * single-flight per key). */
-  private type ProbeKey =
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int)
-  private val probeCache
-      : java.util.Map[ProbeKey, Array[org.apache.spark.sql.Row]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[
-          ProbeKey, Array[org.apache.spark.sql.Row]](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[
-            ProbeKey, Array[org.apache.spark.sql.Row]]): Boolean =
-          size() > 64
-      })
+  /** Probe memo for [[dropHotKeys]]: the probe is an EAGER job at
+    * plan-construction time (the plan SHAPE depends on its result).
+    * Each entry holds ≤ maxHotLiteral+1 bare-key rows. */
+  private val probeMemo =
+    new graft.plans.PlanMemo[Array[org.apache.spark.sql.Row]](64)
 
   private[llm] def dropHotKeys(df: DataFrame, keys: Seq[String],
       maxPerKey: Int, maxHotLiteral: Int = 10000): DataFrame =
@@ -589,9 +568,8 @@ object Dedup {
       // limit(cap + 1): a complete key set when within the cap, a
       // cheap overflow signal when not (which keys arrive is then
       // irrelevant — the fallback recomputes the full set lazily)
-      val probe = probeCache.computeIfAbsent(
-        (hot.queryExecution.analyzed.canonicalized, maxHotLiteral),
-        _ => hot.limit(maxHotLiteral + 1).collect())
+      val probe = probeMemo(hot, maxHotLiteral)(
+        hot.limit(maxHotLiteral + 1).collect())
       if (probe.isEmpty) df
       else if (probe.length > maxHotLiteral)
         df.join(hot, keys, "left_anti")
@@ -783,7 +761,8 @@ object Dedup {
     // duplicates), so on bounded inputs — a micro-batch, a fixture,
     // one shard of a corpus — the whole component computation fits
     // the driver. limit(cap+1) keeps the probe a hard memory bound
-    // (~16 B/pair): within the cap, union-find locally and return the
+    // (collected Rows, ~100 B or more per pair — not the 16 B of two
+    // longs): within the cap, union-find locally and return the
     // labels as a LocalRelation (downstream label joins then
     // BROADCAST instead of shuffling, and the iterative loop's
     // 3-4 jobs collapse to the one probe job); above it, the
@@ -792,9 +771,14 @@ object Dedup {
     // pathological corpus, the same trade dropHotKeys makes. NOT
     // memoized: labels are query RESULTS, not a reusable trained
     // artifact — every invocation recomputes from its inputs.
-    val probe = pairs.select(col("id_a"), col("id_b"))
-      .limit(maxDriverPairs + 1).collect()
-    if (probe.length <= maxDriverPairs) {
+    // Ids are read as BIGINT on both paths (an INT pair table gets
+    // the same output schema above and below the cap); a probe
+    // holding a NULL id falls through to the loop.
+    val ids = pairs.select(col("id_a").cast("long").as("id_a"),
+      col("id_b").cast("long").as("id_b"))
+    val probe = ids.limit(maxDriverPairs + 1).collect()
+    if (probe.length <= maxDriverPairs &&
+        !probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
       val parent = new java.util.HashMap[Long, java.lang.Long]()
       def find(x: Long): Long = {
         var r = x
@@ -834,8 +818,8 @@ object Dedup {
     // `checkpoint` to reliable storage; localCheckpoint is the
     // single-JVM equivalent. Superseded iterations' blocks are freed
     // by the ContextCleaner once their datasets go unreferenced.)
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    val edges = ids.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionAll(ids.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint(true)
     // Convergence via the monotone invariant: min-propagation only
     // ever decreases labels, so Σrep is strictly decreasing until the

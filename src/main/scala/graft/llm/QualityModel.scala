@@ -303,38 +303,21 @@ object QualityModel {
       .join(lmFeaturesFrom(df, lm, idCol, textCol), Seq(idCol))
       .select(col(idCol), sigmoid(model, FusedFeatureCols).as("q_score"))
 
-  // modelFor memo: one fitted base model per (corpus plan, id/text
-  // cols) per JVM — the WordPiece.trainVocab construction-memo
-  // discipline (bounded access-ordered LRU, single-flight, immutable
-  // inputs assumed). The fit is partitioning-deterministic (canonical
-  // fit layout above), so the memoized coefficients are the ones any
-  // fresh fit would produce.
-  private type FitKey = (
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    String, String)
-  private val fitCache: java.util.Map[FitKey, Model] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[FitKey, Model](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[FitKey, Model]): Boolean =
-          size() > 16
-      })
+  // The fit is partitioning-deterministic (canonical fit layout
+  // above), so the memoized coefficients are the ones any fresh fit
+  // would produce.
+  private val fitMemo = new graft.plans.PlanMemo[Model](16)
 
   /** The fitted base discriminator for APPLY-side compositions
     * (llm_e2e_score_sample), training it if this (corpus, cols)
     * combination has not been fitted in this JVM yet — memoized, the
     * wordpiece/bpe/unigram encode precedent. [[fit]]/[[trainScore]]
-    * stay unmemoized: the trainer API always trains.
-    *
-    * Caveat (the dropHotKeys contract at SparkEntry.queries): the memo
-    * keys on the canonicalized PLAN — rewriting the corpus files in
-    * place within one JVM serves the STALE coefficients. Immutable
-    * inputs assumed; write to a new path for a refit. */
+    * stay unmemoized: the trainer API always trains. A
+    * [[graft.plans.PlanMemo]]: rewriting the corpus files in place
+    * within one JVM serves the STALE coefficients. */
   def modelFor(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): Model =
-    fitCache.computeIfAbsent(
-      (df.queryExecution.analyzed.canonicalized, idCol, textCol),
-      _ => fit(df, idCol, textCol))
+    fitMemo(df, idCol, textCol)(fit(df, idCol, textCol))
 
   /** Train on corpus ∪ corrupted twin, then score EVERY corpus doc.
     * The positive-class feature frame is consumed twice (the fit's

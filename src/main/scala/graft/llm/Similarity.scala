@@ -214,9 +214,8 @@ object Similarity {
     // index-construction job, memoized per (corpus plan, params) like
     // the other construction-time artifacts (fit layout is canonical,
     // so the memoized centroids ≡ any fresh fit).
-    val centArrs: Seq[Seq[Double]] = memoized[Seq[Seq[Double]]](
-      ("ivfKmeans", planKey(corpus), nCentroids, seed, fitSampleFraction,
-        fitPartitions, idCol, vecCol)) {
+    val centArrs = indexMemo(corpus, "ivfKmeans", nCentroids, seed,
+        fitSampleFraction, fitPartitions, idCol, vecCol) {
       val fitInput = c
         .where(pmod(xxhash64(col("neighbor_id"), lit(seed)), lit(10000L))
           < lit(math.round(fitSampleFraction * 10000)))
@@ -228,33 +227,16 @@ object Similarity {
         try km.fit(fitInput)
         finally fitInput.unpersist(blocking = false)
       model.clusterCenters.map(_.toArray.toSeq).toSeq
-    }
+    }.asInstanceOf[Seq[Seq[Double]]]
     ivfTopKFrom(queries, corpus, k, centArrs, nProbe, idCol, vecCol)
   }
 
-  // Index-construction memo: centroid/codebook artifacts per
-  // (input plan, params) per JVM — the dropHotKeys/HeavyHitters
-  // construction-job discipline (bounded access-ordered LRU,
-  // single-flight via synchronizedMap, immutable inputs assumed under
-  // a canonically-equal plan). Every producer below is
+  // Index-construction memo: centroid/codebook artifacts per (input
+  // plan, artifact, params). Every producer below is
   // partitioning-deterministic (ORDER BY id LIMIT n; the canonical
   // KMeans fit layout; pqTrainLloyd's long-quantized sums), so the
   // memoized artifact is bit-identical to a fresh construction.
-  // Caveat (the dropHotKeys contract at SparkEntry.queries): keys are
-  // canonicalized PLANS — rewriting the vector files in place within
-  // one JVM serves STALE centroids/codebooks to the registered
-  // apply-side queries. Immutable inputs assumed; new path to refit.
-  private val indexCache: java.util.Map[AnyRef, AnyRef] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[AnyRef, AnyRef](32, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[AnyRef, AnyRef]): Boolean =
-          size() > 32
-      })
-  private def memoized[T <: AnyRef](key: AnyRef)(build: => T): T =
-    indexCache.computeIfAbsent(key, _ => build).asInstanceOf[T]
-  private def planKey(df: DataFrame): AnyRef =
-    df.queryExecution.analyzed.canonicalized
+  private val indexMemo = new graft.plans.PlanMemo[AnyRef](32)
 
   /** The nCentroids lowest-id corpus vectors, as driver-side centroid
     * literals — the deterministic, SQL-reproducible coarse quantizer
@@ -268,8 +250,7 @@ object Similarity {
   def lowestIdCentroids(corpus: DataFrame, nCentroids: Int,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : Seq[Seq[Double]] =
-    memoized[Seq[Seq[Double]]](
-      ("lowestIdCentroids", planKey(corpus), nCentroids, idCol, vecCol)) {
+    indexMemo(corpus, "lowestIdCentroids", nCentroids, idCol, vecCol) {
       val rows = corpus
         .select(col(idCol), col(vecCol).cast("array<double>").as("cv"))
         .orderBy(col(idCol)).limit(nCentroids)
@@ -277,7 +258,7 @@ object Similarity {
       require(rows.length == nCentroids,
         s"corpus has only ${rows.length} rows for $nCentroids centroids")
       rows.map(_.getSeq[Double](0).toSeq).toSeq
-    }
+    }.asInstanceOf[Seq[Seq[Double]]]
 
   /** Per-row array of normalized centroid dots — map-only; centroid
     * norms are accumulated left-to-right like `norm` so rankings
@@ -541,10 +522,9 @@ object Similarity {
     // the registered res_t query's dominant cost); long-quantized
     // update sums make the fit partitioning-proof, so the memoized
     // books ≡ any fresh training.
-    memoized[Seq[Seq[Seq[Double]]]](
-      ("pqTrainLloyd", planKey(input), init, nIter, vCol)) {
+    indexMemo(input, "pqTrainLloyd", init, nIter, vCol) {
       pqTrainLloydUncached(input, init, nIter, vCol)
-    }
+    }.asInstanceOf[Seq[Seq[Seq[Double]]]]
 
   private def pqTrainLloydUncached(input: DataFrame,
       init: Seq[Seq[Seq[Double]]], nIter: Int,

@@ -55,41 +55,22 @@ object Unigram {
     * corpus). Not part of the API contract. */
   @volatile private[graft] var lastEmRounds: Int = 0
 
-  // modelFor memo: one trained model per (corpus plan, params) per
-  // JVM — the WordPiece.trainVocab construction-memo discipline
-  // (bounded access-ordered LRU, single-flight via synchronizedMap,
-  // immutable inputs assumed under a canonically-equal plan).
-  private type ModelKey = (
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    String, Int, Int, Int, Int)
-  private val modelCache: java.util.Map[
-      ModelKey, Seq[(String, Long, Double)]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[ModelKey, Seq[(String, Long, Double)]](
-          16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[
-            ModelKey, Seq[(String, Long, Double)]]): Boolean =
-          size() > 16
-      })
+  private val modelMemo =
+    new graft.plans.PlanMemo[Seq[(String, Long, Double)]](16)
 
   /** The trained model the ENCODE/SAMPLE paths bake into their native
     * expressions, training it if this (corpus, params) combination has
     * not been trained in this JVM yet — memoized, so encode-after-train
     * in one session pays the Viterbi-EM rounds once (the
     * WordPiece.trainVocab precedent; [[trainModel]]/[[trainUnigram]]
-    * stay unmemoized: the trainer API always trains).
-    *
-    * Caveat (the dropHotKeys contract at SparkEntry.queries): the memo
-    * keys on the canonicalized PLAN — rewriting the corpus files in
-    * place within one JVM serves the STALE model. Immutable inputs
-    * assumed; write to a new path for a retrain. */
+    * stay unmemoized: the trainer API always trains). A
+    * [[graft.plans.PlanMemo]]: rewriting the corpus files in place
+    * within one JVM serves the STALE model. */
   def modelFor(df: DataFrame, vocabSize: Int = 60, seedSize: Int = 500,
       maxPieceLen: Int = 6, nIter: Int = 3,
       textCol: String = "text"): Seq[(String, Long, Double)] =
-    modelCache.computeIfAbsent(
-      (df.queryExecution.analyzed.canonicalized, textCol, vocabSize,
-        seedSize, maxPieceLen, nIter),
-      _ => trainModel(df, vocabSize, seedSize, maxPieceLen, nIter, textCol))
+    modelMemo(df, textCol, vocabSize, seedSize, maxPieceLen, nIter)(
+      trainModel(df, vocabSize, seedSize, maxPieceLen, nIter, textCol))
 
   /** The trained model driver-side: (piece, count, logprob), ordered
     * (count desc, piece asc) — the form the encode path consumes. */

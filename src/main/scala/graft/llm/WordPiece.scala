@@ -166,34 +166,21 @@ object WordPiece {
     (alphabet ++ merged).distinct.toSeq
   }
 
-  // trainVocab memo: one trained vocabulary per (corpus plan, params)
-  // per JVM — the dropHotKeys/HeavyHitters construction-memo
-  // discipline (access-ordered LRU, single-flight, same staleness
-  // caveat: immutable inputs assumed under a canonically-equal plan).
-  private type VocabKey = (
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    String, Int, Long)
-  private val vocabCache: java.util.Map[VocabKey, Seq[String]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[VocabKey, Seq[String]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[VocabKey, Seq[String]]): Boolean =
-          size() > 16
-      })
+  private val vocabMemo = new graft.plans.PlanMemo[Seq[String]](16)
 
   /** The encode-side vocabulary a trained model ships, training the
     * merge table if this (corpus, params) combination has not been
     * trained in this JVM yet — memoized, so encode-after-train in one
     * session pays the nMerges training rounds once
     * ([[trainWordPiece]] itself stays unmemoized: the trainer API
-    * always trains). Callers holding a merge table should use
+    * always trains). A [[graft.plans.PlanMemo]], with its staleness
+    * caveat. Callers holding a merge table should use
     * [[vocabFromMerges]] directly. */
   def trainVocab(df: DataFrame, nMerges: Int, minFreq: Long = 2L,
       textCol: String = "text"): Seq[String] =
-    vocabCache.computeIfAbsent(
-      (df.queryExecution.analyzed.canonicalized, textCol, nMerges, minFreq),
-      _ => vocabFromMerges(df,
-        trainWordPiece(df, nMerges, minFreq, textCol), textCol))
+    vocabMemo(df, textCol, nMerges, minFreq)(
+      vocabFromMerges(df, trainWordPiece(df, nMerges, minFreq, textCol),
+        textCol))
 
   /** Single-threaded reference WordPiece — the WordPieceSuite ground
     * truth in the textbook dictionary form. */

@@ -35,17 +35,11 @@ import graft.functions.{MgSummary, MisraGriesAgg}
   * job at plan-construction time (the candidate literals must exist
   * before the second pass can be planned), memoized per canonicalized
   * input plan so repeated constructions of the same query pay it once
-  * per JVM. The memo is a bounded LRU (64 entries, single-flight per
-  * key): eviction drops only the least-recently-used shape, so a hot
-  * query survives arbitrary pressure from other shapes. Staleness
-  * caveat (same as dropHotKeys): the memo keys on the canonicalized
-  * PLAN, so if the underlying files change beneath a canonically-equal
-  * plan within one JVM session, a cached summary from the old data can
-  * be served — candidate recall is then no longer guaranteed against
-  * the new data. Use a fresh session (or new paths) after rewriting
-  * inputs. NULL items are ignored (excluded from both n and the
-  * output). Driver memory is bounded by 64 · k entries (~item bytes
-  * + 8).
+  * per JVM — a 64-entry [[graft.plans.PlanMemo]], whose staleness
+  * caveat applies: a summary served from old data no longer guarantees
+  * candidate recall against the new data. NULL items are ignored
+  * (excluded from both n and the output). Driver memory is bounded by
+  * 64 · k entries (~item bytes + 8).
   *
   * `m` is the threshold denominator (report items with frequency
   * ≥ 1/m); `k` is the sketch width, k ≥ m required for the recall
@@ -53,22 +47,9 @@ import graft.functions.{MgSummary, MisraGriesAgg}
   */
 object HeavyHitters {
 
-  private type SketchKey =
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int)
+  private val sketchMemo = new graft.plans.PlanMemo[MgSummary](64)
 
-  // Access-ordered LRU bounded at 64 shapes. synchronizedMap keeps
-  // computeIfAbsent single-flight (one sketch job per key even under
-  // racing constructions) at the cost of serializing construction-time
-  // jobs — acceptable for a driver-side, once-per-shape pass.
-  private val sketchCache: java.util.Map[SketchKey, MgSummary] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[SketchKey, MgSummary](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[SketchKey, MgSummary]): Boolean =
-          size() > 64
-      })
-
-  private[operators] def sketchCacheSize: Int = sketchCache.size()
+  private[operators] def sketchCacheSize: Int = sketchMemo.size
 
   /** Exact items of `itemCol` with count · m ≥ total, as
     * (term, cnt). */
@@ -79,9 +60,8 @@ object HeavyHitters {
       s"sketch width k=$kk must be >= threshold denominator m=$m " +
         "(the n/(k+1) undercount bound must sit below the n/m threshold)")
     val items = df.select(col(itemCol).cast("string").as("item"))
-    val summary = sketchCache.computeIfAbsent(
-      (items.queryExecution.analyzed.canonicalized, kk),
-      _ => items.select(MisraGriesAgg.mg_sketch(col("item"), kk).as("s"))
+    val summary = sketchMemo(items, kk)(
+      items.select(MisraGriesAgg.mg_sketch(col("item"), kk).as("s"))
         .selectExpr("s.n AS n", "s.entries AS entries")
         .as[MgSummary](org.apache.spark.sql.Encoders.product[MgSummary])
         .head())
@@ -105,17 +85,8 @@ object HeavyHitters {
     }
   }
 
-  private type GroupKey =
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int)
-  private val groupSketchCache
-      : java.util.Map[GroupKey, Array[(String, MgSummary)]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[
-          GroupKey, Array[(String, MgSummary)]](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[
-            GroupKey, Array[(String, MgSummary)]]): Boolean =
-          size() > 64
-      })
+  private val groupSketchMemo =
+    new graft.plans.PlanMemo[Array[(String, MgSummary)]](64)
 
   /** Exact PER-GROUP frequent items — the corpus-audit form (frequent
     * tokens per language, frequent URLs per domain): for each group of
@@ -142,9 +113,7 @@ object HeavyHitters {
     * excluded (group-wise mirror of the ungrouped NULL contract).
     * Exact and partitioning-independent per the [[frequentItems]]
     * argument applied per group. The sketch pass is an eager
-    * construction-time job, memoized in the same bounded-LRU
-    * discipline (and with the same staleness caveat) as
-    * [[frequentItems]]. */
+    * construction-time job, memoized like [[frequentItems]]'s. */
   def frequentItemsByKey(df: DataFrame, keyCol: String, itemCol: String,
       m: Int, k: Int = 0, maxGroups: Int = 1024): DataFrame = {
     val kk = if (k > 0) k else 2 * m
@@ -156,23 +125,21 @@ object HeavyHitters {
     val pairs = df.select(col(keyCol).cast("string").as("__gkey"),
         col(itemCol).cast("string").as("__item"))
       .where(col("__gkey").isNotNull)
-    val summaries = groupSketchCache.computeIfAbsent(
-      (pairs.queryExecution.analyzed.canonicalized, kk, maxGroups),
-      _ => {
-        val enc = org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.product[MgSummary])
-        // limit(cap + 1): complete under the cap, a cheap overflow
-        // signal over it (which groups arrive is then irrelevant —
-        // the call refuses below)
-        pairs.groupBy(col("__gkey"))
-          .agg(MisraGriesAgg.mg_sketch(col("__item"), kk).as("s"))
-          .select(col("__gkey"), struct(col("s.n").as("n"),
-            col("s.entries").as("entries")).as("s"))
-          .limit(maxGroups + 1)
-          .as[(String, MgSummary)](enc)
-          .collect()
-      })
+    val summaries = groupSketchMemo(pairs, kk, maxGroups) {
+      val enc = org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.STRING,
+        org.apache.spark.sql.Encoders.product[MgSummary])
+      // limit(cap + 1): complete under the cap, a cheap overflow
+      // signal over it (which groups arrive is then irrelevant —
+      // the call refuses below)
+      pairs.groupBy(col("__gkey"))
+        .agg(MisraGriesAgg.mg_sketch(col("__item"), kk).as("s"))
+        .select(col("__gkey"), struct(col("s.n").as("n"),
+          col("s.entries").as("entries")).as("s"))
+        .limit(maxGroups + 1)
+        .as[(String, MgSummary)](enc)
+        .collect()
+    }
     if (summaries.length > maxGroups)
       throw new IllegalArgumentException(
         s"frequentItemsByKey: more than maxGroups=$maxGroups distinct " +

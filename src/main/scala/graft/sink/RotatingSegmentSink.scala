@@ -119,8 +119,16 @@ final class RotatingSegmentSink(
 
   /** Size/duration rotation check — call after each micro-batch
     * (parity: `shouldRotateFile`, /root/reference/duck.go:536-544 +
-    * duration clause duck.go:421-429). */
+    * duration clause duck.go:421-429). A segment with no writes is
+    * never closed (the [[graft.pipeline.Pipeline.close]] guard): its
+    * runner would query tables that do not exist. Such a check
+    * restarts the age clock instead, so a segment's age counts from
+    * about its first write. */
   def maybeRotate(): Option[SegmentInfo] = {
+    if (!hasPendingWrites) {
+      segStartMs.set(System.currentTimeMillis())
+      return None
+    }
     val ageSec = (System.currentTimeMillis() - segStartMs.get) / 1000
     val size = dirSizeMB(current.get())
     if (size >= policy.effectiveThresholdMB ||

@@ -203,9 +203,9 @@ private[sink] class SegmentStreamingWrite(baseDir: String,
     f.mkdirs(mk.getParent)
     f.create(mk, true).close()
     f.delete(stagingDir(epochId), true)
-    // never rotate an empty segment (Pipeline.close parity): an
-    // all-empty epoch writes its marker but announces nothing
-    if (sink.hasPendingWrites) sink.maybeRotate()
+    // an all-empty epoch writes its marker but announces nothing:
+    // maybeRotate never closes a segment with no writes
+    sink.maybeRotate()
     ()
   }
 

@@ -132,6 +132,23 @@ class GraftFunctionsSuite extends SparkSpec {
     assert(laySql.map(_.toString).toSeq == layApi.map(_.toString).toSeq)
   }
 
+  test("layout keys: a NULL axis gives a NULL key; DECIMAL is " +
+      "rejected by name, even at scale 0") {
+    GraftFunctions.register(spark)
+    val r = spark.sql(
+      """SELECT graft_zvalue(NULL, 3), graft_hilbert_index(NULL, 3),
+        |  graft_zvalue(3, NULL, 10), graft_hilbert_index(3, NULL, 10)
+        |""".stripMargin).head()
+    assert((0 until 4).forall(r.isNullAt), r)
+    Seq("graft_zvalue", "graft_hilbert_index").foreach { f =>
+      val err = intercept[Exception] {
+        spark.sql(s"SELECT $f(CAST(3 AS DECIMAL(10,0)), 1)").collect()
+      }
+      assert(err.getMessage.contains("DECIMAL is rejected"),
+        err.getMessage.take(300))
+    }
+  }
+
   test("GraftExtensions injects the functions (static-conf route)") {
     val orig = spark
     SparkSession.clearActiveSession()

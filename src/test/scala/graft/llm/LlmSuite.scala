@@ -1074,6 +1074,28 @@ class LlmSuite extends SparkSpec {
     assert(fast == loop && fast.nonEmpty)
   }
 
+  test("dedup clusters: INT and NULL ids — BIGINT labels, fast path " +
+      "equals the loop") {
+    import org.apache.spark.sql.types.LongType
+    def labels(pairs: org.apache.spark.sql.DataFrame,
+        cap: Int): Set[(Any, Any)] = {
+      val out = Dedup.dedupClusters(pairs, maxDriverPairs = cap)
+      assert(out.schema.map(_.dataType) == Seq(LongType, LongType))
+      out.collect().map(r => (r.get(0), r.get(1))).toSet
+    }
+    val ints = Seq((1, 2), (2, 3), (10, 11)).toDF("id_a", "id_b")
+    val fromInts = labels(ints, 200000)
+    assert(fromInts == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L),
+      (11L, 10L)))
+    assert(labels(ints, 0) == fromInts)
+    // a NULL id sends the probe to the loop; both settings agree
+    val nulls = Seq((Some(1L), Some(2L)), (None, Some(5L)),
+      (Some(5L), Some(6L))).toDF("id_a", "id_b")
+    val fromNulls = labels(nulls, 200000)
+    assert(fromNulls.contains((1L, 1L)) && fromNulls.contains((6L, 5L)))
+    assert(labels(nulls, 0) == fromNulls)
+  }
+
   test("dedup clusters on the real pair output keep one rep per planted dup") {
     val out = LlmQueries.dedupClusters(spark, sf0001)
     val sizes = out.collect().map(r => r.getLong(1))

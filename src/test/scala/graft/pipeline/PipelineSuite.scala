@@ -10,7 +10,7 @@ import graft.ops.{CustomTransform, Stages}
 import graft.normalize.NormalizerSpec
 import graft.runner.{QuerySink, SegmentQuery, SegmentRunner}
 import graft.sink.RotationPolicy
-import graft.sources.FileBinarySource
+import graft.sources.{BinaryQueue, BinaryQueueSource, FileBinarySource}
 
 class PipelineSuite extends SparkSpec {
   import spark.implicits._
@@ -177,6 +177,39 @@ class PipelineSuite extends SparkSpec {
     // the effect-only command ran (temp view left behind by last segment)
     assert(spark.sql("SELECT n FROM last_seg").head().getInt(0) == 42)
     spark.catalog.dropTempView("last_seg")
+  }
+
+  test("an empty micro-batch past the age rule closes no segment") {
+    val root = Files.createTempDirectory("graft-empty-seg").toString
+    val queue = s"$root/queue"
+    BinaryQueue.append(queue, 0, Nil) // empty log: batch 0 has no frames
+    val pipe = Pipeline(spark, PipelineConfig(
+      source = BinaryQueueSource(queue),
+      outputDir = s"$root/out",
+      destTable = "events_raw",
+      decode = Decoders.json(payloadSchema),
+      rotation = RotationPolicy(thresholdMB = 100, durationSec = 1,
+        clamp = false),
+      runner = Some(SegmentRunner(queries = Seq(
+        SegmentQuery("SELECT count(*) AS n FROM events_raw"))))))
+    Thread.sleep(1100) // the open segment is past its age at batch 0
+    val q = pipe.run()
+    q.processAllAvailable()
+    assert(q.recentProgress.exists(p => p.batchId == 0 &&
+      p.numInputRows == 0), "batch 0 did not run empty")
+    BinaryQueue.append(queue, 0, (0L until 20L).map { i =>
+      (s"""{"event_id":$i,"user_id":${i % 7},"event_type":"t${i % 3}",""" +
+        s""""value":${i * 0.5}}""").getBytes("UTF-8") -> (1700000000000L + i)
+    })
+    q.processAllAvailable()
+    pipe.close()
+    assert(pipe.error.isEmpty, pipe.error.map(_.getMessage).getOrElse(""))
+    val manifest = spark.read.parquet(s"$root/out/_manifest")
+    val tables = manifest.select("tables").as[String].collect()
+    assert(tables.nonEmpty && tables.forall(_ == "events_raw"),
+      tables.mkString("; "))
+    assert(spark.read.parquet(manifest.select("path").as[String].collect()
+      .map(_ + "/events_raw"): _*).count() == 20)
   }
 
   test("runner guards: deleteOnDone×segment-export and unresolved ${segment}") {

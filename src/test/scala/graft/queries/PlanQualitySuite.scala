@@ -1,5 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+
 import graft.SparkSpec
 
 /** Regression guards for the 100 TB plan invariants (SCALE.md): these
@@ -12,6 +16,27 @@ class PlanQualitySuite extends SparkSpec {
   private def plan(name: String): String =
     graft.SparkEntry.queries(name)(spark, sf0001)
       .queryExecution.executedPlan.toString()
+
+  /** Distinct (stageId, exec|REUSED, partitioning) triples of a
+    * collected query's adaptive plan. QueryStageExec nodes are LEAVES
+    * (children = Nil) — the subtree hangs off `.plan`, which is why a
+    * naive children-walk sees zero stages. */
+  private def stageCensus(plan: SparkPlan): Seq[(Int, String, String)] = {
+    def walk(p: SparkPlan): Seq[(Int, String, String)] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec =>
+        val self = q.plan match {
+          case _: ReusedExchangeExec => Seq((q.id, "REUSED",
+            q.plan.outputPartitioning.toString.take(60)))
+          case _: ShuffleExchangeExec => Seq((q.id, "exec",
+            q.plan.outputPartitioning.toString.take(60)))
+          case _ => Nil
+        }
+        self ++ walk(q.plan)
+      case other => other.children.flatMap(walk)
+    }
+    walk(plan).distinct.sortBy(_._1)
+  }
 
   test("q2: filters and projection reach the parquet scan") {
     val p = plan("q2_filter_project")
@@ -405,8 +430,7 @@ class PlanQualitySuite extends SparkSpec {
     val df = graft.SparkEntry.queries("llm_e2e_prepare_spans")(spark, sf0001)
     try {
       df.collect()
-      val census = graft.examples.SpansProbe.stageCensus(
-        df.queryExecution.executedPlan)
+      val census = stageCensus(df.queryExecution.executedPlan)
       val fpExec = census.count(t =>
         t._2 == "exec" && t._3.contains("fingerprint"))
       assert(fpExec == 0,
