@@ -510,7 +510,8 @@ object LlmQueries {
     val snd = graft.streaming.StreamingNearDup(s"$root/store",
       threshold = 0.5)
     (0 until 3).map(c =>
-        snd.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === c)))
+        snd.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === c),
+          batchId = c.toLong))
       .reduce(_.unionByName(_))
       .orderBy("id_a", "id_b")
   }

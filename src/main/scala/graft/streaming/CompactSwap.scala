@@ -1,96 +1,76 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
-/** The delete-then-rename snapshot swap shared by
-  * [[StreamingSeriesStore.compact]], [[StreamingVectorIndex.compact]]
-  * and [[StreamingVectorIndex.rebuild]], with every filesystem boolean
-  * CHECKED (round-12 ADVICE): `FileSystem.delete` and `rename` report
-  * failure by RETURN VALUE, not exception — HDFS `rename` returns
-  * false when the destination exists, and a swallowed false silently
-  * loses the folded snapshot.
+/** The store file of the streaming twins: the two state disciplines
+  * ([[BatchLog]], [[Snapshot]]) and the delete-then-rename swap both
+  * rest on.
+  *
+  * == State ==
+  * Every persistent twin store is one of two kinds (SCALE.md):
+  *  - a [[BatchLog]] — parquet partitioned by `batch_id=N`, each
+  *    micro-batch OVERWRITING its own partition, so a replay (write
+  *    landed, checkpoint commit did not) rewrites instead of
+  *    duplicating. Stores whose replay must not see its own first
+  *    attempt read `excluding` the current batch (dedup, budget);
+  *    stores whose rows are keyed by a unique id read everything
+  *    (near-dup, vectors, additive series).
+  *  - a [[Snapshot]] — one whole-state dir replaced per batch by a
+  *    staged write and a swap, for idempotent merges (group top-k,
+  *    CDC upsert).
+  *
+  * == The swap ==
+  * Every filesystem boolean is CHECKED (round-12 ADVICE):
+  * `FileSystem.delete` and `rename` report failure by RETURN VALUE,
+  * not exception — HDFS `rename` returns false when the destination
+  * exists, and a swallowed false silently loses the folded snapshot.
   *
   * Crash recovery (round-13 review finding): once the folded
   * partitions are deleted, the staging dir holds the ONLY copy of
-  * their rows — a naive compaction re-run would `mode("overwrite")`
-  * that sole copy with a fold of whatever partitions remain. So the
-  * swap records a MANIFEST (`_graft_swap` inside the staging dir:
-  * line 1 = destination, rest = folded partition paths) before the
-  * first delete, and [[recoverStaleStaging]] — which every compaction
-  * runs first — resolves a leftover staging dir by it:
+  * their rows. So the swap records a MANIFEST (`_graft_swap` inside
+  * the staging dir: line 1 = destination, rest = folded paths) before
+  * the first delete, and [[recoverStaleStaging]] — which every store
+  * read and compaction runs first — resolves a leftover staging dir
+  * by it:
   *
   *  - no manifest ⇒ the staging WRITE itself crashed; originals are
-  *    untouched ⇒ discard the staging dir and restage;
-  *  - manifest present, every recorded partition still exists ⇒ the
-  *    crash hit before any delete ⇒ discard and restage (this is the
-  *    case the `attach(compactEvery)` replay contract relies on);
-  *  - manifest present, some recorded partition gone ⇒ an interrupted
-  *    swap ⇒ COMPLETE it (delete the surviving recorded partitions,
-  *    swap staging into the recorded destination) — self-healing
-  *    instead of data loss.
+  *    untouched ⇒ discard the staging dir;
+  *  - manifest present, every recorded path still exists ⇒ the crash
+  *    hit before any delete ⇒ discard (the `attach(compactEvery)`
+  *    replay contract relies on this);
+  *  - manifest present, some recorded path gone ⇒ an interrupted
+  *    swap ⇒ COMPLETE it (delete the surviving recorded paths, move
+  *    staging into the recorded destination).
   *
   * The manifest rides into the destination on rename; its leading
-  * underscore keeps it invisible to Spark's file index. */
+  * underscore keeps it invisible to Spark's file index. Single-writer
+  * contract: recovery from a read path is safe because no other
+  * writer runs mid-swap. */
 private[streaming] object CompactSwap {
 
   private val ManifestName = "_graft_swap"
-  private val StagingName = ".compact_tmp"
 
-  /** Heal a crashed compaction swap. Every store WRITER entry
-    * (processBatch) calls this before its first store read, so an
-    * interrupted compact() closes at the NEXT BATCH instead of
-    * lingering until someone happens to run compact() again — in the
-    * window, reads would see a store missing every folded partition
-    * (for the token-budget store that means quota over-admission;
-    * for dedup stores, re-admitted duplicates). Single-writer
-    * contract makes the write-from-a-read-path safe. */
-  def recoverDir(spark: SparkSession, dir: String,
-      tmpName: String = StagingName): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(root))
-      recoverStaleStaging(fs, new Path(root, tmpName))
+  def fileSystem(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** True iff `p` holds a parquet DATA file at any depth — an empty
+    * batch leaves a dir with no part file (only `_SUCCESS` under
+    * `partitionBy`), from which `spark.read.parquet` cannot infer a
+    * schema. Hadoop FS, never java.io.File: the latter is always
+    * false for hdfs:// and s3a:// paths (round-11 ADVICE). */
+  def hasDataFile(fs: FileSystem, p: Path): Boolean = fs.exists(p) && {
+    val it = fs.listFiles(p, true)
+    var hit = false
+    while (!hit && it.hasNext)
+      hit = it.next().getPath.getName.endsWith(".parquet")
+    hit
   }
 
-  /** The shared compaction scaffold over a `batch_id=N`-partitioned
-    * store: fold all-but-the-max partitions into one partition at the
-    * lowest folded id (the max id may still be rewritten by a replay;
-    * every lower id has committed), staged under `.compact_tmp` and
-    * swapped in with the manifest ladder above. The store-specific
-    * part is ONLY the fold transform (dedup-sort for line/fuzzy
-    * stores, per-key re-aggregation for additive-sum stores) and,
-    * when the store is sub-partitioned, the read/write hooks
-    * (StreamingVectorIndex's basePath + partitionBy). Maintenance
-    * contract: no concurrent writer mid-swap. */
-  def foldBatchPartitions(spark: SparkSession, dir: String,
-      read: Seq[String] => DataFrame = null,
-      write: (DataFrame, String) => Unit = null)(
-      fold: DataFrame => DataFrame): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    // resolve any crashed previous swap BEFORE listing partitions —
-    // recovery can change the set
-    recoverStaleStaging(fs, new Path(root, StagingName))
-    val parts = fs.listStatus(root).filter(s => s.isDirectory &&
-      s.getPath.getName.startsWith("batch_id="))
-    if (parts.length <= 2) return
-    val withIds = parts.map(s =>
-      s.getPath -> s.getPath.getName.stripPrefix("batch_id=").toLong)
-    val maxId = withIds.map(_._2).max
-    val folded = withIds.filter(_._2 != maxId)
-    val snapId = folded.map(_._2).min
-    val paths = folded.map(_._1.toString).toIndexedSeq
-    val snapshot = fold(
-      if (read == null) spark.read.parquet(paths: _*) else read(paths))
-    val tmp = new Path(root, StagingName)
-    if (write == null)
-      snapshot.write.mode("overwrite").parquet(tmp.toString)
-    else write(snapshot, tmp.toString)
-    swap(fs, folded.map(_._1).toIndexedSeq, tmp,
-      new Path(root, s"batch_id=$snapId"))
-  }
+  def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Resolve a leftover staging dir per the ruleset above. Call
     * BEFORE listing partitions — recovery can change the set. */
@@ -124,7 +104,7 @@ private[streaming] object CompactSwap {
     }
   }
 
-  /** Record the manifest, then delete each folded partition and move
+  /** Record the manifest, then delete each folded path and move
     * `tmp` to `dest`. */
   def swap(fs: FileSystem, folded: Seq[Path], tmp: Path, dest: Path)
       : Unit = {
@@ -154,5 +134,106 @@ private[streaming] object CompactSwap {
         s"graft compact: rename $tmp -> $dest returned false; " +
           s"folded snapshot preserved at $tmp — the next compaction " +
           "completes the swap automatically (recoverStaleStaging)")
+  }
+}
+
+/** A parquet store partitioned by `batch_id=N` (see [[CompactSwap]]
+  * State). `partitionBy` sub-partitions each batch (the vector
+  * index's `cid`); compactions stage under `dir/.compact_tmp`. */
+private[streaming] final case class BatchLog(dir: String,
+    partitionBy: Seq[String] = Nil) {
+  import CompactSwap._
+
+  private def root = new Path(dir)
+  private def staging = new Path(root, ".compact_tmp")
+
+  private def partitions(fs: FileSystem): Seq[(Path, Long)] =
+    fs.listStatus(root).toSeq.collect {
+      case s if s.isDirectory && s.getPath.getName.startsWith("batch_id=") =>
+        s.getPath -> s.getPath.getName.stripPrefix("batch_id=").toLong
+    }
+
+  private def put(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(path)
+
+  /** Heal a crashed compaction, then every stored row (data columns
+    * and sub-partitions, not `batch_id`) — minus batch `excluding`'s
+    * partition — or an empty frame of `emptySchema` when no batch has
+    * written a data file yet. */
+  def read(spark: SparkSession, emptySchema: StructType,
+      excluding: Option[Long] = None): DataFrame = {
+    val fs = fileSystem(spark, dir)
+    val written = fs.exists(root) && {
+      recoverStaleStaging(fs, staging)
+      partitions(fs).exists(p => hasDataFile(fs, p._1))
+    }
+    if (!written) emptyFrame(spark, emptySchema)
+    else {
+      val all = spark.read.parquet(dir)
+      excluding.fold(all)(id => all.where(col("batch_id") =!= id))
+        .drop("batch_id")
+    }
+  }
+
+  /** Overwrite batch `batchId`'s partition — a replay rewrites it. */
+  def write(df: DataFrame, batchId: Long): Unit =
+    put(df, s"$dir/batch_id=$batchId")
+
+  /** Fold partitions into one, staged and swapped in by
+    * [[CompactSwap.swap]]. By default all but the max id fold into
+    * the lowest folded id: the max id may still be rewritten by a
+    * replay, every lower id has committed (a no-op below 3
+    * partitions). `into = Some(id)` folds EVERY partition into
+    * `batch_id=id` (the vector index's offline rebuild). `fold` sees
+    * the rows as [[read]] returns them. Maintenance contract: no
+    * concurrent writer mid-swap. */
+  def compact(spark: SparkSession, into: Option[Long] = None)(
+      fold: DataFrame => DataFrame): Unit = {
+    val fs = fileSystem(spark, dir)
+    if (!fs.exists(root)) return
+    recoverStaleStaging(fs, staging)
+    val parts = partitions(fs)
+    val folded = into match {
+      case Some(_) => parts
+      case None if parts.length > 2 =>
+        val maxId = parts.map(_._2).max
+        parts.filter(_._2 != maxId)
+      case None => Nil
+    }
+    val withData = folded.map(_._1).filter(hasDataFile(fs, _))
+    if (withData.isEmpty) return
+    put(fold(spark.read.option("basePath", dir)
+        .parquet(withData.map(_.toString): _*).drop("batch_id")),
+      staging.toString)
+    val snapId = into.getOrElse(folded.map(_._2).min)
+    swap(fs, folded.map(_._1), staging,
+      new Path(root, s"batch_id=$snapId"))
+  }
+}
+
+/** A whole-state parquet snapshot at `dir`, replaced by a staged
+  * write to `staging` and a [[CompactSwap.swap]] (see [[CompactSwap]]
+  * State). */
+private[streaming] final case class Snapshot(dir: String,
+    staging: String) {
+  import CompactSwap._
+
+  /** Heal a crashed swap, then the snapshot — None before the first
+    * [[replace]]. */
+  def read(spark: SparkSession): Option[DataFrame] = {
+    val fs = fileSystem(spark, dir)
+    recoverStaleStaging(fs, new Path(staging))
+    if (hasDataFile(fs, new Path(dir))) Some(spark.read.parquet(dir))
+    else None
+  }
+
+  /** Materialize `df` to staging (it may read the old snapshot), then
+    * swap it in. */
+  def replace(df: DataFrame): Unit = {
+    val fs = fileSystem(df.sparkSession, dir)
+    df.write.mode("overwrite").parquet(staging)
+    val path = new Path(dir)
+    swap(fs, if (fs.exists(path)) Seq(path) else Nil, new Path(staging),
+      path)
   }
 }

@@ -54,9 +54,7 @@ final case class StreamingDecontaminate(benchmark: DataFrame,
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
+        BatchLog(outDir).write(processBatch(batch), batchId)
       }
       .start()
 }

@@ -9,8 +9,8 @@ import graft.llm.TextAnalysis
   * as a continuous pipeline quality gate: a REFERENCE per-language
   * token distribution (built once from a trusted snapshot, persisted
   * as parquet) is compared against every arriving micro-batch, and
-  * one (batch_id, lang, …, js_div) row per language is appended to
-  * the monitor output. The standard ingest guard: a crawl source
+  * one (lang, …, js_div) row per language lands in the batch's
+  * `batch_id=N` partition of the monitor output. The standard ingest guard: a crawl source
   * going bad (language flip, boilerplate flood, encoding breakage)
   * moves JS sharply long before volume metrics notice.
   *
@@ -67,17 +67,15 @@ final case class StreamingDrift(refDir: String,
     TextAnalysis.jsFromCounts(cnts)
   }
 
-  /** Wire onto a streaming DataFrame: per micro-batch, append the
-    * drift report (tagged with batch_id) to `outDir`. */
+  /** Wire onto a streaming DataFrame: per micro-batch, overwrite the
+    * drift report at `outDir/batch_id=N` — a replay rewrites, never
+    * duplicates; readers get `batch_id` back as a partition column. */
   def attach(stream: DataFrame, outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
+        BatchLog(outDir).write(processBatch(batch), batchId)
       }
       .start()
 }

@@ -41,10 +41,9 @@ import graft.llm.Dedup
   * the pair graph, chain divergence by hand case.
   *
   * == State: per-batch partition OVERWRITE (idempotent replay) ==
-  * The kept store holds ONLY survivors, as `bands/batch_id=N` +
-  * `sigs/batch_id=N` parquet partitions written with per-batch
-  * OVERWRITE, and every store read EXCLUDES the current batch's own
-  * partition — the [[StreamingSeriesStore]] discipline. A replayed
+  * The kept store holds ONLY survivors, as two [[BatchLog]]s
+  * (`bands/`, `sigs/`), and every store read EXCLUDES the current
+  * batch's own partition. A replayed
   * batch (store write landed, downstream commit did not) therefore
   * recomputes from EXACTLY the inputs the first attempt saw and
   * emits the identical survivor set — no silent survivor loss, which
@@ -63,65 +62,14 @@ final case class StreamingFuzzyDedup(storeDir: String,
   require(bands >= 1 && bands <= k && k % bands == 0,
     s"bands=$bands must divide the signature width k=$k")
 
-  private def bandsDir = s"$storeDir/bands"
-  private def sigsDir = s"$storeDir/sigs"
-
-  // Hadoop-FS probe (never java.io.File — the round-11 scheme-path
-  // defect); the partitioned layout means parquet files sit INSIDE
-  // batch_id dirs, and the probe must find an actual DATA file: an
-  // all-empty batch writes a partition dir with no part files, and a
-  // bare dir-exists check would then route the next batch into
-  // spark.read.parquet's unable-to-infer-schema failure (round-14
-  // second-pass review catch).
-  private def hasData(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists { d =>
-      d.isDirectory && fs.listStatus(d.getPath)
-        .exists(_.getPath.getName.endsWith(".parquet"))
-    }
-  }
-
-  private def keptBands(spark: SparkSession, excludeBatch: Long)
-      : DataFrame =
-    if (hasData(spark, bandsDir))
-      spark.read.parquet(bandsDir)
-        .where(col("batch_id") =!= excludeBatch)
-        .select("id", "band", "band_key")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("band",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("band_key",
-          org.apache.spark.sql.types.StringType))))
-
-  private def keptSigsStore(spark: SparkSession, excludeBatch: Long)
-      : DataFrame =
-    if (hasData(spark, sigsDir))
-      spark.read.parquet(sigsDir)
-        .where(col("batch_id") =!= excludeBatch)
-        .select("id", "sig")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sig",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType, containsNull = false)))))
+  private def bandLog = BatchLog(s"$storeDir/bands")
+  private def sigLog = BatchLog(s"$storeDir/sigs")
 
   /** Process ONE micro-batch: returns the batch's SURVIVING rows
     * (all input columns), then overwrites the batch's kept band/sig
     * store partitions. */
   def processBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    // heal a crashed compact() before the kept-store reads
-    // (CompactSwap.recoverDir scaladoc)
-    CompactSwap.recoverDir(spark, bandsDir)
-    CompactSwap.recoverDir(spark, sigsDir)
     val sigs = Dedup.sigSets(
         Dedup.shingleSetsMd5(batch, idCol, textCol, n), k, seed)
       .where(col("sig").isNotNull)
@@ -136,7 +84,7 @@ final case class StreamingFuzzyDedup(storeDir: String,
     // Candidates dedup to pairs before the sig joins (pairs-sized,
     // the StreamingNearDup discipline).
     val crossCand = bandRows.as("b")
-      .join(keptBands(spark, batchId).as("s"),
+      .join(bandLog.read(spark, bandRows.schema, Some(batchId)).as("s"),
         col("b.band") === col("s.band") &&
           col("b.band_key") === col("s.band_key"))
       .select(col("b.id").as("bid"), col("s.id").as("kid"))
@@ -148,7 +96,7 @@ final case class StreamingFuzzyDedup(storeDir: String,
       .repartition(col("kid"))
       .dropDuplicates("bid", "kid")
     val dropIds = crossCand
-      .join(keptSigsStore(spark, batchId).as("sb"),
+      .join(sigLog.read(spark, sigs.schema, Some(batchId)).as("sb"),
         col("kid") === col("sb.id"))
       .join(sigs.as("sa"), col("bid") === col("sa.id"))
       .where(Dedup.sigEstimate(col("sa.sig"), col("sb.sig"), k)
@@ -190,18 +138,10 @@ final case class StreamingFuzzyDedup(storeDir: String,
       .localCheckpoint(true) // pin before the store writes below
     val keptSigs = survSigs.join(keptIds, Seq("id"), "left_semi")
       .localCheckpoint(true) // consumed by BOTH store writes
-    // the two store writes are independent scans of the checkpointed
-    // keptSigs — run as concurrent jobs (guide §2.6 back-fill)
-    @volatile var sigWriteErr: Throwable = null
-    val sigWrite = new Thread(() =>
-      try keptSigs.write.mode("overwrite")
-        .parquet(s"$sigsDir/batch_id=$batchId")
-      catch { case e: Throwable => sigWriteErr = e })
-    sigWrite.start()
-    Dedup.bandRowsFromSigs(keptSigs, k, bands, exactBandKey = true)
-      .write.mode("overwrite").parquet(s"$bandsDir/batch_id=$batchId")
-    sigWrite.join()
-    if (sigWriteErr != null) throw sigWriteErr
+    sigLog.write(keptSigs, batchId)
+    bandLog.write(
+      Dedup.bandRowsFromSigs(keptSigs, k, bands, exactBandKey = true),
+      batchId)
     out
   }
 
@@ -209,28 +149,21 @@ final case class StreamingFuzzyDedup(storeDir: String,
     * sorted, deduplicated snapshot partition at the lowest folded id
     * — [[StreamingSeriesStore.compact]]'s replay-safety rule (the max
     * written id may still be rewritten by a replay; every lower id
-    * has committed) with [[StreamingNearDup.compact]]'s sorted
+    * has committed) with [[StreamingNearDup.compactStores]]' sorted
     * re-layout. Maintenance-step contract: no concurrent readers
     * mid-swap. */
-  def compact(spark: SparkSession): Unit = {
-    // sorted snapshots: clustered probe-key row groups keep the
-    // candidate join's runtime filters selective
-    def one(dir: String, sortCols: Seq[String]): Unit =
-      CompactSwap.foldBatchPartitions(spark, dir)(
-        _.dropDuplicates().sort(sortCols.map(col): _*))
-    one(bandsDir, Seq("band", "band_key"))
-    one(sigsDir, Seq("id"))
-  }
+  def compact(spark: SparkSession): Unit =
+    StreamingNearDup.compactStores(spark, bandLog, sigLog)
 
   /** Wire onto a streaming DataFrame: each micro-batch's survivors
-    * append to `outDir` as parquet. */
+    * overwrite `outDir/batch_id=N` — a replay rewrites, never
+    * duplicates. */
   def attach(stream: DataFrame, outDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId)
-          .write.mode("append").parquet(outDir); ()
+        BatchLog(outDir).write(processBatch(batch, batchId), batchId)
       }
       .start()
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,16 +51,7 @@ final case class StreamingGroupTopK(storeDir: String, k: Int,
   require(groupCols.nonEmpty && order.nonEmpty && idCols.nonEmpty,
     "groupCols, order and idCols must be non-empty")
 
-  private def snapPath = new Path(s"$storeDir/snapshot")
-  private def stagePath = new Path(s"$storeDir/staging")
-
-  // Hadoop-FS data probe (never java.io.File — round-11 scheme-path
-  // lesson); an existing-but-empty dir means no snapshot yet
-  private def hasSnapshot(spark: SparkSession): Boolean = {
-    val fs = snapPath.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(snapPath) && fs.listStatus(snapPath)
-      .exists(_.getPath.getName.endsWith(".parquet"))
-  }
+  private def snap = Snapshot(s"$storeDir/snapshot", s"$storeDir/staging")
 
   /** Current kept set (k best rows per group so far); empty-schema
     * answers come from the first batch, so this throws before any
@@ -74,24 +64,16 @@ final case class StreamingGroupTopK(storeDir: String, k: Int,
     * semantics, but per batch rather than only during maintenance
     * compaction. Retry semantics are the caller's; the single-WRITER
     * contract is unchanged. */
-  def snapshot(spark: SparkSession): DataFrame = {
-    require(hasSnapshot(spark),
-      s"StreamingGroupTopK: no committed snapshot under $storeDir yet")
-    spark.read.parquet(snapPath.toString)
-  }
+  def snapshot(spark: SparkSession): DataFrame =
+    snap.read(spark).getOrElse(throw new IllegalArgumentException(
+      s"StreamingGroupTopK: no committed snapshot under $storeDir yet"))
 
   /** Merge one micro-batch into the store and return the NEW
     * snapshot. Call from foreachBatch (the Pipeline pattern) or
     * directly for replay harnesses. */
   def processBatch(batch: DataFrame): DataFrame = {
     val spark = batch.sparkSession
-    val fs = snapPath.getFileSystem(spark.sessionState.newHadoopConf())
-    CompactSwap.recoverStaleStaging(fs, stagePath)
-    val prevExists = hasSnapshot(spark)
-    val merged =
-      if (prevExists)
-        spark.read.parquet(snapPath.toString).unionByName(batch)
-      else batch
+    val merged = snap.read(spark).fold(batch)(_.unionByName(batch))
     val w = Window.partitionBy(groupCols.map(col): _*).orderBy(order: _*)
     // Round-16 note: folding the dedup + window onto ONE exchange by
     // hash-partitioning on the group key alone was tried and REVERTED
@@ -107,11 +89,7 @@ final case class StreamingGroupTopK(storeDir: String, k: Int,
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") <= k)
       .drop("_rn")
-    // materialize the merge to staging BEFORE the swap touches the
-    // old snapshot — the staging write is the only reader of it
-    top.write.mode("overwrite").parquet(stagePath.toString)
-    CompactSwap.swap(fs,
-      if (prevExists) Seq(snapPath) else Seq.empty, stagePath, snapPath)
-    spark.read.parquet(snapPath.toString)
+    snap.replace(top)
+    snapshot(spark)
   }
 }

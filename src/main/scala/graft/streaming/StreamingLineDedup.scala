@@ -44,30 +44,7 @@ final case class StreamingLineDedup(storeDir: String,
     idCol: String = "doc_id", textCol: String = "text",
     sep: String = "\n") {
 
-  // Hadoop-FS probe requiring an actual DATA file inside a partition
-  // dir (never java.io.File — the round-11 scheme-path defect; an
-  // empty batch's partition has zero part files — the round-14
-  // empty-micro-batch catch).
-  private def hasData(spark: SparkSession): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists { d =>
-      d.isDirectory && fs.listStatus(d.getPath)
-        .exists(_.getPath.getName.endsWith(".parquet"))
-    }
-  }
-
-  private def storeFps(spark: SparkSession,
-      excludeBatch: Long): DataFrame =
-    if (hasData(spark))
-      spark.read.parquet(storeDir)
-        .where(col("batch_id") =!= excludeBatch)
-        .select("fp")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("fp",
-          org.apache.spark.sql.types.StringType))))
+  private def store = BatchLog(storeDir)
 
   /** Dedup ONE micro-batch against the store and overwrite the
     * batch's own store partition. Returns the batch's surviving docs
@@ -75,15 +52,12 @@ final case class StreamingLineDedup(storeDir: String,
     * (idCol, text_dedup, n_removed). */
   def processBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    // heal a crashed compact() before the store read (CompactSwap
-    // .recoverDir scaladoc — the interrupted-swap window would
-    // re-admit every folded batch's lines)
-    CompactSwap.recoverDir(spark, storeDir)
     val lines = Dedup.lineTable(batch, idCol, textCol, sep)
       // one batch is re-consumed three times below (firsts, keep
       // join, store write) — materialize the bounded batch once
       .localCheckpoint(true)
-    val seen = storeFps(spark, batchId)
+    val seen = store.read(spark, lines.select("fp").schema,
+      excluding = Some(batchId))
     // a line survives iff non-exempt AND unseen AND the batch-local
     // (doc, pos) minimum for its fingerprint
     val candidates = lines.where(col("fp") =!= Dedup.EmptyLineFp)
@@ -99,8 +73,7 @@ final case class StreamingLineDedup(storeDir: String,
           (col("first").isNotNull &&
             struct(col(idCol), col("pos")) === col("first"))),
       idCol, sep)
-    firsts.select("fp").write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
+    store.write(firsts.select("fp"), batchId)
     out
   }
 
@@ -113,18 +86,17 @@ final case class StreamingLineDedup(storeDir: String,
   def compact(spark: SparkSession): Unit =
     // sorted + deduplicated snapshot: clustered fp row groups keep
     // the anti-join's runtime filters selective
-    CompactSwap.foldBatchPartitions(spark, storeDir)(
-      _.dropDuplicates().sort("fp"))
+    store.compact(spark)(_.dropDuplicates().sort("fp"))
 
   /** Wire onto a streaming DataFrame: each micro-batch is deduped
-    * against the store and appended to `outDir` as parquet. */
+    * against the store and written to `outDir/batch_id=N` — a replay
+    * rewrites its own output partition instead of duplicating it. */
   def attach(stream: DataFrame, outDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId)
-          .write.mode("append").parquet(outDir); ()
+        BatchLog(outDir).write(processBatch(batch, batchId), batchId)
       }
       .start()
 }

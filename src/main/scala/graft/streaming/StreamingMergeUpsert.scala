@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,8 +41,7 @@ final case class StreamingMergeUpsert(storeDir: String,
     keys: Seq[String], deleteCol: Option[String] = None,
     versionCol: Option[String] = None) {
 
-  private def snapshotPath = new Path(s"$storeDir/snapshot")
-  private def stagingPath = new Path(s"$storeDir/_staging")
+  private def snap = Snapshot(s"$storeDir/snapshot", s"$storeDir/_staging")
 
   /** Current snapshot; an untouched store yields an EMPTY frame with
     * the snapshot schema derived from `changeSchema` (keys + values,
@@ -54,19 +52,12 @@ final case class StreamingMergeUpsert(storeDir: String,
     * contract — calling this concurrently with an ACTIVE processBatch
     * is the usual external-reader caveat, not supported. */
   def snapshot(spark: SparkSession,
-      changeSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val fs = snapshotPath.getFileSystem(spark.sessionState.newHadoopConf())
-    CompactSwap.recoverStaleStaging(fs, stagingPath)
-    if (fs.exists(snapshotPath) && fs.listStatus(snapshotPath).nonEmpty)
-      spark.read.parquet(snapshotPath.toString)
-    else {
+      changeSchema: org.apache.spark.sql.types.StructType): DataFrame =
+    snap.read(spark).getOrElse {
       val dropped = deleteCol.toSeq ++ versionCol.toSeq
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          changeSchema.filterNot(f => dropped.contains(f.name))))
+      CompactSwap.emptyFrame(spark, org.apache.spark.sql.types.StructType(
+        changeSchema.filterNot(f => dropped.contains(f.name))))
     }
-  }
 
   /** Last-writer-wins pre-dedup on the key (struct-max argmax — the
     * dedupBest pattern, no window). */
@@ -84,18 +75,8 @@ final case class StreamingMergeUpsert(storeDir: String,
 
   /** Apply ONE micro-batch of changes to the snapshot. */
   def processBatch(changes: DataFrame): Unit = {
-    val spark = changes.sparkSession
-    val fs = snapshotPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // recovery FIRST: it may complete an interrupted swap and thereby
-    // change which snapshot this batch reads
-    CompactSwap.recoverStaleStaging(fs, stagingPath)
-    val cur = snapshot(spark, changes.schema)
-    val merged = MergeUpsert.merge(cur, lastWins(changes), keys, deleteCol)
-    // staging write materializes the merge (reading the OLD snapshot)
-    // before swap deletes it
-    merged.write.mode("overwrite").parquet(stagingPath.toString)
-    val folded = if (fs.exists(snapshotPath)) Seq(snapshotPath) else Nil
-    CompactSwap.swap(fs, folded, stagingPath, snapshotPath)
+    val cur = snapshot(changes.sparkSession, changes.schema)
+    snap.replace(MergeUpsert.merge(cur, lastWins(changes), keys, deleteCol))
   }
 
   /** Wire onto a change stream: each micro-batch merges into the

@@ -36,26 +36,24 @@ import graft.llm.Dedup
   * state.
   *
   * == State ==
-  * Two persistent parquet stores under `storeDir` (the
-  * [[StreamingLineDedup]] fp-store pattern — near-dup identity has no
+  * Two [[BatchLog]] stores under `storeDir` (near-dup identity has no
   * watermark horizon, so keyed state cannot hold it):
   *  - `bands/` (band int, band_key string, id): the LSH index the
   *    per-batch candidate join probes — `bands` rows per doc;
   *  - `sigs/`  (id, sig array<long>): k longs per doc for the
   *    estimate verify.
-  * Per batch: the batch's band/sig rows append FIRST, then the batch
-  * band rows probe the store (own rows included) — ONE bucket-local
-  * join yields in-batch and cross-batch pairs in the same pass; the
-  * probe side is ONE batch, bounded. At cluster scale the stores
-  * become tables bucketed by (band, band_key) and id respectively, so
-  * the join never reshuffles the store. Doc ids must be UNIQUE across batches
-  * (append-only contract, as [[StreamingVectorIndex]]); replaying a
-  * batch re-appends its band/sig rows — harmless: candidates AND the
-  * verify output are pair-level deduplicated (a replayed batch
-  * re-emits its pairs exactly once each — at-least-once across
-  * batches, the foreachBatch norm, never multiplied within one), and
-  * [[compact]] clears the duplicate store rows. Empty docs (NULL
-  * signature) never band, never verify, and are not stored.
+  * Per batch: the batch OVERWRITES its own `batch_id=N` partition of
+  * both stores FIRST, then its band rows probe every partition (own
+  * rows included) — ONE bucket-local join yields in-batch and
+  * cross-batch pairs in the same pass; the probe side is ONE batch,
+  * bounded. A replayed batch rewrites its partitions instead of
+  * adding a second copy, so the store it probes is the one its first
+  * attempt probed and it re-emits the identical pairs. At cluster
+  * scale the stores become tables bucketed by (band, band_key) and
+  * id respectively, so the join never reshuffles the store. Doc ids
+  * must be UNIQUE across batches (append-only contract, as
+  * [[StreamingVectorIndex]]). Empty docs (NULL signature) never band,
+  * never verify, and are not stored.
   */
 final case class StreamingNearDup(storeDir: String,
     idCol: String = "doc_id", textCol: String = "text",
@@ -65,58 +63,19 @@ final case class StreamingNearDup(storeDir: String,
   require(bands >= 1 && bands <= k && k % bands == 0,
     s"bands=$bands must divide the signature width k=$k")
 
-  private def bandsDir = s"$storeDir/bands"
-  private def sigsDir = s"$storeDir/sigs"
+  private def bandLog = BatchLog(s"$storeDir/bands")
+  private def sigLog = BatchLog(s"$storeDir/sigs")
 
-  // Existence probe through the Hadoop FileSystem API — a
-  // java.io.File probe is ALWAYS false for hdfs://-/s3a://-qualified
-  // store paths and would silently report an empty store, losing
-  // every cross-batch pair (the StreamingSeriesStore round-11 ADVICE
-  // defect; round-14 self-review caught the same class here).
-  private def hasData(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-  }
-
-  private[streaming] def storeBands(spark: SparkSession): DataFrame =
-    if (hasData(spark, bandsDir)) spark.read.parquet(bandsDir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("band",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("band_key",
-          org.apache.spark.sql.types.StringType))))
-
-  private[streaming] def storeSigs(spark: SparkSession): DataFrame =
-    if (hasData(spark, sigsDir)) spark.read.parquet(sigsDir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sig",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType, containsNull = false)))))
-
-  /** Process ONE micro-batch: append the batch's band/sig rows to the
-    * store, then emit the batch's new near-dup pairs (id_a < id_b,
-    * est_jaccard ≥ threshold — in-batch AND against-store, one probe
-    * join). */
-  def processBatch(batch: DataFrame): DataFrame = {
+  /** Process ONE micro-batch: write the batch's band/sig rows to its
+    * store partitions, then emit the batch's new near-dup pairs
+    * (id_a < id_b, est_jaccard ≥ threshold — in-batch AND
+    * against-store, one probe join). */
+  def processBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    // heal a crashed compact() before the store reads (tmps live
-    // under the store ROOT here, one per folded subdir)
-    CompactSwap.recoverDir(spark, storeDir, ".compact_bands_tmp")
-    CompactSwap.recoverDir(spark, storeDir, ".compact_sigs_tmp")
     // signature pass: the ONE shared derivation (md5-long shingles +
     // exact band keys — the oracle-reproducible batch variant this
     // twin is pinned against). The batch is re-consumed three times
-    // (candidate probe, verify sigs, store appends) — materialize the
+    // (candidate probe, verify sigs, store writes) — materialize the
     // bounded batch once. Band rows are a map-only explode over the
     // checkpointed sigs (never re-running the shingle/minhash work),
     // so they need no second pin of their own (round-16 job cut).
@@ -127,30 +86,19 @@ final case class StreamingNearDup(storeDir: String,
       .localCheckpoint(true)
     val bandRows = Dedup.bandRowsFromSigs(sigs, k, bands,
       exactBandKey = true)
-    // Append FIRST (round-16 job cut): with the batch's own rows in
+    // Write FIRST (round-16 job cut): with the batch's own rows in
     // the store, ONE batch-probes-store join yields in-batch AND
     // cross-batch pairs in the same pass (b.id =!= s.id skips the
     // self-pair; an in-batch pair surfaces from both directions and
     // collapses in the pair dedup) — replacing the former
-    // self-join ∪ store-join double pass. Replay semantics are
-    // unchanged: a replayed batch's rows sit in the store twice, and
-    // the candidate dedup plus the identical-row verify dedup
-    // collapse the multiplicity exactly as before (suite-pinned).
-    // The two appends are independent scans of the checkpointed
-    // sigs, so they run as concurrent jobs (guide §2.6 back-fill).
-    @volatile var sigWriteErr: Throwable = null
-    val sigWrite = new Thread(() =>
-      try sigs.write.mode("append").parquet(sigsDir)
-      catch { case e: Throwable => sigWriteErr = e })
-    sigWrite.start()
-    bandRows.write.mode("append").parquet(bandsDir)
-    sigWrite.join()
-    if (sigWriteErr != null) throw sigWriteErr
+    // self-join ∪ store-join double pass.
+    sigLog.write(sigs, batchId)
+    bandLog.write(bandRows, batchId)
     // candidate pairs: batch probes the store's LSH index (own rows
     // included); pair order normalizes by id so output ids are
     // (lo, hi) like the batch op regardless of arrival order
     val cand = bandRows.as("b")
-      .join(storeBands(spark).as("s"),
+      .join(bandLog.read(spark, bandRows.schema).as("s"),
         col("b.band") === col("s.band") &&
           col("b.band_key") === col("s.band_key") &&
           col("b.id") =!= col("s.id"))
@@ -159,16 +107,15 @@ final case class StreamingNearDup(storeDir: String,
       // hash by id_a ONCE (round-16 exchange cut): hash(id_a)
       // satisfies the (id_a, id_b) dedup's clustering (subset rule)
       // AND co-partitions the sa join below, so neither inserts its
-      // own shuffle; the final pair dedup likewise rides the sb
-      // join's hash(id_b). Skew exposure is unchanged — the sa join
-      // already clustered by id_a.
+      // own shuffle. Skew exposure is unchanged — the sa join already
+      // clustered by id_a.
       .repartition(col("id_a"))
       .dropDuplicates("id_a", "id_b")
     // estimate verify: signature agreement fraction. Sig lookup joins
     // the bounded candidate side against the store signatures (the
     // batch's own sigs are in the store now) — the same
     // build-the-pairs-side discipline as the batch verify.
-    val allSigs = storeSigs(spark)
+    val allSigs = sigLog.read(spark, sigs.schema)
     cand.hint("shuffle_hash")
       .join(allSigs.as("sa"), col("id_a") === col("sa.id"))
       .hint("shuffle_hash")
@@ -177,62 +124,44 @@ final case class StreamingNearDup(storeDir: String,
         Dedup.sigEstimate(col("sa.sig"), col("sb.sig"), k))
       .where(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
-      // pairs-sized dedup: after a REPLAY the batch's ids sit in the
-      // store twice, so the two verify joins multiply every pair row
-      // ×4 (round-14 self-review catch — the rows are identical, so
-      // one survives)
-      .dropDuplicates("id_a", "id_b")
       // pin the output before LATER batches grow the store: a replay
       // harness unions every batch's frame and evaluates at the end,
-      // and an unpinned plan would then see future appends through
+      // and an unpinned plan would then see future batches through
       // the store scans
       .localCheckpoint(true)
   }
 
-  /** Compact both stores into one coalesced, DEDUPLICATED snapshot
-    * each. Two reasons to run it: (1) file-count hygiene — every
-    * batch appends a file-set to `bands/` and `sigs/`, so a
-    * long-lived stream pays ever-growing listStatus + parquet-footer
-    * costs per probe; (2) replay residue — a replayed batch re-appends
-    * its rows, and while the pair-level output dedup makes that
-    * harmless, the duplicate rows still occupy store bytes until
-    * compacted away. Content is append-only (no merge math — unlike
-    * the SeriesStore's partial sums), so compaction is a pure
-    * re-layout: read → dropDuplicates → staged write →
-    * [[CompactSwap]] delete-then-rename with manifest recovery. NOT
-    * crash-atomic; run as a maintenance step with no concurrent
-    * readers mid-swap (the StreamingSeriesStore.compact contract). */
-  def compact(spark: SparkSession): Unit = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def one(dir: String, tmpName: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val tmp = new org.apache.hadoop.fs.Path(root, tmpName)
-      CompactSwap.recoverStaleStaging(fs, tmp)
-      if (!hasData(spark, dir)) return
-      // snapshot SORTED by its probe key: clustered row groups give
-      // parquet min/max stats real selectivity, so the per-batch
-      // candidate join's runtime filters can skip store row groups
-      // instead of scanning the whole history (NearDupStreamProbe)
-      val sortCols =
-        if (dir == bandsDir) Seq("band", "band_key") else Seq("id")
-      spark.read.parquet(dir).dropDuplicates()
-        .sort(sortCols.map(col): _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      CompactSwap.swap(fs, Seq(p), tmp, p)
-    }
-    one(bandsDir, ".compact_bands_tmp")
-    one(sigsDir, ".compact_sigs_tmp")
-  }
+  /** Fold all-but-the-latest batch partitions of each store into one
+    * snapshot partition ([[StreamingNearDup.compactStores]]).
+    * File-count hygiene for long streams; maintenance-step contract —
+    * no concurrent readers mid-swap. */
+  def compact(spark: SparkSession): Unit =
+    StreamingNearDup.compactStores(spark, bandLog, sigLog)
 
   /** Wire onto a streaming DataFrame: each micro-batch's new pairs
-    * append to `outDir` as parquet. */
+    * overwrite `outDir/batch_id=N` — a replay rewrites, never
+    * duplicates. */
   def attach(stream: DataFrame, outDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch).write.mode("append").parquet(outDir); ()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        BatchLog(outDir).write(processBatch(batch, batchId), batchId)
       }
       .start()
+}
+
+object StreamingNearDup {
+  /** Compact a band log and a sig log (this twin's and
+    * [[StreamingFuzzyDedup]]'s stores), each snapshot sorted by its
+    * probe key: clustered row groups give parquet min/max stats real
+    * selectivity, so the candidate join's runtime filters can skip
+    * store row groups. */
+  private[streaming] def compactStores(spark: SparkSession,
+      bands: BatchLog, sigs: BatchLog): Unit = {
+    def one(log: BatchLog, sortCols: String*): Unit =
+      log.compact(spark)(_.dropDuplicates().sort(sortCols.map(col): _*))
+    one(bands, "band", "band_key")
+    one(sigs, "id")
+  }
 }

@@ -35,14 +35,12 @@ final case class StreamingSeriesStore(storeDir: String,
     keyType: org.apache.spark.sql.types.DataType =
       org.apache.spark.sql.types.LongType) {
 
+  private def store = BatchLog(storeDir)
+
   /** Fold ONE micro-batch's partial slot sums into the store. */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    // heal a crashed compact() so series() reads after this batch see
-    // the folded history (CompactSwap.recoverDir scaladoc)
-    CompactSwap.recoverDir(batch.sparkSession, storeDir)
-    TimeSeries.slotSums(batch, startDate, nSlots, keyCol, tsCol, valCol)
-      .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    store.write(TimeSeries.slotSums(batch, startDate, nSlots, keyCol,
+      tsCol, valCol), batchId)
 
   /** The centered series as of all folded batches — identical shape
     * (and, on the same event set, identical values) to
@@ -56,33 +54,13 @@ final case class StreamingSeriesStore(storeDir: String,
     * miss files — retry semantics are the caller's (the usual
     * object-store snapshot caveat). */
   def series(spark: SparkSession): DataFrame = {
-    // Existence probe through the Hadoop FileSystem API — the store's
-    // whole point is object-store scale, and a java.io.File probe is
-    // ALWAYS false for hdfs://-/s3a://-qualified paths, silently
-    // reporting an empty store (the round-11 ADVICE defect). The
-    // Path's own scheme picks the FS, so file:, hdfs: and s3a: stores
-    // all probe correctly under one code path.
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    // require an actual DATA file, not just a batch_id dir: an EMPTY
-    // micro-batch (idle trigger) overwrites its partition with zero
-    // part files, and a bare nonEmpty-listing check would then send
-    // the next read into parquet's unable-to-infer-schema failure
-    // (round-14 review catch, same class in StreamingFuzzyDedup)
-    val slots =
-      if (fs.exists(path) && fs.listStatus(path).exists { d =>
-          d.isDirectory && fs.listStatus(d.getPath)
-            .exists(_.getPath.getName.endsWith(".parquet"))
-        })
-        spark.read.parquet(storeDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(keyCol, keyType),
-          org.apache.spark.sql.types.StructField("__d",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("__v",
-            org.apache.spark.sql.types.DoubleType))))
+    val slots = store.read(spark,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(keyCol, keyType),
+        org.apache.spark.sql.types.StructField("__d",
+          org.apache.spark.sql.types.IntegerType),
+        org.apache.spark.sql.types.StructField("__v",
+          org.apache.spark.sql.types.DoubleType))))
     TimeSeries.fromSlots(
       slots.groupBy(col(keyCol), col("__d"))
         .agg(round(sum("__v"), 4).as("__v")),
@@ -111,10 +89,10 @@ final case class StreamingSeriesStore(storeDir: String,
     * same transient-miss caveat [[series]] documents for replay
     * overwrites, wider here). A no-op below 3 batch partitions. */
   def compact(spark: SparkSession): Unit =
-    // leaf-dir read: no partition discovery, plain (key, __d, __v)
-    // rows; the sum stays RAW — the snapshot is a partial, rounding
-    // happens once at the read merge like every other batch
-    CompactSwap.foldBatchPartitions(spark, storeDir)(
+    // plain (key, __d, __v) rows; the sum stays RAW — the snapshot
+    // is a partial, rounding happens once at the read merge like
+    // every other batch
+    store.compact(spark)(
       _.groupBy(col(keyCol), col("__d")).agg(sum("__v").as("__v")))
 
   /** Top-k correlated entities over the CURRENT store state. */

@@ -50,41 +50,27 @@ final case class StreamingTokenBudget(storeDir: String,
   require((budgets.values ++ Seq(defaultBudget)).forall(_ >= 0L),
     "budgets must be non-negative")
 
-  private def hasData(spark: SparkSession): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists { d =>
-      d.isDirectory && fs.listStatus(d.getPath)
-        .exists(_.getPath.getName.endsWith(".parquet"))
-    }
-  }
+  private def store = BatchLog(storeDir)
 
   // per-stratum tokens already counted by EARLIER batches (the
   // current batch's own partition is excluded — replay discipline);
   // pre-data schema takes the stratum type from the live batch
   private def spent(spark: SparkSession, excludeBatch: Long,
       strataType: org.apache.spark.sql.types.DataType): DataFrame =
-    if (hasData(spark))
-      spark.read.parquet(storeDir)
-        .where(col("batch_id") =!= excludeBatch)
-        .groupBy(col(strataCol).as("_strata_s"))
-        .agg(sum("tokens").as("_spent"))
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("_strata_s", strataType),
-        org.apache.spark.sql.types.StructField("_spent",
-          org.apache.spark.sql.types.LongType))))
+    store.read(spark,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(strataCol, strataType),
+          org.apache.spark.sql.types.StructField("tokens",
+            org.apache.spark.sql.types.LongType))),
+        excluding = Some(excludeBatch))
+      .groupBy(col(strataCol).as("_strata_s"))
+      .agg(sum("tokens").as("_spent"))
 
   /** Admit one micro-batch's prefix against the remaining budgets and
     * record the batch's total per-stratum tokens in its own store
     * partition. Returns the admitted rows (input columns only). */
   def processBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    // heal a crashed compact() BEFORE reading spent() — in the
-    // interrupted-swap window the store is missing every folded
-    // partition and the batch would over-admit past the budget
-    CompactSwap.recoverDir(spark, storeDir)
     val budget = Sampling.budgetExpr(strataCol, budgets, defaultBudget)
     val withCum = Sampling.prefixTokens(batch, strataCol, nShards,
       idCol, tokensCol)
@@ -107,10 +93,8 @@ final case class StreamingTokenBudget(storeDir: String,
       // the store write below grows the store the admission read
       // depends on — pin the gated rows first
       .localCheckpoint(true)
-    gated.groupBy(col(strataCol))
-      .agg(sum(col(tokensCol)).as("tokens"))
-      .write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
+    store.write(gated.groupBy(col(strataCol))
+      .agg(sum(col(tokensCol)).as("tokens")), batchId)
     gated.where(col("_admit")).drop("_admit")
   }
 
@@ -124,6 +108,6 @@ final case class StreamingTokenBudget(storeDir: String,
     * no concurrent writer mid-swap. */
   def compact(spark: SparkSession): Unit =
     // sums are additive, so a per-stratum re-aggregate IS the fold
-    CompactSwap.foldBatchPartitions(spark, storeDir)(
+    store.compact(spark)(
       _.groupBy(col(strataCol)).agg(sum("tokens").as("tokens")))
 }

@@ -40,42 +40,31 @@ final case class StreamingVectorIndex(storeDir: String,
     centArrs: Seq[Seq[Double]], idCol: String = "vec_id",
     vecCol: String = "embedding") {
 
+  private def store = BatchLog(storeDir, partitionBy = Seq("cid"))
+
   /** Assign + fold ONE micro-batch into the store. */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    // heal a crashed compact() so topK reads after this batch see the
-    // folded history (CompactSwap.recoverDir scaladoc)
-    CompactSwap.recoverDir(batch.sparkSession, storeDir)
-    batch.select(col(idCol).as("neighbor_id"),
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    store.write(batch.select(col(idCol).as("neighbor_id"),
         col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("cid", Similarity.flatAssignFn(centArrs)(col("cv")))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
+      .withColumn("cid", Similarity.flatAssignFn(centArrs)(col("cv"))),
+      batchId)
 
   /** The indexed corpus as of all folded batches:
     * (neighbor_id, cv, cid) with `cid` a PARTITION column — filters
     * on it prune at the file level. Empty store ⇒ empty frame, not a
     * read error (Hadoop FS probe — the scheme-qualified-path
     * lesson). */
-  def vectors(spark: SparkSession): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path) && fs.listStatus(path).nonEmpty)
-      spark.read.parquet(storeDir)
-        .select(col("neighbor_id"), col("cv"),
-          col("cid").cast("int").as("cid"))
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("neighbor_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cv",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType)),
-          org.apache.spark.sql.types.StructField("cid",
-            org.apache.spark.sql.types.IntegerType))))
-  }
+  def vectors(spark: SparkSession): DataFrame =
+    store.read(spark, org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("neighbor_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("cv",
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.DoubleType)),
+        org.apache.spark.sql.types.StructField("cid",
+          org.apache.spark.sql.types.IntegerType))))
+      .select(col("neighbor_id"), col("cv"),
+        col("cid").cast("int").as("cid"))
 
   /** Top-k cosine neighbors over the CURRENT index for the stored
     * vectors matching `queryPred` — probe cells are collected first
@@ -107,14 +96,7 @@ final case class StreamingVectorIndex(storeDir: String,
     * series store there is nothing to SUM — vectors are rows, so
     * compaction is a pure file-count rewrite: 10⁴ micro-batch dirs ×
     * k cells collapse to one dir × k cells. */
-  def compact(spark: SparkSession): Unit =
-    CompactSwap.foldBatchPartitions(spark, storeDir,
-      read = paths => spark.read
-        .option("basePath", storeDir) // keep cid a partition column
-        .parquet(paths: _*),
-      write = (df, tmp) => df.write.mode("overwrite")
-        .partitionBy("cid").parquet(tmp))(
-      _.select(col("neighbor_id"), col("cv"), col("cid")))
+  def compact(spark: SparkSession): Unit = store.compact(spark)(identity)
 
   /** Offline re-quantization — the remedy for the frozen-centroid
     * contract: re-assign EVERY stored vector under `newCentroids` and
@@ -144,30 +126,9 @@ final case class StreamingVectorIndex(storeDir: String,
     * ids only grow past the folded range. */
   def rebuild(spark: SparkSession, newCentroids: Seq[Seq[Double]])
       : StreamingVectorIndex = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(root)) {
-      CompactSwap.recoverStaleStaging(fs,
-        new org.apache.hadoop.fs.Path(root, ".compact_tmp"))
-      CompactSwap.recoverStaleStaging(fs,
-        new org.apache.hadoop.fs.Path(root, ".rebuild_tmp"))
-      val parts = fs.listStatus(root).filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("batch_id="))
-      if (parts.nonEmpty) {
-        val snapId = -1L
-        val reassigned = spark.read
-          .option("basePath", storeDir)
-          .parquet(parts.map(_.getPath.toString).toIndexedSeq: _*)
-          .select(col("neighbor_id"), col("cv"))
-          .withColumn("cid",
-            Similarity.flatAssignFn(newCentroids)(col("cv")))
-        val tmp = new org.apache.hadoop.fs.Path(root, ".rebuild_tmp")
-        reassigned.write.mode("overwrite").partitionBy("cid")
-          .parquet(tmp.toString)
-        CompactSwap.swap(fs, parts.map(_.getPath).toIndexedSeq, tmp,
-          new org.apache.hadoop.fs.Path(root, s"batch_id=$snapId"))
-      }
-    }
+    store.compact(spark, into = Some(-1L))(
+      _.select(col("neighbor_id"), col("cv")).withColumn("cid",
+        Similarity.flatAssignFn(newCentroids)(col("cv"))))
     copy(centArrs = newCentroids)
   }
 

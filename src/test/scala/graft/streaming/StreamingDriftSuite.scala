@@ -92,4 +92,22 @@ class StreamingDriftSuite extends SparkSpec {
     assert(totalMass == direct,
       s"streamed mass $totalMass != direct $direct")
   }
+
+  test("attach: a micro-batch re-run after a lost commit leaves one " +
+      "row per (batch, lang)") {
+    val root = Files.createTempDirectory("graft-drift-rerun").toString
+    val sd = StreamingDrift(s"$root/ref")
+    sd.buildReference(corpus)
+    corpus.limit(40).repartition(2).write.parquet(s"$root/in")
+    val rerun = StreamReplay.rerunLastBatch(s"$root/ckpt") {
+      sd.attach(spark.readStream.schema(corpus.schema)
+          .option("maxFilesPerTrigger", "1").parquet(s"$root/in"),
+        s"$root/out", s"$root/ckpt")
+    }
+    val out = spark.read.parquet(s"$root/out")
+    assert(rerun == 1L)
+    assert(out.select("batch_id").distinct().count() == 2)
+    assert(out.count() == out.select("batch_id", "lang").distinct().count(),
+      "the re-run batch's drift rows landed twice")
+  }
 }

@@ -216,4 +216,30 @@ class StreamingFuzzyDedupSuite extends SparkSpec {
     assert(estPairs(kept, 0.5).isEmpty,
       "two emitted survivors est-match each other")
   }
+
+  test("attach: a micro-batch re-run after a lost commit leaves each " +
+      "survivor in the output once") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-sfd-rerun").toString
+    // batch k: two copies of its own text — the lower id survives the
+    // in-batch cluster, and no text repeats across batches, so every
+    // batch (the re-run one included) emits exactly one survivor
+    Seq("alpha bravo charlie delta echo foxtrot golf hotel",
+        "india juliet kilo lima mike november oscar papa",
+        "quebec romeo sierra tango uniform victor whiskey xray")
+      .zipWithIndex.foreach { case (text, b) =>
+        Seq((10L * b + 1, text), (10L * b + 2, text))
+          .toDF("doc_id", "text")
+          .coalesce(1).write.mode("append").parquet(s"$root/in")
+      }
+    val sfd = StreamingFuzzyDedup(s"$root/store", threshold = 0.5)
+    StreamReplay.rerunLastBatch(s"$root/ckpt") {
+      sfd.attach(spark.readStream.schema("doc_id LONG, text STRING")
+          .option("maxFilesPerTrigger", "1").parquet(s"$root/in"),
+        s"$root/out", s"$root/ckpt")
+    }
+    val got = spark.read.parquet(s"$root/out").select("doc_id")
+      .as[Long].collect().toSeq.sorted
+    assert(got == Seq(1L, 11L, 21L), got.toString)
+  }
 }

@@ -149,4 +149,24 @@ class StreamingGroupTopKSuite extends SparkSpec {
       .map(_.getLong(0)).toSet
     assert(got == expected)
   }
+
+  test("snapshot() heals an interrupted swap before reading") {
+    val root = Files.createTempDirectory("graft-gtk").toString
+    val st = store(root)
+    (0 until 2).foreach(c => st.processBatch(summarize(
+      scored.where(pmod(col("doc_id"), lit(2L)) === c))))
+    val before = snapSet(st)
+    // the swap's crash window: the old snapshot deleted, the merged
+    // copy still in staging under its manifest
+    val snap = new java.io.File(s"$root/store/snapshot")
+    val staging = new java.io.File(s"$root/store/staging")
+    assert(snap.renameTo(staging))
+    new java.io.File(staging, "._graft_swap.crc").delete()
+    val mf = new java.io.PrintWriter(new java.io.File(staging, "_graft_swap"))
+    mf.println(snap.getPath)
+    mf.println(snap.getPath)
+    mf.close()
+    assert(snapSet(st) == before)
+    assert(snap.exists() && !staging.exists())
+  }
 }

@@ -142,4 +142,25 @@ class StreamingLineDedupSuite extends SparkSpec {
       out.withColumnRenamed("text_dedup", "text"))
     assert(rededup.agg(sum("n_removed")).head().getLong(0) == 0L)
   }
+
+  test("attach: a micro-batch re-run after a lost commit leaves each " +
+      "doc in the output once") {
+    val root = Files.createTempDirectory("graft-sld-rerun").toString
+    (1L to 3L).foreach(i =>
+      Seq((i, s"body line of doc $i\nshared footer line"))
+        .toDF("doc_id", "text")
+        .coalesce(1).write.mode("append").parquet(s"$root/in"))
+    val sld = StreamingLineDedup(s"$root/store")
+    StreamReplay.rerunLastBatch(s"$root/ckpt") {
+      sld.attach(spark.readStream.schema("doc_id LONG, text STRING")
+          .option("maxFilesPerTrigger", "1").parquet(s"$root/in"),
+        s"$root/out", s"$root/ckpt")
+    }
+    val out = spark.read.parquet(s"$root/out")
+    assert(out.select("doc_id").as[Long].collect().toSeq.sorted ==
+      Seq(1L, 2L, 3L))
+    // the re-run saw only earlier batches: the footer has one owner
+    assert(out.where(col("text_dedup").contains("shared footer"))
+      .count() == 1L)
+  }
 }

@@ -65,10 +65,10 @@ class StreamingNearDupSuite extends SparkSpec {
     val rootA = Files.createTempDirectory("graft-snd-a").toString
     val sndA = StreamingNearDup(s"$rootA/store", threshold = 0.5)
     val outsA = Seq(
-      sndA.processBatch(d.where(col("doc_id") < 300)),
+      sndA.processBatch(d.where(col("doc_id") < 300), 0L),
       sndA.processBatch(
-        d.where(col("doc_id") >= 300 && col("doc_id") < 1000000)),
-      sndA.processBatch(d.where(col("doc_id") >= 1000000)))
+        d.where(col("doc_id") >= 300 && col("doc_id") < 1000000), 1L),
+      sndA.processBatch(d.where(col("doc_id") >= 1000000), 2L))
     val gotA = collectPairs(outsA)
     assert(gotA == ref, s"range chunking diverged: " +
       s"missing=${(ref -- gotA).take(5)} extra=${(gotA -- ref).take(5)}")
@@ -80,7 +80,8 @@ class StreamingNearDupSuite extends SparkSpec {
     val rootB = Files.createTempDirectory("graft-snd-b").toString
     val sndB = StreamingNearDup(s"$rootB/store", threshold = 0.5)
     val gotB = collectPairs((0 until 4).map(c =>
-      sndB.processBatch(d.where(pmod(col("doc_id"), lit(4L)) === c))))
+      sndB.processBatch(d.where(pmod(col("doc_id"), lit(4L)) === c),
+        c.toLong)))
     assert(gotB == ref, "mod chunking diverged from the reference")
   }
 
@@ -92,7 +93,8 @@ class StreamingNearDupSuite extends SparkSpec {
     val root = Files.createTempDirectory("graft-snd-rp").toString
     val snd = StreamingNearDup(s"$root/store", threshold = 0.5)
     val stream = collectPairs((0 until 3).map(c =>
-        snd.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === c))))
+        snd.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === c),
+          c.toLong)))
       .map(p => (p._1, p._2))
     assert(exact.nonEmpty && stream.nonEmpty)
     val hit = (exact & stream).size.toDouble
@@ -113,12 +115,13 @@ class StreamingNearDupSuite extends SparkSpec {
     val root = Files.createTempDirectory("graft-snd-rs").toString
     val first = StreamingNearDup(s"$root/store", threshold = 0.5)
     val o1 = Seq(
-      first.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === 0)),
-      first.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === 1)))
+      first.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === 0), 0L),
+      first.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === 1), 1L))
     // a new instance — only the parquet store carries the state
     val resumed = StreamingNearDup(s"$root/store", threshold = 0.5)
     val o2 = Seq(
-      resumed.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === 2)))
+      resumed.processBatch(d.where(pmod(col("doc_id"), lit(3L)) === 2),
+        2L))
     assert(collectPairs(o1 ++ o2) == ref)
   }
 
@@ -149,18 +152,17 @@ class StreamingNearDupSuite extends SparkSpec {
     val snd = StreamingNearDup(s"$root/store", threshold = 0.5)
     val shared = "shared text body for the near dup check extended"
     val batch = Seq((1L, shared), (2L, shared)).toDF("doc_id", "text")
-    val out1 = snd.processBatch(batch).collect()
+    val out1 = snd.processBatch(batch, 0L).collect()
     assert(out1.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((1L, 2L)))
     // replay: the batch's ids now sit in the store too — every sig
     // joins twice per side; the output must still be ONE row per pair
-    val out2 = snd.processBatch(batch).collect()
+    val out2 = snd.processBatch(batch, 0L).collect()
     assert(out2.length == 1 && out2.head.getLong(0) == 1L &&
       out2.head.getLong(1) == 2L,
       s"replayed batch multiplied pairs: ${out2.length} rows")
-    // the replay residue is visible in the store until compacted
-    val sigsBefore = spark.read.parquet(s"$root/store/sigs").count()
-    assert(sigsBefore == 4L, s"expected duplicated sig rows, $sigsBefore")
+    // the replay rewrote its own store partition: 2 sig rows, no residue
+    assert(spark.read.parquet(s"$root/store/sigs").count() == 2L)
     snd.compact(spark)
     assert(spark.read.parquet(s"$root/store/sigs").count() == 2L)
     assert(spark.read.parquet(s"$root/store/bands")
@@ -168,7 +170,7 @@ class StreamingNearDupSuite extends SparkSpec {
       spark.read.parquet(s"$root/store/bands").count())
     // compacted store still serves cross-batch probes
     val out3 = snd.processBatch(
-      Seq((3L, shared)).toDF("doc_id", "text")).collect()
+      Seq((3L, shared)).toDF("doc_id", "text"), 1L).collect()
     assert(out3.map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 3L), (2L, 3L)), out3.mkString(","))
     // compact is idempotent and crash-recoverable by construction
@@ -183,11 +185,11 @@ class StreamingNearDupSuite extends SparkSpec {
     val root = Files.createTempDirectory("graft-snd-fs").toString
     val snd = StreamingNearDup(s"file:$root/store", threshold = 0.5)
     val shared = "shared text body for the near dup check extended"
-    assert(snd.processBatch(Seq((1L, shared)).toDF("doc_id", "text"))
+    assert(snd.processBatch(Seq((1L, shared)).toDF("doc_id", "text"), 0L)
       .collect().isEmpty)
     // the cross-batch pair exists ONLY if batch 2 sees batch 1's
     // store rows through the file:-qualified path
-    val out = snd.processBatch(Seq((2L, shared)).toDF("doc_id", "text"))
+    val out = snd.processBatch(Seq((2L, shared)).toDF("doc_id", "text"), 1L)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq((1L, 2L)),
       "file:-qualified store read as empty — cross-batch pair lost")
@@ -204,12 +206,32 @@ class StreamingNearDupSuite extends SparkSpec {
     val out = snd.processBatch(Seq(
       (1L, "shared text body for the near dup check extended"),
       (2L, "shared text body for the near dup check extended"),
-      (3L, ""), (4L, "x")).toDF("doc_id", "text"))
+      (3L, ""), (4L, "x")).toDF("doc_id", "text"), 0L)
     val pairs = out.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((1L, 2L)))
     // empty/short docs (NULL sig) were not stored
     val sigs = spark.read.parquet(s"$root/store/sigs")
     assert(sigs.select("id").collect().map(_.getLong(0)).toSet ==
       Set(1L, 2L))
+  }
+
+  test("attach: a micro-batch re-run after a lost commit leaves each " +
+      "pair in the output once") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-snd-rerun").toString
+    val shared = "shared text body for the near dup check extended"
+    // one file per micro-batch, one doc each: whichever batch runs
+    // last pairs with both earlier docs
+    (1L to 3L).foreach(i => Seq((i, shared)).toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(s"$root/in"))
+    val snd = StreamingNearDup(s"$root/store", threshold = 0.5)
+    StreamReplay.rerunLastBatch(s"$root/ckpt") {
+      snd.attach(spark.readStream.schema("doc_id LONG, text STRING")
+          .option("maxFilesPerTrigger", "1").parquet(s"$root/in"),
+        s"$root/out", s"$root/ckpt")
+    }
+    val got = spark.read.parquet(s"$root/out")
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq.sorted
+    assert(got == Seq((1L, 2L), (1L, 3L), (2L, 3L)), got.toString)
   }
 }

@@ -230,4 +230,18 @@ class StreamingSeriesSuite extends SparkSpec {
       .as[(Long, Long, Int, Double)].collect().toSet
     assert(fromStore == batch)
   }
+
+  test("series() heals an interrupted compact swap before reading") {
+    val events = spark.read.parquet(s"$sf0001/events.parquet")
+      .select("event_id", "ts", "user_id", "value")
+    val root = Files.createTempDirectory("graft-sstore-heal").toString
+    val store = StreamingSeriesStore(s"$root/store", "2024-01-01", 30)
+    (0 until 3).foreach(c => store.processBatch(
+      events.where(col("event_id") % 3 === c), batchId = c.toLong))
+    def read() = store.series(spark).as[(Long, Seq[Double])].collect()
+      .toMap
+    val before = read()
+    StreamReplay.crashMidCompact(spark, s"$root/store", Seq(0L, 1L))
+    assert(read() == before, "series() missed the folded batches")
+  }
 }

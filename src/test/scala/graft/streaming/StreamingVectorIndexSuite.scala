@@ -242,4 +242,36 @@ class StreamingVectorIndexSuite extends SparkSpec {
       .as[(Long, Long, Int, Double)].collect().toSet
     assert(fromStore == batch)
   }
+
+  test("vectors/topK heal an interrupted compact swap before reading") {
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>")
+        .as("embedding"))
+    val cents = Similarity.lowestIdCentroids(e, nCent)
+    val root = Files.createTempDirectory("graft-vindex-heal").toString
+    val idx = StreamingVectorIndex(s"$root/store", cents)
+    (0 until 3).foreach { c =>
+      idx.processBatch(e.where(col("vec_id") % 3 === c), batchId = c.toLong)
+    }
+    def search() = idx.topK(spark, col("neighbor_id") < 10, k, nProbe)
+      .as[(Long, Long, Int, Double)].collect().toSet
+    val before = search()
+    StreamReplay.crashMidCompact(spark, s"$root/store", Seq(0L, 1L), "cid")
+    assert(search() == before, "topK missed the folded vectors")
+    assert(idx.vectors(spark).count() == e.count())
+  }
+
+  test("a store holding only EMPTY batches reads as empty, not as a " +
+      "schema-inference failure") {
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>")
+        .as("embedding"))
+    val cents = Similarity.lowestIdCentroids(e, nCent)
+    val root = Files.createTempDirectory("graft-vindex-idle").toString
+    val idx = StreamingVectorIndex(s"$root/store", cents)
+    // partitionBy("cid") over zero rows leaves only _SUCCESS
+    idx.processBatch(e.where(lit(false)), batchId = 0L)
+    assert(idx.vectors(spark).count() == 0L)
+    assert(idx.topK(spark, col("neighbor_id") < 10, k, nProbe).count() == 0L)
+  }
 }
