@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** The store file of the streaming twins: the two state disciplines
@@ -31,24 +31,30 @@ import org.apache.spark.sql.types.StructType
   * Crash recovery (round-13 review finding): once the folded
   * partitions are deleted, the staging dir holds the ONLY copy of
   * their rows. So the swap records a MANIFEST (`_graft_swap` inside
-  * the staging dir: line 1 = destination, rest = folded paths) before
-  * the first delete, and [[recoverStaleStaging]] — which every store
-  * read and compaction runs first — resolves a leftover staging dir
-  * by it:
+  * the staging dir: line 1 = destination, rest = folded paths;
+  * written under a temporary name and renamed, so a reader never sees
+  * half of it) before the first delete. A leftover staging dir is
+  * read by it:
   *
-  *  - no manifest ⇒ the staging WRITE itself crashed; originals are
-  *    untouched ⇒ discard the staging dir;
+  *  - no manifest ⇒ the staging WRITE itself crashed (or is still
+  *    running); originals are untouched ⇒ ignore / discard it;
   *  - manifest present, every recorded path still exists ⇒ the crash
-  *    hit before any delete ⇒ discard (the `attach(compactEvery)`
-  *    replay contract relies on this);
+  *    hit before any delete ⇒ ignore / discard it (the
+  *    `attach(compactEvery)` replay contract relies on this);
   *  - manifest present, some recorded path gone ⇒ an interrupted
-  *    swap ⇒ COMPLETE it (delete the surviving recorded paths, move
-  *    staging into the recorded destination).
+  *    swap ([[pendingSwap]]): readers read the staging dir in place
+  *    of the recorded paths; [[recoverStaleStaging]] COMPLETES it
+  *    (delete the surviving recorded paths, move staging into the
+  *    recorded destination).
+  *
+  * Only WRITER entries recover (a twin's processBatch through
+  * [[Snapshot.update]], [[BatchLog.compact]]): a read may run while
+  * the writer is mid-swap, and a reader that discarded or completed
+  * that swap would be a second writer. Reads write nothing; racing
+  * an active swap they can transiently miss files, never lose them.
   *
   * The manifest rides into the destination on rename; its leading
-  * underscore keeps it invisible to Spark's file index. Single-writer
-  * contract: recovery from a read path is safe because no other
-  * writer runs mid-swap. */
+  * underscore keeps it invisible to Spark's file index. */
 private[streaming] object CompactSwap {
 
   private val ManifestName = "_graft_swap"
@@ -72,47 +78,53 @@ private[streaming] object CompactSwap {
   def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  /** Resolve a leftover staging dir per the ruleset above. Call
-    * BEFORE listing partitions — recovery can change the set. */
-  def recoverStaleStaging(fs: FileSystem, tmp: Path): Unit = {
-    if (!fs.exists(tmp)) return
+  /** The interrupted swap a leftover staging dir `tmp` records —
+    * (destination, folded paths) when its manifest names a folded
+    * path that is gone — else None. Writes nothing. */
+  def pendingSwap(fs: FileSystem, tmp: Path): Option[(Path, Seq[Path])] = {
     val manifest = new Path(tmp, ManifestName)
-    if (!fs.exists(manifest)) {
-      // staging write never completed; originals intact
-      if (!fs.delete(tmp, true) && fs.exists(tmp))
-        throw new java.io.IOException(
-          s"graft compact: cannot discard incomplete staging dir $tmp")
-      return
-    }
+    if (!fs.exists(manifest)) return None
     val lines = {
       val in = fs.open(manifest)
       try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().toVector
       finally in.close()
     }
-    val dest = new Path(lines.head)
     val folded = lines.tail.map(new Path(_))
-    if (folded.forall(fs.exists)) {
-      // pre-delete crash: every original survives — restage freshly
-      if (!fs.delete(tmp, true) && fs.exists(tmp))
-        throw new java.io.IOException(
-          s"graft compact: cannot discard pre-delete staging dir $tmp")
-    } else {
+    if (folded.forall(fs.exists)) None
+    else Some(new Path(lines.head) -> folded)
+  }
+
+  /** Resolve a leftover staging dir per the ruleset above — writer
+    * entries only. Call BEFORE listing partitions: recovery can
+    * change the set. */
+  def recoverStaleStaging(fs: FileSystem, tmp: Path): Unit =
+    if (fs.exists(tmp)) pendingSwap(fs, tmp) match {
       // interrupted swap: the staging dir holds the only full copy —
       // finish what the crashed run started
-      swapStaged(fs, folded.filter(fs.exists), tmp, dest)
+      case Some((dest, folded)) =>
+        swapStaged(fs, folded.filter(fs.exists), tmp, dest)
+      // staging write never completed, or no delete ran: the
+      // originals are intact
+      case None =>
+        if (!fs.delete(tmp, true) && fs.exists(tmp))
+          throw new java.io.IOException(
+            s"graft compact: cannot discard stale staging dir $tmp")
     }
-  }
 
   /** Record the manifest, then delete each folded path and move
     * `tmp` to `dest`. */
   def swap(fs: FileSystem, folded: Seq[Path], tmp: Path, dest: Path)
       : Unit = {
-    val out = fs.create(new Path(tmp, ManifestName), true)
+    val part = new Path(tmp, s"$ManifestName.part")
+    val out = fs.create(part, true)
     try {
       out.write((dest.toString +: folded.map(_.toString))
         .mkString("\n").getBytes("UTF-8"))
     } finally out.close()
+    if (!fs.rename(part, new Path(tmp, ManifestName)))
+      throw new java.io.IOException(
+        s"graft compact: cannot publish the swap manifest in $tmp")
     swapStaged(fs, folded, tmp, dest)
   }
 
@@ -147,46 +159,73 @@ private[streaming] final case class BatchLog(dir: String,
   private def root = new Path(dir)
   private def staging = new Path(root, ".compact_tmp")
 
-  private def partitions(fs: FileSystem): Seq[(Path, Long)] =
-    fs.listStatus(root).toSeq.collect {
+  /** The `batch_id=N` partitions. Parquet files at the root mean a
+    * flat store or output written before this layout — Spark's
+    * partition discovery rejects the mix, so fail here by name. */
+  private def partitions(fs: FileSystem): Seq[(Path, Long)] = {
+    val entries = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
+    entries.find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .foreach(s => throw new IllegalStateException(
+        s"$dir holds ${s.getPath.getName} at its root: a flat store " +
+          "or output from before the batch_id=N layout; restart the " +
+          "stream on a fresh directory"))
+    entries.collect {
       case s if s.isDirectory && s.getPath.getName.startsWith("batch_id=") =>
         s.getPath -> s.getPath.getName.stripPrefix("batch_id=").toLong
     }
+  }
 
   private def put(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(path)
 
-  /** Heal a crashed compaction, then every stored row (data columns
-    * and sub-partitions, not `batch_id`) — minus batch `excluding`'s
-    * partition — or an empty frame of `emptySchema` when no batch has
-    * written a data file yet. */
+  /** Every stored row (data columns and sub-partitions, not
+    * `batch_id`) — minus batch `excluding`'s partition — or an empty
+    * frame of `emptySchema` when no batch has written a data file
+    * yet. Writes nothing: an interrupted compaction is read through,
+    * its staging dir standing in for the partitions it folded. */
   def read(spark: SparkSession, emptySchema: StructType,
       excluding: Option[Long] = None): DataFrame = {
     val fs = fileSystem(spark, dir)
-    val written = fs.exists(root) && {
-      recoverStaleStaging(fs, staging)
-      partitions(fs).exists(p => hasDataFile(fs, p._1))
+    val frames = pendingSwap(fs, staging) match {
+      case None =>
+        if (partitions(fs).exists(p => hasDataFile(fs, p._1)))
+          Seq(spark.read.parquet(dir))
+        else Nil
+      case Some((dest, folded)) =>
+        val gone = folded.map(_.getName).toSet
+        val rest = partitions(fs).map(_._1)
+          .filter(p => !gone(p.getName) && hasDataFile(fs, p))
+        val destId = dest.getName.stripPrefix("batch_id=").toLong
+        (if (rest.isEmpty) Nil
+         else Seq(spark.read.option("basePath", dir)
+           .parquet(rest.map(_.toString): _*))) ++
+          (if (!hasDataFile(fs, staging)) Nil
+           else Seq(spark.read.parquet(staging.toString)
+             .withColumn("batch_id", lit(destId))))
     }
-    if (!written) emptyFrame(spark, emptySchema)
+    if (frames.isEmpty) emptyFrame(spark, emptySchema)
     else {
-      val all = spark.read.parquet(dir)
+      val all = frames.reduce(_ unionByName _)
       excluding.fold(all)(id => all.where(col("batch_id") =!= id))
         .drop("batch_id")
     }
   }
 
   /** Overwrite batch `batchId`'s partition — a replay rewrites it. */
-  def write(df: DataFrame, batchId: Long): Unit =
+  def write(df: DataFrame, batchId: Long): Unit = {
+    partitions(fileSystem(df.sparkSession, dir)) // the layout check
     put(df, s"$dir/batch_id=$batchId")
+  }
 
-  /** Fold partitions into one, staged and swapped in by
-    * [[CompactSwap.swap]]. By default all but the max id fold into
-    * the lowest folded id: the max id may still be rewritten by a
-    * replay, every lower id has committed (a no-op below 3
-    * partitions). `into = Some(id)` folds EVERY partition into
-    * `batch_id=id` (the vector index's offline rebuild). `fold` sees
-    * the rows as [[read]] returns them. Maintenance contract: no
-    * concurrent writer mid-swap. */
+  /** Finish or discard a crashed compaction, then fold partitions into
+    * one, staged and swapped in by [[CompactSwap.swap]]. By default
+    * all but the max id fold into the lowest folded id: the max id may
+    * still be rewritten by a replay, every lower id has committed (a
+    * no-op below 3 partitions). `into = Some(id)` folds EVERY
+    * partition into `batch_id=id` (the vector index's offline
+    * rebuild). `fold` sees the rows as [[read]] returns them.
+    * Maintenance contract: the store's single writer runs it, with no
+    * other write mid-swap. */
   def compact(spark: SparkSession, into: Option[Long] = None)(
       fold: DataFrame => DataFrame): Unit = {
     val fs = fileSystem(spark, dir)
@@ -218,20 +257,28 @@ private[streaming] final case class Snapshot(dir: String,
     staging: String) {
   import CompactSwap._
 
-  /** Heal a crashed swap, then the snapshot — None before the first
-    * [[replace]]. */
+  /** The snapshot — None before the first [[update]]. Writes nothing:
+    * an interrupted swap is read from its staging dir. */
   def read(spark: SparkSession): Option[DataFrame] = {
     val fs = fileSystem(spark, dir)
-    recoverStaleStaging(fs, new Path(staging))
-    if (hasDataFile(fs, new Path(dir))) Some(spark.read.parquet(dir))
+    val at =
+      if (pendingSwap(fs, new Path(staging)).isDefined) staging else dir
+    if (hasDataFile(fs, new Path(at))) Some(spark.read.parquet(at))
     else None
   }
 
-  /** Materialize `df` to staging (it may read the old snapshot), then
-    * swap it in. */
-  def replace(df: DataFrame): Unit = {
-    val fs = fileSystem(df.sparkSession, dir)
-    df.write.mode("overwrite").parquet(staging)
+  /** Finish or discard a crashed swap — for a reader that shares the
+    * writer's single-writer contract. */
+  def recover(spark: SparkSession): Unit =
+    recoverStaleStaging(fileSystem(spark, dir), new Path(staging))
+
+  /** The writer's step: recover, then materialize `next(current)` to
+    * staging (it may read the current snapshot) and swap it in. */
+  def update(spark: SparkSession)(
+      next: Option[DataFrame] => DataFrame): Unit = {
+    recover(spark)
+    next(read(spark)).write.mode("overwrite").parquet(staging)
+    val fs = fileSystem(spark, dir)
     val path = new Path(dir)
     swap(fs, if (fs.exists(path)) Seq(path) else Nil, new Path(staging),
       path)

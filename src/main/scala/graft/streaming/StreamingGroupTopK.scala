@@ -63,7 +63,9 @@ final case class StreamingGroupTopK(storeDir: String, k: Int,
     * missing/partial snapshot — the StreamingSeriesStore transient-miss
     * semantics, but per batch rather than only during maintenance
     * compaction. Retry semantics are the caller's; the single-WRITER
-    * contract is unchanged. */
+    * contract is unchanged, and this read writes nothing (after a
+    * crash mid-swap it reads the staged copy; the next
+    * [[processBatch]] finishes the swap). */
   def snapshot(spark: SparkSession): DataFrame =
     snap.read(spark).getOrElse(throw new IllegalArgumentException(
       s"StreamingGroupTopK: no committed snapshot under $storeDir yet"))
@@ -73,7 +75,6 @@ final case class StreamingGroupTopK(storeDir: String, k: Int,
     * directly for replay harnesses. */
   def processBatch(batch: DataFrame): DataFrame = {
     val spark = batch.sparkSession
-    val merged = snap.read(spark).fold(batch)(_.unionByName(batch))
     val w = Window.partitionBy(groupCols.map(col): _*).orderBy(order: _*)
     // Round-16 note: folding the dedup + window onto ONE exchange by
     // hash-partitioning on the group key alone was tried and REVERTED
@@ -81,15 +82,14 @@ final case class StreamingGroupTopK(storeDir: String, k: Int,
     // clusters the whole raw merge onto |groups| partitions and skews
     // the (group, id) dedup that the two-exchange plan runs well
     // spread; the saved exchange measured as noise locally.
-    val top = merged
+    snap.update(spark)(_.fold(batch)(_.unionByName(batch))
       // a replayed batch re-sends rows the snapshot already holds;
       // collapse on the id FIRST or duplicates would occupy top-k
       // slots and evict legitimate rows
       .dropDuplicates(groupCols ++ idCols)
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") <= k)
-      .drop("_rn")
-    snap.replace(top)
+      .drop("_rn"))
     snapshot(spark)
   }
 }

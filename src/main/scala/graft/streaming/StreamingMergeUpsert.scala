@@ -52,12 +52,14 @@ final case class StreamingMergeUpsert(storeDir: String,
     * contract — calling this concurrently with an ACTIVE processBatch
     * is the usual external-reader caveat, not supported. */
   def snapshot(spark: SparkSession,
-      changeSchema: org.apache.spark.sql.types.StructType): DataFrame =
+      changeSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    snap.recover(spark)
     snap.read(spark).getOrElse {
       val dropped = deleteCol.toSeq ++ versionCol.toSeq
       CompactSwap.emptyFrame(spark, org.apache.spark.sql.types.StructType(
         changeSchema.filterNot(f => dropped.contains(f.name))))
     }
+  }
 
   /** Last-writer-wins pre-dedup on the key (struct-max argmax — the
     * dedupBest pattern, no window). */
@@ -74,10 +76,11 @@ final case class StreamingMergeUpsert(storeDir: String,
     }
 
   /** Apply ONE micro-batch of changes to the snapshot. */
-  def processBatch(changes: DataFrame): Unit = {
-    val cur = snapshot(changes.sparkSession, changes.schema)
-    snap.replace(MergeUpsert.merge(cur, lastWins(changes), keys, deleteCol))
-  }
+  def processBatch(changes: DataFrame): Unit =
+    // snapshot() is update's current state with the empty-store schema
+    snap.update(changes.sparkSession)(_ => MergeUpsert.merge(
+      snapshot(changes.sparkSession, changes.schema), lastWins(changes),
+      keys, deleteCol))
 
   /** Wire onto a change stream: each micro-batch merges into the
     * snapshot store. */

@@ -38,16 +38,32 @@ object StreamReplay {
     * the rename never run. */
   def crashMidCompact(spark: SparkSession, dir: String, ids: Seq[Long],
       partitionBy: String*): Unit = {
-    val folded = ids.map(i => new Path(s"$dir/batch_id=$i"))
-    val tmp = new Path(s"$dir/.compact_tmp")
-    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.option("basePath", dir)
-      .parquet(folded.map(_.toString): _*).drop("batch_id")
-      .write.partitionBy(partitionBy: _*).parquet(tmp.toString)
+    val (fs, folded, tmp) = stage(spark, dir, ids, partitionBy)
     val manifest = fs.create(new Path(tmp, "_graft_swap"), true)
     try manifest.write((folded.head +: folded).mkString("\n")
       .getBytes("UTF-8"))
     finally manifest.close()
     assert(fs.delete(folded.head, true))
+  }
+
+  /** Compact partitions `ids` of the [[BatchLog]] at `dir` into
+    * `batch_id=ids.head` (unfolded, under `partitionBy`) with `read`
+    * run in the window a reader can hit: staging written, manifest
+    * not yet. */
+  def compactWithReadMidway(spark: SparkSession, dir: String,
+      ids: Seq[Long], partitionBy: String*)(read: => Unit): Unit = {
+    val (fs, folded, tmp) = stage(spark, dir, ids, partitionBy)
+    read
+    CompactSwap.swap(fs, folded, tmp, folded.head)
+  }
+
+  private def stage(spark: SparkSession, dir: String, ids: Seq[Long],
+      partitionBy: Seq[String]) = {
+    val folded = ids.map(i => new Path(s"$dir/batch_id=$i"))
+    val tmp = new Path(s"$dir/.compact_tmp")
+    spark.read.option("basePath", dir)
+      .parquet(folded.map(_.toString): _*).drop("batch_id")
+      .write.partitionBy(partitionBy: _*).parquet(tmp.toString)
+    (tmp.getFileSystem(spark.sessionState.newHadoopConf()), folded, tmp)
   }
 }

@@ -150,7 +150,8 @@ class StreamingGroupTopKSuite extends SparkSpec {
     assert(got == expected)
   }
 
-  test("snapshot() heals an interrupted swap before reading") {
+  test("snapshot() reads through an interrupted swap; the next batch " +
+      "finishes it") {
     val root = Files.createTempDirectory("graft-gtk").toString
     val st = store(root)
     (0 until 2).foreach(c => st.processBatch(summarize(
@@ -167,6 +168,31 @@ class StreamingGroupTopKSuite extends SparkSpec {
     mf.println(snap.getPath)
     mf.close()
     assert(snapSet(st) == before)
+    assert(!snap.exists() && staging.exists(), "a read wrote the store")
+    st.processBatch(summarize(scored.where(lit(false))))
     assert(snap.exists() && !staging.exists())
+    assert(snapSet(st) == before)
+  }
+
+  test("a snapshot() read between a merge's staging write and its " +
+      "manifest leaves the store whole") {
+    val root = Files.createTempDirectory("graft-gtk").toString
+    val st = store(root)
+    val twin = store(Files.createTempDirectory("graft-gtk").toString)
+    (0 until 2).foreach { c =>
+      val b = summarize(scored.where(pmod(col("doc_id"), lit(2L)) === c))
+      if (c == 0) st.processBatch(b)
+      twin.processBatch(b)
+    }
+    val before = snapSet(st)
+    // st's merge of batch 1: staging written, manifest not yet
+    val snap = new org.apache.hadoop.fs.Path(s"$root/store/snapshot")
+    val staging = new org.apache.hadoop.fs.Path(s"$root/store/staging")
+    twin.snapshot(spark).write.parquet(staging.toString)
+    assert(snapSet(st) == before)
+    val fs = snap.getFileSystem(spark.sessionState.newHadoopConf())
+    CompactSwap.swap(fs, Seq(snap), staging, snap)
+    assert(snapSet(st) == batchReservoir,
+      "the raced read lost the merged snapshot")
   }
 }

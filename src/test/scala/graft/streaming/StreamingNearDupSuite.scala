@@ -163,20 +163,47 @@ class StreamingNearDupSuite extends SparkSpec {
       s"replayed batch multiplied pairs: ${out2.length} rows")
     // the replay rewrote its own store partition: 2 sig rows, no residue
     assert(spark.read.parquet(s"$root/store/sigs").count() == 2L)
-    snd.compact(spark)
-    assert(spark.read.parquet(s"$root/store/sigs").count() == 2L)
-    assert(spark.read.parquet(s"$root/store/bands")
-      .dropDuplicates().count() ==
-      spark.read.parquet(s"$root/store/bands").count())
-    // compacted store still serves cross-batch probes
     val out3 = snd.processBatch(
       Seq((3L, shared)).toDF("doc_id", "text"), 1L).collect()
     assert(out3.map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 3L), (2L, 3L)), out3.mkString(","))
-    // compact is idempotent and crash-recoverable by construction
-    // (CompactSwap manifest); a second run is a no-op re-layout
+    assert(snd.processBatch(Seq((4L, "an unrelated body of words with " +
+      "nothing shared")).toDF("doc_id", "text"), 2L).collect().isEmpty)
+    def partitions(store: String) = new java.io.File(s"$root/store/$store")
+      .list().count(_.startsWith("batch_id="))
+    def assertDeduped(): Unit = Seq("bands", "sigs").foreach { store =>
+      val rows = spark.read.parquet(s"$root/store/$store")
+        .drop("batch_id")
+      assert(rows.dropDuplicates().count() == rows.count(), store)
+    }
+    // batches 0 and 1 fold into one snapshot; the latest stays apart
     snd.compact(spark)
-    assert(spark.read.parquet(s"$root/store/sigs").count() == 3L)
+    assert(partitions("bands") == 2 && partitions("sigs") == 2)
+    assert(spark.read.parquet(s"$root/store/sigs").count() == 4L)
+    assertDeduped()
+    // compacted store still serves cross-batch probes
+    val out5 = snd.processBatch(
+      Seq((5L, shared)).toDF("doc_id", "text"), 3L).collect()
+    assert(out5.map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 5L), (2L, 5L), (3L, 5L)), out5.mkString(","))
+    // a second fold takes the snapshot and batch 2 along
+    snd.compact(spark)
+    assert(partitions("bands") == 2 && partitions("sigs") == 2)
+    assert(spark.read.parquet(s"$root/store/sigs").count() == 5L)
+    assertDeduped()
+  }
+
+  test("a store written flat, before the batch_id=N layout, fails by " +
+      "name instead of mixing layouts") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-snd-flat").toString
+    Seq((1L, Seq(1L, 2L))).toDF("id", "sig").write
+      .parquet(s"$root/store/sigs")
+    val err = intercept[IllegalStateException] {
+      StreamingNearDup(s"$root/store", threshold = 0.5).processBatch(
+        Seq((2L, "some text body")).toDF("doc_id", "text"), 0L)
+    }
+    assert(err.getMessage.contains("before the batch_id=N layout"))
   }
 
   test("scheme-qualified store paths probe through the Hadoop FS API " +

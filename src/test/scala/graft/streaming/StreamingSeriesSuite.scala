@@ -231,7 +231,7 @@ class StreamingSeriesSuite extends SparkSpec {
     assert(fromStore == batch)
   }
 
-  test("series() heals an interrupted compact swap before reading") {
+  test("series() reads through an interrupted compact swap") {
     val events = spark.read.parquet(s"$sf0001/events.parquet")
       .select("event_id", "ts", "user_id", "value")
     val root = Files.createTempDirectory("graft-sstore-heal").toString
@@ -243,5 +243,23 @@ class StreamingSeriesSuite extends SparkSpec {
     val before = read()
     StreamReplay.crashMidCompact(spark, s"$root/store", Seq(0L, 1L))
     assert(read() == before, "series() missed the folded batches")
+  }
+
+  test("a series() read between a compaction's staging write and its " +
+      "manifest leaves the store whole") {
+    val events = spark.read.parquet(s"$sf0001/events.parquet")
+      .select("event_id", "ts", "user_id", "value")
+    val root = Files.createTempDirectory("graft-sstore-race").toString
+    val store = StreamingSeriesStore(s"$root/store", "2024-01-01", 30)
+    (0 until 3).foreach(c => store.processBatch(
+      events.where(col("event_id") % 3 === c), batchId = c.toLong))
+    def read() = store.series(spark).as[(Long, Seq[Double])].collect()
+      .toMap
+    val before = read()
+    StreamReplay.compactWithReadMidway(spark, s"$root/store",
+      Seq(0L, 1L)) {
+      assert(read() == before)
+    }
+    assert(read() == before, "the raced read lost the folded batches")
   }
 }

@@ -243,7 +243,7 @@ class StreamingVectorIndexSuite extends SparkSpec {
     assert(fromStore == batch)
   }
 
-  test("vectors/topK heal an interrupted compact swap before reading") {
+  test("vectors/topK read through an interrupted compact swap") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>")
         .as("embedding"))
