@@ -62,13 +62,13 @@ object Bench {
     val p1 = onePass(); val p2 = onePass()
     val loadAfter = loadavg()
     val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
-    val ncpu = Runtime.getRuntime.availableProcessors
     // Quiet flag (round-11 verdict): a capture that STARTED under
     // co-tenant load is contaminated — the committed record should say
     // so machine-readably instead of leaving the judge to eyeball
-    // loadavg. ncpu/8 ≈ 4 on the 32-core host, comfortably below the
-    // measured contamination threshold.
-    val quiet = loadBefore >= 0 && loadBefore <= ncpu / 8.0
+    // loadavg. hostCpus/8 ≈ 4 on the 32-core host, comfortably below
+    // the measured contamination threshold.
+    val hostCpus = Runtime.getRuntime.availableProcessors
+    val quiet = loadBefore >= 0 && loadBefore <= hostCpus / 8.0
     // Per-query seconds rounded to 3 decimals on the printed line
     // (round-15 verdict: 9-decimal precision made the line ~4.2 KB and
     // the driver's ~1.9 KB stdout-tail capture truncated its head, so
@@ -82,7 +82,7 @@ object Bench {
     def jsonFor(rs: Map[String, Double], mergedRuns: Int,
         quietRuns: Int): String = {
       val t = if (rs.nonEmpty) rs.values.sum else 0.0
-      s"""{"metric":"total","value":${r3(t)},"unit":"sec","queries":${qjson(rs)},"failed":$failedJson,"sf":"$sfDir","passes":2,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"ncpu":$ncpu,"quiet":$quiet,"merged_runs":$mergedRuns,"quiet_runs":$quietRuns}"""
+      s"""{"metric":"total","value":${r3(t)},"unit":"sec","queries":${qjson(rs)},"failed":$failedJson,"sf":"$sfDir","passes":2,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"ncpu":$cpus,"quiet":$quiet,"merged_runs":$mergedRuns,"quiet_runs":$quietRuns}"""
     }
     // stdout (the driver's BENCH_rN capture) is ALWAYS this run alone.
     val fullLine = jsonFor(results, 1, if (quiet) 1 else 0)
@@ -94,7 +94,7 @@ object Bench {
     // stays on the line above and in $SPARK_GRAFT_BENCH_OUT.
     if (fullLine.length > 1800) {
       val t = if (results.nonEmpty) results.values.sum else 0.0
-      println(s"""{"metric":"total","value":${r3(t)},"unit":"sec","n":${results.size},"failed":$failedJson,"sf":"$sfDir","passes":2,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"ncpu":$ncpu,"quiet":$quiet,"merged_runs":1,"quiet_runs":${if (quiet) 1 else 0}}""")
+      println(s"""{"metric":"total","value":${r3(t)},"unit":"sec","n":${results.size},"failed":$failedJson,"sf":"$sfDir","passes":2,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"ncpu":$cpus,"quiet":$quiet,"merged_runs":1,"quiet_runs":${if (quiet) 1 else 0}}""")
     }
     // The driver truncates captured stdout tails (~2000 chars), which
     // on a 98-query suite loses most per-query times from the BENCH

@@ -1,33 +1,27 @@
 package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.mock.MockGen
 import graft.normalize.NormalizerSpec
 import graft.ops.Stages
 import graft.pipeline.{Decoders, Pipeline, PipelineConfig, ProtoCodec,
-  ProtoRecord, WireCodec, WireRecord, WireSite}
+  ProtoEncodeExpr}
 import graft.sink.RotationPolicy
 import graft.sources.{BinaryQueueSource, DataFrameSource, FileBinarySource, MessageSource}
 
 /** Ingest-throughput measurement comparable in character to the
   * reference's published run (BASELINE.md: 398k records/s decode,
   * 806k rows/s raw+norm sink on 60 CPUs): generate N wire messages
-  * (6-byte prefix + payload), run the full pipeline batch
+  * (6-byte prefix + payload), run the full pipeline
   * (munge → decode → normalize → raw+norm parquet), print metrics.
   *
-  * Three decode modes over the SAME logical record
-  * (id, site{id,kind}, score, flag):
+  * Modes over the SAME logical record (id, site{id,kind}, score, flag;
+  * protobuf frames add `ts = id − 500`):
   *  - `json`            — untyped from_json decode (round-1 path)
-  *  - `binary`          — hand-rolled length-prefixed codec through the
-  *                        typed `unmarshalFunc` boundary (the
-  *                        reference's protobuf-parity path,
-  *                        /root/reference/proto.go:106-172)
-  *  - `binary-columnar` — same wire format decoded entirely with
-  *                        codegen'd expressions (the Spark-first path)
   *  - `proto`           — REAL protobuf wire format (varint/zigzag/
   *                        fixed64/nested, graft.pipeline.ProtoCodec)
   *                        through the typed boundary — the closest
@@ -35,12 +29,22 @@ import graft.sources.{BinaryQueueSource, DataFrameSource, FileBinarySource, Mess
   *                        decode (/root/reference/proto.go:106-172)
   *  - `proto-columnar`  — protobuf decoded by the one-pass codegen'd
   *                        `ProtoParseExpr`
+  *  - `binqueue`        — streaming: the DSv2 `graft-binqueue` source
+  *                        over the protobuf frames, columnar decode
+  *  - `file-stream`     — streaming: FileStreamSource over the same
+  *                        frames, columnar decode
+  *  - `all`             — every mode above, then a summary
+  * The first three feed one already-read batch; the two streaming
+  * modes read from their source over ~8 triggers.
   *
   * Usage: runMain graft.examples.ThroughputBench [nMessages] [mode]
-  *   mode ∈ json | binary | binary-columnar | proto | proto-columnar |
+  *   mode ∈ json | proto | proto-columnar | binqueue | file-stream |
   *          all (default all)
   */
 object ThroughputBench {
+
+  private val Modes =
+    Seq("json", "proto", "proto-columnar", "binqueue", "file-stream", "all")
 
   private val schema = StructType(Seq(
     StructField("id", LongType),
@@ -58,19 +62,25 @@ object ThroughputBench {
       .repartition(spark.sparkContext.defaultParallelism)
   }
 
+  /** The one pipeline shape every mode runs: envelope strip, `decode`,
+    * normalizer, raw+norm sink, no rotation while measuring. */
+  private def config(root: String, mode: String, source: MessageSource,
+      decode: DataFrame => DataFrame): PipelineConfig = PipelineConfig(
+    source = source,
+    outputDir = s"$root/out_$mode",
+    destTable = "msgs",
+    munger = Some(Stages.confluentStrip),
+    decode = decode,
+    normalizer = Some(NormalizerSpec(
+      Seq("id", "site.id", "site.kind", "score"),
+      Seq("id", "site", "kind", "score"))),
+    rotation = RotationPolicy(thresholdMB = 100000, durationSec = 100000,
+      clamp = false))
+
   private def runMode(spark: SparkSession, root: String, mode: String,
       wire: DataFrame, decode: DataFrame => DataFrame, n: Long): Double = {
-    val pipe = Pipeline(spark, PipelineConfig(
-      source = DataFrameSource(wire),
-      outputDir = s"$root/out_$mode",
-      destTable = "msgs",
-      munger = Some(Stages.confluentStrip),
-      decode = decode,
-      normalizer = Some(NormalizerSpec(
-        Seq("id", "site.id", "site.kind", "score"),
-        Seq("id", "site", "kind", "score"))),
-      rotation = RotationPolicy(thresholdMB = 100000, durationSec = 100000,
-        clamp = false)))
+    val pipe = Pipeline(spark,
+      config(root, mode, DataFrameSource(wire), decode))
     val t0 = System.nanoTime()
     pipe.processBatch(wire)
     pipe.close()
@@ -97,18 +107,8 @@ object ThroughputBench {
   private def runStreamMode(spark: SparkSession, root: String,
       mode: String, source: MessageSource,
       decode: DataFrame => DataFrame, n: Long): Double = {
-    val pipe = Pipeline(spark, PipelineConfig(
-      source = source,
-      outputDir = s"$root/out_$mode",
-      destTable = "msgs",
-      munger = Some(Stages.confluentStrip),
-      decode = decode,
-      normalizer = Some(NormalizerSpec(
-        Seq("id", "site.id", "site.kind", "score"),
-        Seq("id", "site", "kind", "score"))),
-      rotation = RotationPolicy(thresholdMB = 100000, durationSec = 100000,
-        clamp = false),
-      checkpointDir = Some(s"$root/ckpt_$mode")))
+    val pipe = Pipeline(spark, config(root, mode, source, decode)
+      .copy(checkpointDir = Some(s"$root/ckpt_$mode")))
     val t0 = System.nanoTime()
     val q = pipe.run()
     q.processAllAvailable()
@@ -123,7 +123,7 @@ object ThroughputBench {
     recsPerSec
   }
 
-  /** Stage the binary wire frames as a partitioned BinaryQueue log —
+  /** Stage the wire frames as a partitioned BinaryQueue log —
     * executor-parallel, one task per queue partition file. */
   private def stageQueue(wire: DataFrame, dir: String, parts: Int): Unit = {
     new java.io.File(dir).mkdirs()
@@ -149,12 +149,8 @@ object ThroughputBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val mode = args.drop(1).headOption.getOrElse("all")
-    require(Set("all", "json", "binary", "binary-columnar", "proto",
-      "proto-columnar", "proto-columnar-slim", "binqueue",
-      "file-stream")(mode),
-      s"unknown mode '$mode' (json | binary | binary-columnar | proto " +
-        "| proto-columnar | proto-columnar-slim | binqueue | " +
-        "file-stream | all)")
+    require(Modes.contains(mode),
+      s"unknown mode '$mode' (${Modes.mkString(" | ")})")
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -168,70 +164,45 @@ object ThroughputBench {
 
     lazy val jsonWire = stage(spark, s"$root/msgs_json",
       MockGen.asMessages(rows, prefixBytes = 6))
-    lazy val binWire = {
-      implicit val enc = ExpressionEncoder[WireRecord]()
-      implicit val benc = ExpressionEncoder[Array[Byte]]()
-      val prefix = Array.fill[Byte](6)(0)
-      stage(spark, s"$root/msgs_bin",
-        rows.as[WireRecord].map(r => prefix ++ WireCodec.encode(r))
-          .toDF("value")
-          .withColumn("timestamp", current_timestamp()))
-    }
+    // columnar encode of the MockGen rows: the same bytes as the typed
+    // ProtoCodec.encode (ProtoCodecSuite pins the two byte-equal)
     lazy val protoWire = {
-      implicit val enc = ExpressionEncoder[WireRecord]()
-      implicit val benc = ExpressionEncoder[Array[Byte]]()
-      val prefix = Array.fill[Byte](6)(0)
-      stage(spark, s"$root/msgs_proto",
-        rows.as[WireRecord].map { r =>
-          prefix ++ ProtoCodec.encode(ProtoRecord(r.id,
-            WireSite(r.site.id, r.site.kind), r.score, r.flag, r.id - 500L))
-        }.toDF("value")
-          .withColumn("timestamp", current_timestamp()))
+      val rec = struct(col("id"), col("site"), col("score"), col("flag"),
+        (col("id") - 500L).as("ts"))
+      val payload = ColumnBridge.column(
+        ProtoEncodeExpr(ColumnBridge.expression(rec)))
+      stage(spark, s"$root/msgs_proto", rows.select(
+        concat(unhex(lit("00" * 6)), payload).as("value"),
+        current_timestamp().as("timestamp")))
     }
+    def on(m: String): Boolean = mode == "all" || mode == m
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    if (mode == "all" || mode == "json")
+    if (on("json"))
       results("json") = runMode(spark, root, "json", jsonWire,
         Decoders.json(schema), n)
-    if (mode == "all" || mode == "binary")
-      results("binary") = runMode(spark, root, "binary", binWire,
-        Decoders.typed(WireCodec.decode), n)
-    if (mode == "all" || mode == "binary-columnar")
-      results("binary-columnar") = runMode(spark, root, "binary-columnar",
-        binWire, WireCodec.decodeColumnar, n)
-    if (mode == "all" || mode == "proto")
+    if (on("proto"))
       results("proto") = runMode(spark, root, "proto", protoWire,
         Decoders.typed(ProtoCodec.decode), n)
-    if (mode == "all" || mode == "proto-columnar")
+    if (on("proto-columnar"))
       results("proto-columnar") = runMode(spark, root, "proto-columnar",
         protoWire, ProtoCodec.decodeColumnar, n)
-    // like-for-like vs binary-columnar: the full wire walk still runs
-    // (ProtoParseExpr computes the whole struct; CSE collapses the
-    // getFields) but the raw sink carries the SAME logical record —
-    // isolates decode cost from the array/map sink-width cost the
-    // round-7 repeated/map columns added
-    if (mode == "all" || mode == "proto-columnar-slim")
-      results("proto-columnar-slim") = runMode(spark, root,
-        "proto-columnar-slim", protoWire,
-        df => ProtoCodec.decodeColumnar(df)
-          .select("id", "site", "score", "flag", "timestamp", "_corrupt"),
-        n)
     // source-inclusive STREAMING arms over the same frames + the same
     // (fastest) columnar decode, ~8 triggers each, so the source layer
     // is the only variable between them
-    if (mode == "all" || mode == "binqueue") {
+    if (on("binqueue")) {
       val qDir = s"$root/binqueue"
-      stageQueue(binWire, qDir, parts = 8)
+      stageQueue(protoWire, qDir, parts = 8)
       results("binqueue") = runStreamMode(spark, root, "binqueue",
         BinaryQueueSource(qDir, maxOffsetsPerTrigger = Some(n / 8)),
-        WireCodec.decodeColumnar, n)
+        ProtoCodec.decodeColumnar, n)
     }
-    if (mode == "all" || mode == "file-stream") {
-      binWire.count() // force the lazy staging of msgs_bin
+    if (on("file-stream")) {
+      protoWire.count() // force the lazy staging of msgs_proto
       results("file-stream") = runStreamMode(spark, root, "file-stream",
-        FileBinarySource(s"$root/msgs_bin",
+        FileBinarySource(s"$root/msgs_proto",
           maxFilesPerTrigger = Some(4)),
-        WireCodec.decodeColumnar, n)
+        ProtoCodec.decodeColumnar, n)
     }
 
     if (results.size > 1) {

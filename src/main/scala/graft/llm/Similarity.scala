@@ -760,7 +760,7 @@ object Similarity {
     val cellScores = cellScoresFn(centArrs)
     // vec − centroid(cid): the centroid table rides as one nested
     // literal, indexed per row. Referencing `cid` from a prior
-    // withColumn is the WireParseExpr CSE case (top-level projection
+    // withColumn is the ProtoParseExpr CSE case (top-level projection
     // subexpressions dedupe), not the HOF-lambda trap.
     def resOf(vec: Column, cid: Column): Column =
       zip_with(vec, element_at(typedlit(centArrs), cid + 1), (a, b) => a - b)

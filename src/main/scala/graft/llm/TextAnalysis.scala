@@ -623,7 +623,7 @@ object TextAnalysis {
     *
     * stage1/stage2 appear in several output columns of ONE collapsed
     * projection: top-level-projection subexpressions are deduplicated
-    * by whole-stage-codegen CSE (the WireParseExpr precedent — this
+    * by whole-stage-codegen CSE (the ProtoParseExpr precedent — this
     * is NOT the HOF-lambda trap bindOnce exists for). */
   def piiCounts(df: DataFrame, textCol: String = "text"): DataFrame = {
     val stage1 = regexp_replace(col(textCol), EmailRe, "[EMAIL]")

@@ -16,16 +16,17 @@ object Stages {
   def munge(fn: Column => Column)(df: DataFrame): DataFrame =
     df.withColumn("value", fn(col("value")))
 
+  /** Drop a fixed prefix of `n` bytes. A frame shorter than the
+    * prefix carries no payload and becomes NULL, so every decoder
+    * dead-letters it (an empty payload is a valid protobuf message). */
+  def stripPrefix(n: Int): Column => Column = v =>
+    when(length(v) >= n, substring(v, n + 1, Int.MaxValue - 8))
+
   /** The canonical munger: strip the 6-byte Confluent envelope
     * (parity: `WithMessageCutConfluencePrefix`,
     * /root/reference/kafka.go:86-88). Zero-copy slice there; a
     * codegen'd binary substring here. */
-  val confluentStrip: Column => Column = v =>
-    substring(v, 7, Int.MaxValue - 8)
-
-  /** Drop a fixed prefix of `n` bytes. */
-  def stripPrefix(n: Int): Column => Column = v =>
-    substring(v, n + 1, Int.MaxValue - 8)
+  val confluentStrip: Column => Column = stripPrefix(6)
 
   /** S6 — the reference appends the Kafka message timestamp as 8 LE
     * bytes to the payload (`MsgTimeAppend`,
@@ -33,9 +34,11 @@ object Stages {
     * carries `timestamp` as a column, so the parity op is simply the
     * projection keeping it; this helper DECODES payloads produced by
     * the reference's byte-append scheme: strips the suffix and
-    * surfaces it as a proper timestamp column. */
+    * surfaces it as a proper timestamp column. A payload under 8
+    * bytes has no suffix: both columns are NULL. */
   def extractAppendedMillis(df: DataFrame): DataFrame = {
     val len = length(col("value"))
+    val hasSuffix = len >= 8
     // little-endian uint64 from the last 8 bytes → epoch millis
     val tsBytes = substring(col("value"), (len - 7).cast("int"), lit(8))
     val millis = (0 until 8).map { i =>
@@ -44,14 +47,16 @@ object Stages {
         conv(hex(substring(tsBytes, i + 1, 1)), 16, 10).cast("long"),
         i * 8)
     }.reduce(_ + _)
-    df.withColumn("msg_ts", timestamp_millis(millis))
-      .withColumn("value", substring(col("value"), lit(1), (len - 8).cast("int")))
+    df.withColumn("msg_ts", when(hasSuffix, timestamp_millis(millis)))
+      .withColumn("value", when(hasSuffix,
+        substring(col("value"), lit(1), (len - 8).cast("int"))))
   }
 
   /** P1 (untyped convenience) — JSON payload decode with P2 routing:
     * PERMISSIVE parse; rows whose payload fails to parse carry a
-    * non-null `_corrupt` column. `decoded` keeps parsed rows,
-    * `deadLetter` the corrupt originals (parity: decode errors are
+    * non-null `_corrupt` column, and so do NULL and empty payloads,
+    * which `from_json` parses to a NULL struct. `decoded` keeps parsed
+    * rows, `deadLetter` the corrupt originals (parity: decode errors are
     * recorded and the message dropped, pipeline continues —
     * /root/reference/proto.go:133-145). */
   def decodeJson(schema: StructType, extra: Map[String, Column] = Map.empty)(
@@ -65,7 +70,9 @@ object Stages {
           "columnNameOfCorruptRecord" -> "_corrupt")))
     val base = parsed.select(
       (schema.fieldNames.map(f => col(s"__parsed.$f")) :+
-        col("__parsed._corrupt").as("_corrupt") :+
+        coalesce(col("__parsed._corrupt"),
+          when(col("__parsed").isNull, lit("no JSON record in payload")))
+          .as("_corrupt") :+
         col("timestamp")).toIndexedSeq: _*)
     extra.foldLeft(base) { case (d, (name, c)) => d.withColumn(name, c) }
   }

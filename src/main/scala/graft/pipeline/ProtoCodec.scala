@@ -13,9 +13,13 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The demo record for the REAL protobuf ingest path — the
-  * length-prefixed [[WireRecord]] shape plus a signed `ts` delta so
-  * every proto3 scalar encoding is on the wire, plus the two
+/** The nested `Site` message of [[ProtoRecord]]: field 2 (`site`) and
+  * each element of field 8 (`stores`). */
+final case class WireSite(id: String, kind: String)
+
+/** The demo record for the protobuf ingest path — (id, site{id,kind},
+  * score, flag) plus a signed `ts` delta so every proto3 scalar
+  * encoding is on the wire, plus the two
   * non-scalar cardinalities the reference's type surface carries
   * (`Repeated`, /root/reference/custom.go:15; proto map,
   * /root/reference/README.md:10-11):
@@ -58,7 +62,7 @@ final case class ProtoRecord(id: Long, site: WireSite, score: Double,
   * format itself, hand-rolled, so the reference's canonical decode
   * path (generated-protobuf `unmarshalFunc`,
   * /root/reference/proto.go:33,106-172) has a REAL stand-in instead
-  * of the length-prefixed [[WireCodec]] approximation. */
+  * of an invented wire format. */
 object ProtoWire {
   final class Malformed(val msg: String)
     extends Exception(msg, null, false, false)
@@ -159,8 +163,8 @@ object ProtoWire {
   }
 }
 
-/** Real proto wire-format codec for [[ProtoRecord]] at the same
-  * pluggable `unmarshalFunc` boundary as [[WireCodec]]
+/** Real proto wire-format codec for [[ProtoRecord]] at the pluggable
+  * `unmarshalFunc` boundary
   * (/root/reference/proto.go:33,106-172). Encoder follows generated
   * proto3 writer semantics (default-valued scalars omitted, judged on
   * raw double BITS so -0.0/NaN still serialize, and WRITTEN as raw
@@ -177,11 +181,15 @@ object ProtoWire {
   * zeroed buffers out of the good-rows path) routes to the dead
   * letter frame, not an exception.
   *
-  * Two decoders, same semantics — the [[WireCodec]] pattern:
-  * [[decode]] through `Decoders.typed` (reference-parity boundary),
+  * Two decoders, same semantics:
+  * [[decode]] through `Decoders.typed` (reference-parity boundary;
+  * pays the object round-trip of the typed mapPartitions),
   * [[decodeColumnar]] as ONE native codegen'd [[ProtoParseExpr]]
-  * reading fields straight off the byte array (UTF8String slices, no
-  * intermediate objects). */
+  * fused into the scan's whole-stage-codegen span, reading fields
+  * straight off the byte array (UTF8String slices, no intermediate
+  * objects). The field extractions over the one parse struct are
+  * deduplicated by codegen subexpression elimination (top-level
+  * projection — not the HOF lambda trap from SCALE.md). */
 object ProtoCodec {
   import ProtoWire._
 
@@ -380,7 +388,9 @@ object ProtoCodec {
   /** Columnar decoder: same output shape as
     * `Decoders.typed(ProtoCodec.decode)` — (id, site struct, score,
     * flag, ts, timestamp, _corrupt) — with malformed payloads flagged
-    * via `_corrupt` instead of dropped rows. */
+    * via `_corrupt` instead of dropped rows. A NULL value nulls the
+    * whole parse struct; the coalesce routes it to the dead-letter
+    * frame like the typed decoder, instead of a "good" all-null row. */
   val decodeColumnar: DataFrame => DataFrame = { df =>
     val r = ColumnBridge.column(
       ProtoParseExpr(ColumnBridge.expression(col("value"))))
@@ -406,8 +416,7 @@ object ProtoCodec {
   * decode-error routing parity (/root/reference/proto.go:133-145).
   * Strings land as `UTF8String` slices straight off the record bytes
   * (no intermediate java.lang.String); codegen'd via a direct
-  * `compute` call — the [[WireParseExpr]] pattern on the real proto
-  * wire format. */
+  * `compute` call. */
 case class ProtoParseExpr(child: Expression) extends UnaryExpression {
   import ProtoWire._
 

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,7 +12,8 @@ import graft.ops.{CustomTransform, Stages}
 import graft.normalize.NormalizerSpec
 import graft.runner.{QuerySink, SegmentQuery, SegmentRunner}
 import graft.sink.RotationPolicy
-import graft.sources.{BinaryQueue, BinaryQueueSource, FileBinarySource}
+import graft.sources.{BinaryQueue, BinaryQueueSource, DataFrameSource,
+  FileBinarySource}
 
 class PipelineSuite extends SparkSpec {
   import spark.implicits._
@@ -387,13 +390,73 @@ class PipelineSuite extends SparkSpec {
     val payload = "hello".getBytes("UTF-8")
     val le = java.nio.ByteBuffer.allocate(8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(ts).array()
-    val df = Seq((payload ++ le, "x")).toDF("value", "tag")
+    val df = Seq((payload ++ le, "x"), (Array[Byte](1, 2, 3), "short"))
+      .toDF("value", "tag")
     val out = Stages.extractAppendedMillis(df)
-    val row = out.select(col("msg_ts").cast("long"), col("value")).head()
+    val x = out.where(col("tag") === "x")
+    val row = x.select(col("msg_ts").cast("long"), col("value")).head()
     assert(row.getLong(0) == ts / 1000 * 1000 / 1000) // seconds via cast
-    val got = out.select(unix_millis(col("msg_ts")), col("value")).head()
+    val got = x.select(unix_millis(col("msg_ts")), col("value")).head()
     assert(got.getLong(0) == ts)
     assert(new String(got.getAs[Array[Byte]](1), "UTF-8") == "hello")
+    // a payload under 8 bytes carries no timestamp: both columns NULL
+    val short = out.where(col("tag") === "short")
+      .select(col("msg_ts"), col("value")).head()
+    assert(short.isNullAt(0) && short.isNullAt(1), short.toString)
+  }
+
+  test("NULL, envelope-only and short frames never become good rows") {
+    // After the 6-byte envelope strip a NULL frame stays NULL, an
+    // envelope-only frame is an empty payload, and a 3-byte frame is
+    // shorter than the envelope, so the strip returns NULL.
+    implicit val benc = ExpressionEncoder[Array[Byte]]()
+    val root = Files.createTempDirectory("graft-short").toString
+    val envelope = Array.fill[Byte](6)(0)
+    val odd = Seq[Array[Byte]](null, envelope, Array[Byte](1, 2, 3))
+    def ingest(name: String, good: Seq[Array[Byte]],
+        decode: DataFrame => DataFrame): Pipeline = {
+      val batch = (good.map(envelope ++ _) ++ odd).toDF("value")
+        .withColumn("timestamp", current_timestamp())
+      val pipe = Pipeline(spark, PipelineConfig(
+        source = DataFrameSource(batch),
+        outputDir = s"$root/out_$name",
+        munger = Some(Stages.confluentStrip),
+        decode = decode,
+        deadLetterTable = Some("dead")))
+      pipe.processBatch(batch)
+      pipe.close()
+      pipe
+    }
+
+    // JSON: an empty payload is no record, so all three are dead letters
+    val json = ingest("json", (0L until 5L).map(i =>
+      (s"""{"event_id":$i,"user_id":1,"event_type":"t",""" +
+        """"value":0.5}""").getBytes("UTF-8")),
+      Decoders.json(payloadSchema))
+    val jm = json.metrics
+    assert(jm.recordsProcessed.get == 5 && jm.decodeErrors.get == 3,
+      s"good ${jm.recordsProcessed.get}, dead ${jm.decodeErrors.get}")
+    assert(jm.conservationHolds)
+    val jsegs = json.closedSegments().map(_.path)
+    assert(spark.read.parquet(jsegs.map(_ + "/dead"): _*).count() == 3)
+    val jraw = spark.read.parquet(jsegs.map(_ + "/msgs"): _*)
+    assert(jraw.count() == 5 && jraw.where(col("event_id").isNull).isEmpty)
+
+    // protobuf: the empty payload is a valid empty message (the
+    // all-default record); the NULL and 3-byte frames are dead letters
+    val proto = ingest("proto", (1L to 5L).map(i =>
+      ProtoCodec.encode(ProtoRecord(i, null, 0.5, flag = true, ts = 0L))),
+      ProtoCodec.decodeColumnar)
+    val pm = proto.metrics
+    assert(pm.recordsProcessed.get == 6 && pm.decodeErrors.get == 2,
+      s"good ${pm.recordsProcessed.get}, dead ${pm.decodeErrors.get}")
+    assert(pm.conservationHolds)
+    val psegs = proto.closedSegments().map(_.path)
+    assert(spark.read.parquet(psegs.map(_ + "/dead"): _*).count() == 2)
+    val dflt = spark.read.parquet(psegs.map(_ + "/msgs"): _*)
+      .where(col("id") === 0L)
+      .select(col("site").isNull, col("score"), col("flag")).collect()
+    assert(dflt.toSeq == Seq(Row(true, 0.0, false)), dflt.mkString)
   }
 }
 

@@ -1,11 +1,16 @@
 package graft.pipeline
 
 import java.io.ByteArrayOutputStream
+import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.normalize.NormalizerSpec
+import graft.ops.Stages
+import graft.sources.{DataFrameSource, FileBinarySource}
 
 class ProtoCodecSuite extends SparkSpec {
   import spark.implicits._
@@ -483,5 +488,170 @@ class ProtoCodecSuite extends SparkSpec {
     assert(cOk.exceptAll(tOk).count() == 0 &&
       tOk.exceptAll(cOk).count() == 0,
       "decoded rows diverge on fuzz-surviving buffers")
+  }
+
+  test("invalid UTF-8 in any string field is malformed for both readers") {
+    // 0xC3 opens a 2-byte sequence; 0x28 cannot continue it. Proto3
+    // string fields must be valid UTF-8 — a reader that repaired the
+    // bytes would also split the typed and columnar verdicts.
+    implicit val benc = ExpressionEncoder[Array[Byte]]()
+    val cases = Seq(
+      "site.id" -> bytes(0x12, 0x04, 0x0A, 0x02, 0xC3, 0x28),
+      "site.kind" -> bytes(0x12, 0x04, 0x12, 0x02, 0xC3, 0x28),
+      "stores[0].id" -> bytes(0x42, 0x04, 0x0A, 0x02, 0xC3, 0x28),
+      "map key" -> bytes(0x3A, 0x04, 0x0A, 0x02, 0xC3, 0x28))
+    cases.foreach { case (name, b) =>
+      assert(ProtoCodec.decode(b).isInstanceOf[DecodeResult.Failed], name)
+    }
+    val out = ProtoCodec.decodeColumnar(cases.map(_._2).toDF("value")
+      .withColumn("timestamp", current_timestamp()))
+    assert(out.where(col("_corrupt").isNull).isEmpty)
+    // the same bytes with a valid 2-byte sequence decode in both
+    val ok = bytes(0x12, 0x04, 0x0A, 0x02, 0xC3, 0xA9)
+    assert(ProtoCodec.decode(ok) == DecodeResult.Ok(
+      ProtoRecord(0L, WireSite("é", ""), 0.0, flag = false, ts = 0L)))
+    assert(ProtoCodec.decodeColumnar(Seq(ok).toDF("value")
+      .withColumn("timestamp", current_timestamp()))
+      .select(col("site.id"), col("_corrupt")).head() == Row("é", null))
+  }
+
+  // ---- through the Pipeline ---------------------------------------------
+
+  private def typedAndColumnar: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "typed" -> Decoders.typed(ProtoCodec.decode),
+    "columnar" -> ProtoCodec.decodeColumnar)
+
+  /** Table `name` unioned over segment dirs (closedSegments drains). */
+  private def segmentTable(segs: Seq[String], name: String): DataFrame =
+    spark.read.parquet(segs.map(_ + "/" + name)
+      .filter(new java.io.File(_).exists()): _*)
+
+  test("null message value routes to dead letters in BOTH decoders") {
+    assert(ProtoCodec.decode(null).isInstanceOf[DecodeResult.Failed])
+    implicit val benc = ExpressionEncoder[Array[Byte]]()
+    val root = Files.createTempDirectory("graft-proto-null").toString
+    val batch = Seq(goldenBytes, null).toDF("value")
+      .withColumn("timestamp", lit("2026-01-01 00:00:00").cast("timestamp"))
+    for ((name, decode) <- typedAndColumnar) {
+      val out = decode(batch)
+      assert(out.where(col("_corrupt").isNotNull).count() == 1, name)
+      assert(out.where(col("_corrupt").isNull).count() == 1, name)
+      val pipe = Pipeline(spark, PipelineConfig(
+        source = DataFrameSource(batch),
+        outputDir = s"$root/out_$name",
+        destTable = "proto",
+        decode = decode,
+        deadLetterTable = Some("dead")))
+      pipe.processBatch(batch)
+      pipe.close()
+      assert(pipe.metrics.recordsProcessed.get == 1, name)
+      assert(pipe.metrics.decodeErrors.get == 1, name)
+      val segs = pipe.closedSegments().map(_.path)
+      assert(segmentTable(segs, "dead").count() == 1, name)
+      assert(segmentTable(segs, "proto").select("id").as[Long].collect()
+        .toSeq == Seq(150L), name)
+    }
+  }
+
+  test("columnar decoder under checkpointed streaming: restart resumes offsets") {
+    // The all-codegen decode path through a REAL streaming query with a
+    // checkpoint: close mid-stream, land more frames, restart — the
+    // query must resume from the committed offset (no re-read, no
+    // double-count) and conservation must hold across the restart.
+    implicit val benc = ExpressionEncoder[Array[Byte]]()
+    val root = Files.createTempDirectory("graft-proto-ckpt").toString
+    def land(lo: Long, hi: Long, bad: Int): Unit = {
+      val msgs = (lo until hi).map(i => ProtoCodec.encode(
+        ProtoRecord(i, WireSite(s"s$i", "web"), i * 0.5, i % 2 == 0,
+          ts = -i))) ++
+        Seq.fill(bad)(Array[Byte](9, 9, 9)) // field 1, truncated fixed64
+      msgs.toDF("value").withColumn("timestamp", current_timestamp())
+        .write.mode("append").parquet(s"$root/messages")
+    }
+    land(0L, 100L, bad = 3)
+    val pipe = Pipeline(spark, PipelineConfig(
+      source = FileBinarySource(s"$root/messages"),
+      outputDir = s"$root/out",
+      destTable = "proto",
+      decode = ProtoCodec.decodeColumnar,
+      deadLetterTable = Some("dead"),
+      checkpointDir = Some(s"$root/ckpt")))
+    pipe.run().processAllAvailable()
+    pipe.close()
+    assert(pipe.metrics.messagesConsumed.get == 103)
+    assert(pipe.metrics.recordsProcessed.get == 100)
+    assert(pipe.metrics.decodeErrors.get == 3)
+
+    land(100L, 150L, bad = 2) // lands while closed
+    pipe.restart().processAllAvailable()
+    pipe.close()
+    val m = pipe.metrics
+    assert(m.messagesConsumed.get == 155, "restart must resume, not re-read")
+    assert(m.recordsProcessed.get == 150)
+    assert(m.decodeErrors.get == 5)
+    assert(m.conservationHolds)
+    val raw = segmentTable(pipe.closedSegments().map(_.path), "proto")
+    assert(raw.count() == 150 && raw.select("id").distinct().count() == 150)
+  }
+
+  test("protobuf pipeline end-to-end: envelope strip, dead letters, " +
+      "repeated-message normalizer fan-out") {
+    // The ingest benchmark's normalizer shape: one norm row per
+    // `stores` element, one for a record with none.
+    implicit val benc = ExpressionEncoder[Array[Byte]]()
+    val root = Files.createTempDirectory("graft-proto-e2e").toString
+    val envelope = Array.fill[Byte](6)(0)
+    val recs = (0L until 200L).map(i => ProtoRecord(i,
+      WireSite(s"site_$i", if (i % 2 == 0) "web" else "app"), i / 10.0,
+      i % 3 == 0, ts = i - 100L,
+      stores = (0 until (i % 4).toInt).map(j => WireSite(s"st${i}_$j", "w"))))
+    val goodMsgs = recs.map(r => envelope ++ ProtoCodec.encode(r))
+    val badMsgs = Seq.fill(7)(envelope ++ Array[Byte](1, 2, 3)) // field 0
+    (goodMsgs ++ badMsgs).toDF("value")
+      .withColumn("timestamp", current_timestamp())
+      .repartition(4)
+      .write.mode("overwrite").parquet(s"$root/messages")
+    val normRows = recs.map(r => math.max(1, r.stores.size)).sum.toLong
+
+    for ((name, decode) <- typedAndColumnar) {
+      val pipe = Pipeline(spark, PipelineConfig(
+        source = FileBinarySource(s"$root/messages"),
+        outputDir = s"$root/out_$name",
+        destTable = "proto",
+        munger = Some(Stages.confluentStrip),
+        decode = decode,
+        deadLetterTable = Some("dead"),
+        normalizer = Some(NormalizerSpec(
+          Seq("id", "site.id", "stores.id", "score"),
+          Seq("id", "site", "store", "score")))))
+      pipe.run().processAllAvailable()
+      pipe.close()
+      val m = pipe.metrics
+      assert(m.messagesConsumed.get == 207, name)
+      assert(m.recordsProcessed.get == 200, name)
+      assert(m.decodeErrors.get == 7, name)
+      assert(m.conservationHolds, name)
+      val segs = pipe.closedSegments().map(_.path)
+      assert(segmentTable(segs, "dead").count() == 7, name)
+
+      val raw = segmentTable(segs, "proto")
+      assert(raw.count() == 200, name)
+      val row = raw.where(col("id") === 42L).head()
+      assert(row.getAs[Row]("site").getAs[String]("id") == "site_42", name)
+      assert(row.getAs[Double]("score") == 4.2, name)
+      assert(row.getAs[Boolean]("flag"), name)
+      assert(row.getAs[Long]("ts") == -58L, name)
+      assert(row.getSeq[Row](row.fieldIndex("stores"))
+        .map(_.getAs[String]("id")) ==
+        Seq("st42_0", "st42_1"), name)
+      val norm = segmentTable(segs, "proto_norm")
+      assert(norm.columns.toSeq == Seq("id", "site", "store", "score"), name)
+      assert(m.normRecordsInserted.get == normRows, name)
+      assert(norm.count() == normRows, name)
+      assert(norm.where(col("id") === 43L).select("store").as[String]
+        .collect().sorted.toSeq == Seq("st43_0", "st43_1", "st43_2"), name)
+      assert(norm.where(col("id") === 40L).select("store").as[String]
+        .collect().toSeq == Seq(null), name)
+    }
   }
 }

@@ -467,7 +467,7 @@ class PlanQualitySuite extends SparkSpec {
     // are exempt where the whole operator is a single scan stage.)
     val heavy = Seq("hashed_shingles", "shingle_md5_hash64",
       "hyperplane_sigs", "simhash64(", "minhash_signature",
-      "proto_parse", "proto_encode", "wire_parse")
+      "proto_parse", "proto_encode")
     graft.SparkEntry.queries.keys
       .filter(q => q.startsWith("llm_") || q.startsWith("op_"))
       .foreach { q =>
