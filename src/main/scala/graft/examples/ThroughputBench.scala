@@ -17,7 +17,9 @@ import graft.sources.{BinaryQueueSource, DataFrameSource, FileBinarySource, Mess
   * reference's published run (BASELINE.md: 398k records/s decode,
   * 806k rows/s raw+norm sink on 60 CPUs): generate N wire messages
   * (6-byte prefix + payload), run the full pipeline
-  * (munge → decode → normalize → raw+norm parquet), print metrics.
+  * (munge → decode → normalize → raw+norm parquet) and print one JSON
+  * line per mode (`mode`, `records_per_s`, `sink_rows_per_s`,
+  * `conservation`).
   *
   * Modes over the SAME logical record (id, site{id,kind}, score, flag;
   * protobuf frames add `ts = id − 500`):
@@ -33,7 +35,7 @@ import graft.sources.{BinaryQueueSource, DataFrameSource, FileBinarySource, Mess
   *                        over the protobuf frames, columnar decode
   *  - `file-stream`     — streaming: FileStreamSource over the same
   *                        frames, columnar decode
-  *  - `all`             — every mode above, then a summary
+  *  - `all`             — every mode above
   * The first three feed one already-read batch; the two streaming
   * modes read from their source over ~8 triggers.
   *
@@ -78,21 +80,25 @@ object ThroughputBench {
       clamp = false))
 
   private def runMode(spark: SparkSession, root: String, mode: String,
-      wire: DataFrame, decode: DataFrame => DataFrame, n: Long): Double = {
+      wire: DataFrame, decode: DataFrame => DataFrame, n: Long): Unit = {
     val pipe = Pipeline(spark,
       config(root, mode, DataFrameSource(wire), decode))
     val t0 = System.nanoTime()
-    pipe.processBatch(wire)
+    pipe.processBatch(wire, 0L)
     pipe.close()
-    val secs = (System.nanoTime() - t0) / 1e9
+    record(mode, n, (System.nanoTime() - t0) / 1e9, pipe)
+  }
+
+  /** One JSON line per mode: `mode`, `records_per_s`,
+    * `sink_rows_per_s` (raw + norm rows) and `conservation`. */
+  private def record(mode: String, n: Long, secs: Double,
+      pipe: Pipeline): Unit = {
     val m = pipe.metrics
     val recsPerSec = m.recordsProcessed.get / secs
-    println(f"[$mode] messages=$n wall=$secs%.1f s")
-    println(f"[$mode] decode+ingest records/s: $recsPerSec%.0f")
-    println(f"[$mode] total sink rows/s (raw+norm): ${
-      (m.recordsInserted.get + m.normRecordsInserted.get) / secs}%.0f")
-    println(s"[$mode] conservation=${m.conservationHolds}")
-    recsPerSec
+    val rowsPerSec = (m.recordsInserted.get + m.normRecordsInserted.get) / secs
+    println(f"""{"mode": "$mode", "messages": $n, "wall_s": $secs%.2f, """ +
+      f""""records_per_s": $recsPerSec%.0f, "sink_rows_per_s": $rowsPerSec%.0f, """ +
+      s""""conservation": ${m.conservationHolds}}""")
   }
 
   /** SOURCE-inclusive sustained throughput: the full STREAMING path
@@ -106,21 +112,14 @@ object ThroughputBench {
     * frames. */
   private def runStreamMode(spark: SparkSession, root: String,
       mode: String, source: MessageSource,
-      decode: DataFrame => DataFrame, n: Long): Double = {
+      decode: DataFrame => DataFrame, n: Long): Unit = {
     val pipe = Pipeline(spark, config(root, mode, source, decode)
       .copy(checkpointDir = Some(s"$root/ckpt_$mode")))
     val t0 = System.nanoTime()
     val q = pipe.run()
     q.processAllAvailable()
     pipe.close()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val m = pipe.metrics
-    val recsPerSec = m.recordsProcessed.get / secs
-    println(f"[$mode] messages=$n wall=$secs%.1f s " +
-      s"maxBatchRows=${m.maxBatchRows.get}")
-    println(f"[$mode] decode+ingest records/s: $recsPerSec%.0f")
-    println(s"[$mode] conservation=${m.conservationHolds}")
-    recsPerSec
+    record(mode, n, (System.nanoTime() - t0) / 1e9, pipe)
   }
 
   /** Stage the wire frames as a partitioned BinaryQueue log —
@@ -177,15 +176,14 @@ object ThroughputBench {
     }
     def on(m: String): Boolean = mode == "all" || mode == m
 
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     if (on("json"))
-      results("json") = runMode(spark, root, "json", jsonWire,
+      runMode(spark, root, "json", jsonWire,
         Decoders.json(schema), n)
     if (on("proto"))
-      results("proto") = runMode(spark, root, "proto", protoWire,
+      runMode(spark, root, "proto", protoWire,
         Decoders.typed(ProtoCodec.decode), n)
     if (on("proto-columnar"))
-      results("proto-columnar") = runMode(spark, root, "proto-columnar",
+      runMode(spark, root, "proto-columnar",
         protoWire, ProtoCodec.decodeColumnar, n)
     // source-inclusive STREAMING arms over the same frames + the same
     // (fastest) columnar decode, ~8 triggers each, so the source layer
@@ -193,24 +191,18 @@ object ThroughputBench {
     if (on("binqueue")) {
       val qDir = s"$root/binqueue"
       stageQueue(protoWire, qDir, parts = 8)
-      results("binqueue") = runStreamMode(spark, root, "binqueue",
+      runStreamMode(spark, root, "binqueue",
         BinaryQueueSource(qDir, maxOffsetsPerTrigger = Some(n / 8)),
         ProtoCodec.decodeColumnar, n)
     }
     if (on("file-stream")) {
       protoWire.count() // force the lazy staging of msgs_proto
-      results("file-stream") = runStreamMode(spark, root, "file-stream",
+      runStreamMode(spark, root, "file-stream",
         FileBinarySource(s"$root/msgs_proto",
           maxFilesPerTrigger = Some(4)),
         ProtoCodec.decodeColumnar, n)
     }
 
-    if (results.size > 1) {
-      val base = results.getOrElse("json", results.values.head)
-      results.foreach { case (m, v) =>
-        println(f"[summary] $m%-16s ${v}%11.0f rec/s (${v / base}%.2fx json)")
-      }
-    }
     spark.stop()
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.ExprUtils
+
 /** Path segment of the normalizer field DSL: `name` or `name[idx]`. */
 final case class PathSeg(name: String, index: Option[Int]) {
   def canonical: String = index.fold(name)(i => s"$name[$i]")
@@ -54,48 +56,66 @@ final case class NormalizerSpec(
 
 /** Flatten/unnest projection over nested columns — the reference's
   * normalizer (N1 in SURVEY.md §2) as a pure Catalyst projection:
-  * path resolution compiles to `getField`/`get`/`explode_outer`, so
+  * path resolution compiles to `getField`/`get`/`transform`, so
   * predicate pushdown, column pruning and whole-stage codegen all
   * apply. No shuffle is introduced — at 100 TB this stays a map-only
   * stage fused with the scan.
   *
-  * Fields sharing an un-indexed list prefix share ONE explode (aligned
-  * elements). Distinct un-indexed lists chain explodes → cross product
-  * (the reference documents only a single list path; we generalize).
+  * [[rows]] is the one definition: per input row, the array of its
+  * normalized rows. [[normalize]] is `inline_outer` over it, and the
+  * pipeline sink writes the array straight into the norm table from
+  * the same scan that writes the raw table.
+  *
+  * Fields sharing an un-indexed list prefix share ONE fan-out (aligned
+  * elements). Distinct un-indexed lists nest → cross product (the
+  * reference documents only a single list path; we generalize).
   */
 object Normalizer {
 
-  def normalize(df: DataFrame, spec: NormalizerSpec): DataFrame = {
+  def normalize(df: DataFrame, spec: NormalizerSpec): DataFrame =
+    // outer: the array is never empty, and an inner generator would
+    // get an inferred size/notnull Filter that re-runs the decode
+    df.select(inline_outer(rows(df.schema, spec)))
+
+  /** `array<struct<outputNames>>`: the normalized rows of one input
+    * row, in `explode_outer` order — one row per element of each
+    * un-indexed list, and one row with NULL list-derived columns for a
+    * NULL or empty list. The referenced top-level columns are pinned
+    * with [[ExprUtils.bindOnce]], so the per-element lambdas read them
+    * instead of re-running an upstream decode for every element. */
+  def rows(schema: StructType, spec: NormalizerSpec): Column = {
     val parsed = spec.fields.map(PathParser.parse)
 
-    // Discover explode points (prefixes ending in an un-indexed array),
-    // in first-seen order; nested ones sort after their parents because
+    // Fan-out points (prefixes ending in an un-indexed array), in
+    // first-seen order; nested ones sort after their parents because
     // they have strictly more segments.
-    val explodePoints = mutable.LinkedHashMap[String, Seq[PathSeg]]()
+    val points = mutable.LinkedHashMap[String, Seq[PathSeg]]()
     parsed.foreach { segs =>
-      explodePrefixes(df.schema, segs).foreach { p =>
-        explodePoints.getOrElseUpdate(canonical(p), p)
+      explodePrefixes(schema, segs).foreach { p =>
+        points.getOrElseUpdate(canonical(p), p)
       }
     }
-    val ordered = explodePoints.values.toSeq.sortBy(_.length)
+    val ordered = points.values.toSeq.sortBy(_.length)
+    val roots = parsed.map(_.head.name).distinct
 
-    // Materialize each explode point as a hidden temp column.
-    val explodeMap = mutable.LinkedHashMap[String, String]() // canonical -> temp col
-    var cur = df
-    ordered.zipWithIndex.foreach { case (segs, i) =>
-      val tmp = s"__graft_ex_$i"
-      val (arrCol, _) = resolve(df.schema, segs, explodeMap,
-        spec.failOnRangeError, terminalArrayAsValue = true)
-      cur = cur.withColumn(tmp, explode_outer(arrCol))
-      explodeMap += canonical(segs) -> tmp
+    ExprUtils.bindOnce(struct(roots.map(n => col(n).as(n)): _*)) { r =>
+      // bound: canonical fan-out point -> its current element
+      def level(k: Int, bound: Map[String, Column]): Column =
+        if (k == ordered.length) {
+          array(struct(parsed.zip(spec.outputNames).map { case (segs, name) =>
+            resolve(schema, segs, r, bound, spec.failOnRangeError).as(name)
+          }: _*))
+        } else {
+          val segs = ordered(k)
+          val arr = resolve(schema, segs, r, bound, spec.failOnRangeError)
+          val nullElem = lit(null).cast(arrayElementType(schema, segs))
+          val outer = when(arr.isNull || size(arr) === 0, array(nullElem))
+            .otherwise(arr)
+          flatten(transform(outer,
+            x => level(k + 1, bound + (canonical(segs) -> x))))
+        }
+      level(0, Map.empty)
     }
-
-    val cols = parsed.zip(spec.outputNames).map { case (segs, name) =>
-      val (c, _) = resolve(df.schema, segs, explodeMap,
-        spec.failOnRangeError, terminalArrayAsValue = false)
-      c.as(name)
-    }
-    cur.select(cols: _*)
   }
 
   /** Derive the flat output schema of `normalize(df, spec)` without
@@ -124,7 +144,7 @@ object Normalizer {
     segs.map(_.canonical).mkString(".")
 
   /** All prefixes of `segs` that end at an un-indexed array field
-    * (each such prefix is one explode). The terminal segment counts:
+    * (each such prefix is one fan-out). The terminal segment counts:
     * an un-indexed terminal array also fans out per element. */
   private def explodePrefixes(
       schema: StructType, segs: Seq[PathSeg]): Seq[Seq[PathSeg]] = {
@@ -156,7 +176,7 @@ object Normalizer {
       s"${other.simpleString} at '${seg.name}'")
   }
 
-  /** Element type of the array at explode point `segs`. */
+  /** Element type of the array at fan-out point `segs`. */
   private def arrayElementType(
       schema: StructType, segs: Seq[PathSeg]): DataType = {
     var dt: DataType = schema
@@ -169,51 +189,40 @@ object Normalizer {
     dt
   }
 
-  /** Resolve a parsed path to a Column against `cur` (which already
-    * holds temp columns for materialized explode points). */
+  /** Resolve a parsed path to a Column: top-level fields read from
+    * the bound root struct `r`, or from the current element of the
+    * longest fan-out point already entered (`bound`). */
   private def resolve(
       rootSchema: StructType,
       segs: Seq[PathSeg],
-      explodeMap: mutable.LinkedHashMap[String, String],
-      strict: Boolean,
-      terminalArrayAsValue: Boolean): (Column, DataType) = {
+      r: Column,
+      bound: Map[String, Column],
+      strict: Boolean): Column = {
 
-    // Longest prefix already materialized as an exploded temp column.
     val start = (segs.length to 1 by -1).find { k =>
-      explodeMap.contains(canonical(segs.take(k)))
+      bound.contains(canonical(segs.take(k)))
     }.getOrElse(0)
 
-    var c: Column = null
+    var c: Column = r
     var dt: DataType = rootSchema
     if (start > 0) {
-      val key = canonical(segs.take(start))
-      c = col(explodeMap(key))
+      c = bound(canonical(segs.take(start)))
       dt = arrayElementType(rootSchema, segs.take(start))
     }
 
-    segs.drop(start).zipWithIndex.foreach { case (seg, j) =>
-      val isTerminal = start + j == segs.length - 1
+    // an un-indexed array left in the path is the fan-out point being
+    // entered (its value is the array); every earlier one is bound
+    segs.drop(start).foreach { seg =>
       dt = structField(dt, seg, segs)
-      c = if (c == null) col(seg.name) else c.getField(seg.name)
-      dt match {
-        case ArrayType(elem, _) =>
-          seg.index match {
-            case Some(i) =>
-              c = elementAt(c, i, strict, canonical(segs))
-              dt = elem
-            case None =>
-              if (isTerminal && terminalArrayAsValue) {
-                // caller wants the raw array (explode-point materialization)
-              } else if (!isTerminal || !terminalArrayAsValue) {
-                throw new IllegalStateException(
-                  s"un-indexed array '${seg.name}' in '${canonical(segs)}' " +
-                  "not materialized as explode point (internal)")
-              }
-          }
+      c = c.getField(seg.name)
+      (dt, seg.index) match {
+        case (ArrayType(elem, _), Some(i)) =>
+          c = elementAt(c, i, strict, canonical(segs))
+          dt = elem
         case _ => ()
       }
     }
-    (c, dt)
+    c
   }
 
   /** 0-based element access. Lenient → NULL out of range (`get`);

@@ -77,11 +77,6 @@ object Stages {
     extra.foldLeft(base) { case (d, (name, c)) => d.withColumn(name, c) }
   }
 
-  /** Split a decoded frame into (good, deadLetter). */
-  def routeErrors(df: DataFrame): (DataFrame, DataFrame) =
-    (df.where(col("_corrupt").isNull).drop("_corrupt"),
-      df.where(col("_corrupt").isNotNull))
-
   /** N2 — custom fields: extend the decoded frame with user-declared
     * columns (parity: `WithCustomFields`,
     * /root/reference/custom.go:57-75). Cardinality/packedness are

@@ -4,6 +4,8 @@ import java.time.{Duration, Instant}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
+import graft.sink.TableStats
+
 /** Pipeline metrics — parity with the reference's `Metrics` /
   * `MetricsReport` (/root/reference/metrics.go:15-51, 259-282): same
   * counter set (consumed / processed / inserted / norm / custom /
@@ -84,6 +86,60 @@ final class PipelineMetrics(
       if (!inputRps.isNaN && !inputRps.isInfinite) lastInputRps = inputRps
       if (!procRps.isNaN && !procRps.isInfinite) lastProcRps = procRps
     }
+  }
+
+  // ---- per-batch phases and per-table totals, from the commit
+  // messages (ingest split into decode-and-write, commit, rotate
+  // check, runner and manifest) ----
+  private val Phases = Seq("decode_write", "commit", "rotate_check",
+    "runner", "manifest")
+  private val lastPhaseNs = new Array[Long](Phases.length)
+  private val totalPhaseNs = new Array[Long](Phases.length)
+  private var batchesCommitted = 0L
+  private var pendingRotationNs = (0L, 0L) // runner, manifest
+  private val tableTotals =
+    scala.collection.mutable.LinkedHashMap[String, TableStats]()
+
+  /** One segment closed: its runner and manifest time count toward
+    * the batch whose rotation check closed it. */
+  def recordRotation(runnerNs: Long, manifestNs: Long): Unit = synchronized {
+    pendingRotationNs = (pendingRotationNs._1 + runnerNs,
+      pendingRotationNs._2 + manifestNs)
+  }
+
+  /** One batch through the sink: phase times and the committed
+    * per-table rows and bytes (empty for a discarded replay). The
+    * rotate-check time excludes the runner and manifest time of a
+    * rotation it triggered. */
+  def recordCommit(tables: Map[String, TableStats],
+      writeNs: Long, commitNs: Long, rotateNs: Long): Unit = synchronized {
+    val (runnerNs, manifestNs) = pendingRotationNs
+    pendingRotationNs = (0L, 0L)
+    val ns = Array(writeNs, commitNs,
+      math.max(0L, rotateNs - runnerNs - manifestNs), runnerNs, manifestNs)
+    ns.indices.foreach { i =>
+      lastPhaseNs(i) = ns(i); totalPhaseNs(i) += ns(i)
+    }
+    batchesCommitted += 1
+    tables.toSeq.sortBy(_._1).foreach { case (t, s) =>
+      val prev = tableTotals.getOrElse(t, TableStats(0L, 0L))
+      tableTotals(t) = TableStats(prev.rows + s.rows, prev.bytes + s.bytes)
+    }
+  }
+
+  private def phaseFields: Seq[(String, String)] = synchronized {
+    def ms(a: Array[Long]) = Phases.indices
+      .map(i => f""""${Phases(i)}": ${a(i) / 1e6}%.1f""")
+      .mkString("{", ", ", "}")
+    def per(f: TableStats => Long) = tableTotals
+      .map { case (t, s) => s""""$t": ${f(s)}""" }.mkString("{", ", ", "}")
+    if (batchesCommitted == 0) Nil
+    else Seq(
+      "batches_committed" -> batchesCommitted.toString,
+      "last_batch_ms" -> ms(lastPhaseNs),
+      "total_batch_ms" -> ms(totalPhaseNs),
+      "table_rows" -> per(_.rows),
+      "table_bytes" -> per(_.bytes))
   }
 
   /** Whether any micro-batch progress has been observed. */
@@ -185,7 +241,7 @@ final class PipelineMetrics(
         }
         ds.map(avg => "file_avg_duration" ->
           ("\"" + goDuration(Duration.ofMillis(avg.toLong)) + "\""))
-      }
+      } ++ phaseFields
     fields.map { case (k, v) => s""""$k": $v""" }
       .mkString("{\n  ", ",\n  ", "\n}")
   }
@@ -243,6 +299,10 @@ final class PipelineMetrics(
       lastBatchId = -1; lastBatchDurMs = -1
       lastInputRps = 0.0; lastProcRps = 0.0
       lastQueueBehind = -1
+      java.util.Arrays.fill(lastPhaseNs, 0L)
+      java.util.Arrays.fill(totalPhaseNs, 0L)
+      batchesCommitted = 0L; pendingRotationNs = (0L, 0L)
+      tableTotals.clear()
     }
     samples.clear()
   }

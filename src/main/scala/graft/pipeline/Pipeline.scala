@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.StructType
 import graft.normalize.{Normalizer, NormalizerSpec}
 import graft.ops.{CustomTransform, Stages}
 import graft.runner.SegmentRunner
-import graft.sink.{RotatingSegmentSink, RotationPolicy, SegmentInfo}
+import graft.sink.{RotatingSegmentSink, RotationPolicy, SegmentDataWriter,
+  SegmentInfo}
 import graft.sources.MessageSource
 
 /** Decode outcomes — parity with the reference's decode-error routing
@@ -79,12 +80,23 @@ final case class PipelineConfig(
 
 /** O1 — the orchestrator/pipeline driver
   * (/root/reference/quacfka.go:218-257), Spark-native: one streaming
-  * query source → munge → foreachBatch{decode once; append custom,
-  * norm, raw; rotate; run segment SQL}. The reference's three
-  * channel-decoupled thread pools collapse into Spark stages — a
-  * map-only pipeline stays fused in a single whole-stage-codegen span
-  * per micro-batch (no queue hand-offs), and sink parallelism is
-  * partition parallelism.
+  * query source → munge → foreachBatch{decode once; stage custom,
+  * norm, raw and dead letters; commit; rotate; run segment SQL}. The
+  * reference's three channel-decoupled thread pools collapse into
+  * Spark stages: each micro-batch is ONE job whose tasks decode their
+  * partition once and stream the raw row, its normalized rows and any
+  * dead letter into per-table staged parquet parts (the reference
+  * likewise decodes once and fans the Record pair out to pooled
+  * appenders, proto.go:148-156, duck.go:431-546). The driver then
+  * commits the parts through [[RotatingSegmentSink.commit]], keyed by
+  * the query's persistent id and the batch id, so a micro-batch the
+  * engine re-runs after a crash lands exactly once. Record counts,
+  * per-table rows and bytes and the rotation size come from the
+  * tasks' commit messages; no count job, no listing.
+  *
+  * Custom transforms are arbitrary `DataFrame => DataFrame`, so each
+  * keeps a job of its own over the decoded batch, cached only then; it
+  * stages and commits with the rest of the batch.
   */
 final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
 
@@ -98,6 +110,10 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
 
   val sink = new RotatingSegmentSink(spark, config.outputDir,
     config.pathPrefix, config.rotation, config.runner, Some(metrics))
+
+  /** Commit key of batches fed to [[processBatch]] directly, outside a
+    * streaming query. */
+  private val directId = java.util.UUID.randomUUID().toString
 
   @volatile private var query: Option[StreamingQuery] = None
   @volatile private var closed = false
@@ -117,66 +133,82 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
 
   /** Process one micro-batch (also callable on a batch DataFrame — the
     * reference's stage-skipping lets users feed channels directly,
-    * quacfka.go:262-283; this is the Spark analog). */
-  def processBatch(batch: DataFrame): Unit = try {
+    * quacfka.go:262-283; this is the Spark analog). Inside the
+    * streaming query the commit key is the query's persistent id;
+    * called directly, it is this pipeline's own id, so a `batchId`
+    * passed twice is a replay and commits nothing the second time. */
+  def processBatch(batch: DataFrame, batchId: Long): Unit = try {
+    val queryId = Option(spark.sparkContext.getLocalProperty(
+      "sql.streaming.queryId")).getOrElse(directId)
+    val staging = sink.stagingDir(queryId, batchId)
+    val t0 = System.nanoTime()
     // Wire-level stats (S7 byte counter + consumed count) ride the
-    // decode scan as observe() named metrics — ONE source scan per
-    // micro-batch. (Round 1-2 ran a separate agg().head() over the
-    // wire bytes first: a 2× source-read amplification, the single
-    // worst cost in the pipeline path at 100 TB.)
-    val obs = org.apache.spark.sql.Observation()
-    val observed = batch.observe(obs,
+    // decode scan as observed metrics — ONE source scan per batch.
+    val observed = batch.observe("graft_wire",
       count(lit(1)).as("consumed"),
       sum(length(col("value"))).as("bytes"))
-
     val munged = config.munger.fold(observed)(m => Stages.munge(m)(observed))
-    // Decode ONCE: cache the decoded frame so good/dead routing and
-    // every sink table read the parse result, not re-parse the wire
-    // bytes (the reference likewise decodes once per message and fans
-    // out the Record pair, proto.go:148-156).
-    val decodedAll = Stages.customFields(config.customFields)(
-      config.decode(munged)).persist()
-    val (good, dead) =
-      if (decodedAll.columns.contains("_corrupt"))
-        Stages.routeErrors(decodedAll)
-      else (decodedAll, null)
+    val decoded = Stages.customFields(config.customFields)(
+      config.decode(munged))
+    val hasCorrupt = decoded.columns.contains("_corrupt")
+    val good = if (hasCorrupt) col("_corrupt").isNull else lit(true)
+    val cached = config.customTransforms.nonEmpty
+    val decodedAll = (if (cached) decoded.persist() else decoded)
+      .observe("graft_decode",
+        sum(when(good, 1L).otherwise(0L)).as("good"),
+        sum(when(good, 0L).otherwise(1L)).as("dead"))
 
     try {
-      // This count materializes the cache — the one pass over the
-      // source — and thereby completes the observation.
-      val goodN = good.count()
-      val stats = obs.get
-      val consumed = stats("consumed").asInstanceOf[Long]
-      metrics.messagesConsumed.addAndGet(consumed)
-      Option(stats("bytes")).foreach(b =>
-        metrics.bytesProcessed.addAndGet(b.asInstanceOf[Long]))
-      metrics.recordsProcessed.addAndGet(goodN)
-      var deadN = 0L
-      if (dead != null) {
-        deadN = config.deadLetterTable
-          .map(t => sink.append(t, dead))
-          .getOrElse(dead.count())
-        metrics.decodeErrors.addAndGet(deadN)
-      }
-      metrics.catchUpSkips.addAndGet(math.max(0L, consumed - goodN - deadN))
-
       // Ingest order parity: custom tables, then norm, then raw
-      // (/root/reference/duck.go:353-371,473-518).
-      config.customTransforms.foreach { ct =>
+      // (/root/reference/duck.go:353-371,473-518); all of them become
+      // visible together at the commit.
+      val goodRows = decodedAll.where(good).drop("_corrupt")
+      val customJobs = config.customTransforms.map { ct =>
+        val out = ct.fn(goodRows)
+        out.select(struct(out.columns.map(c => out(c)).toIndexedSeq: _*)
+          .as(ct.destinationTable))
+      }
+      val fields = decodedAll.columns.filterNot(_ == "_corrupt").map(col)
+      val routed = decodedAll.select((
+        config.normalizer.map(spec => when(good,
+          Normalizer.rows(decodedAll.schema, spec))
+          .as(s"${config.destTable}_norm")).toSeq ++
+        (if (config.ingestRaw)
+          Seq(when(good, struct(fields.toIndexedSeq: _*)).as(config.destTable))
+        else Nil) ++
+        config.deadLetterTable.filter(_ => hasCorrupt).map(t =>
+          when(!good, struct(decodedAll.columns.map(col).toIndexedSeq: _*))
+            .as(t)).toSeq): _*)
+      val messages = (customJobs :+ routed)
+        .flatMap(SegmentDataWriter.stage(_, staging))
+      val observedAll = (customJobs :+ routed)
+        .flatMap(_.queryExecution.observedMetrics).toMap
+      val t1 = System.nanoTime()
+      val committed = sink.commit(queryId, batchId, messages)
+      val t2 = System.nanoTime()
+      committed.foreach { stats =>
+        val wire = observedAll("graft_wire")
+        val routing = observedAll("graft_decode")
+        val consumed = wire.getLong(0)
+        val goodN = Option(routing.get(0)).fold(0L)(_.asInstanceOf[Long])
+        val deadN = Option(routing.get(1)).fold(0L)(_.asInstanceOf[Long])
+        def rows(t: String) = stats.get(t).fold(0L)(_.rows)
+        metrics.messagesConsumed.addAndGet(consumed)
+        Option(wire.get(1)).foreach(b =>
+          metrics.bytesProcessed.addAndGet(b.asInstanceOf[Long]))
+        metrics.recordsProcessed.addAndGet(goodN)
+        metrics.decodeErrors.addAndGet(deadN)
+        metrics.catchUpSkips.addAndGet(math.max(0L, consumed - goodN - deadN))
         metrics.customRecordsInserted.addAndGet(
-          sink.append(ct.destinationTable, ct.fn(good)))
-      }
-      config.normalizer.foreach { spec =>
-        metrics.normRecordsInserted.addAndGet(
-          sink.append(s"${config.destTable}_norm",
-            Normalizer.normalize(good.drop("_corrupt"), spec)))
-      }
-      if (config.ingestRaw) {
-        metrics.recordsInserted.addAndGet(
-          sink.append(config.destTable, good))
+          config.customTransforms.map(ct => rows(ct.destinationTable)).sum)
+        metrics.normRecordsInserted.addAndGet(rows(s"${config.destTable}_norm"))
+        metrics.recordsInserted.addAndGet(rows(config.destTable))
       }
       sink.maybeRotate()
-    } finally decodedAll.unpersist()
+      metrics.recordCommit(committed.getOrElse(Map.empty),
+        writeNs = t1 - t0, commitNs = t2 - t1,
+        rotateNs = System.nanoTime() - t2)
+    } finally if (cached) decoded.unpersist()
   } catch {
     case t: Throwable => metrics.recordError(t); throw t
   }
@@ -187,7 +219,7 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
     val src = config.source.stream(spark)
     var w = src.writeStream
       .queryName(s"graft-${config.destTable}")
-      .foreachBatch { (batch: DataFrame, _: Long) => processBatch(batch) }
+      .foreachBatch { (batch: DataFrame, id: Long) => processBatch(batch, id) }
     config.trigger.foreach(t => w = w.trigger(t))
     config.checkpointDir.foreach(d => w = w.option("checkpointLocation", d))
     spark.streams.addListener(progressListener)

@@ -329,7 +329,7 @@ object OperatorQueries {
           org.apache.spark.sql.types.LongType)))),
       rotation = RotationPolicy(thresholdMB = 0, durationSec = 100000,
         clamp = false)))
-    pipe.processBatch(msgs)
+    pipe.processBatch(msgs, 0L)
     pipe.close()
     s.read.parquet(s"$root/out/_manifest")
       .select("seg_index", "size_mb", "tables")

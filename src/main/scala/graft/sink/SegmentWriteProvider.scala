@@ -4,10 +4,9 @@ import java.util.{Map => JMap}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,20 +28,14 @@ import org.apache.spark.util.SerializableConfiguration
   * verbatim, so naming/clamps/manifest/runner parity is by
   * construction, suite-pinned).
   *
-  * Two-phase commit: tasks write to `baseDir/.staging/e<epoch>/`
-  * (dot-prefixed — invisible to readers), the epoch commit renames
-  * each file to the DETERMINISTIC name
-  * `<segment>/<table>/part-e<epoch>-p<partition>.parquet` (stale
-  * target deleted first, rename return CHECKED — the CompactSwap
-  * rule) and then drops an `_epochs/e<N>` marker. A replayed epoch
-  * whose marker exists is discarded without re-appending
-  * (exactly-once under the engine's replay contract, suite-pinned);
-  * a crash in the middle of the rename loop can leave already-moved
-  * files that a replay re-merges into the THEN-current segment under
-  * the same deterministic names — duplicates only if rotation
-  * happened in between, the same at-least-once residue the
-  * foreachBatch append path has always had, now narrowed to the
-  * rename window. Rename is a metadata op on HDFS-likes; on S3-likes
+  * Each epoch commits through [[RotatingSegmentSink.commit]], the
+  * routine the pipeline also uses, keyed by the query's persistent id
+  * (`LogicalWriteInfo.queryId`) and the epoch: renames to
+  * deterministic part names, then an `_epochs/<query>/e<N>` marker; a
+  * replayed epoch whose marker exists is discarded, and the parts of a
+  * crash before the marker are overwritten by the replay under the
+  * same names, or deleted first by a restarted driver's recovery
+  * (exactly-once under the engine's replay contract, suite-pinned). Rename is a metadata op on HDFS-likes; on S3-likes
   * it copies — there, point `path` at a rename-capable store or
   * accept the copy (the manifest, not listing, is the read contract).
   *
@@ -82,7 +75,7 @@ private[sink] class SegmentWriteTable(baseDir: String,
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite =
-          new SegmentStreamingWrite(baseDir, info.schema(),
+          new SegmentStreamingWrite(baseDir, info.schema(), info.queryId(),
             table = Option(opts.get("table")).getOrElse("events"),
             prefix = Option(opts.get("prefix")).getOrElse("seg"),
             policy = RotationPolicy(
@@ -98,171 +91,72 @@ private[sink] class SegmentWriteTable(baseDir: String,
     }
 }
 
-private[sink] case class SegmentCommitMessage(partitionId: Int,
-    stagedPath: String, rows: Long) extends WriterCommitMessage
-
-/** Driver-side handle registry for the DSv2 segment sink: Spark
-  * constructs [[SegmentStreamingWrite]] internally (inside
-  * `newWriteBuilder`), so without this no caller could reach the
-  * instance to close the LAST open segment — data below the rotation
-  * threshold at `query.stop()` would exist on disk but never reach
-  * the manifest, invisible under the documented manifest read
-  * contract (round-13 review finding). After stopping the query,
-  * call `SegmentWrites.finalRotate(baseDir)` — the DSv2 twin of
-  * [[graft.pipeline.Pipeline.close]]'s final partial-segment emit.
-  * Keyed by base dir, latest write wins (a restarted query's fresh
-  * instance owns the open segment). */
+/** Driver-side sink registry for the DSv2 segment sink. Spark builds
+  * a [[SegmentStreamingWrite]] per micro-batch, inside
+  * `newWriteBuilder`; the driver-side state — open segment, rotation
+  * clock, manifest — lives here instead, one [[RotatingSegmentSink]]
+  * per base dir (one writer per dir), made by the first write after
+  * the last `finalRotate`. After stopping the query, call
+  * `SegmentWrites.finalRotate(baseDir)` — the DSv2 twin of
+  * [[graft.pipeline.Pipeline.close]]'s final partial-segment emit —
+  * so rows below the rotation threshold reach the manifest (the read
+  * contract); a later run's recovery closes it otherwise. */
 object SegmentWrites {
-  // ALL instances per dir: the engine may construct the StreamingWrite
-  // more than once per query (planning vs execution), and only the
-  // instance that actually received commits holds the open segment —
-  // a last-wins slot could point at an inert twin
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.Set[SegmentStreamingWrite]]()
+  private val sinks =
+    new java.util.concurrent.ConcurrentHashMap[String, RotatingSegmentSink]()
 
-  private[sink] def register(baseDir: String,
-      w: SegmentStreamingWrite): Unit = {
-    registry.computeIfAbsent(baseDir,
-      _ => java.util.concurrent.ConcurrentHashMap.newKeySet()).add(w)
-    ()
-  }
+  private[sink] def sink(baseDir: String,
+      make: => RotatingSegmentSink): RotatingSegmentSink =
+    sinks.computeIfAbsent(baseDir, _ => make)
 
-  /** Close and announce the open segment of the (stopped) streaming
-    * write on `baseDir`, if any registered instance has pending data —
-    * then DROP the dir's entry, so instances never outlive the
-    * stop→finalRotate cycle (ADVICE r13: an add-only registry leaked
-    * every restart's instance for the JVM lifetime, and a stale
-    * instance could re-announce an old open segment alongside the
-    * current one). If a query was restarted WITHOUT finalRotate in
-    * between, the prior run's pending instances are still registered
-    * here — their rotation at the next call announces real
-    * un-manifested rows (recovery, not duplication: each instance
-    * rotates its own segment exactly once). */
-  def finalRotate(baseDir: String): Option[SegmentInfo] = {
-    import scala.jdk.CollectionConverters._
-    val dropped = Option(registry.remove(baseDir))
-    dropped.toSeq
-      .flatMap(_.asScala.toSeq)
-      .flatMap(_.finalRotate())
-      .headOption
-  }
+  /** Close and announce the open segment on `baseDir`, if it holds
+    * rows, and drop the dir's sink. */
+  def finalRotate(baseDir: String): Option[SegmentInfo] =
+    Option(sinks.remove(baseDir)).filter(_.hasPendingWrites).map(_.rotate())
 
   private[sink] def registeredCount(baseDir: String): Int =
-    Option(registry.get(baseDir)).map(_.size).getOrElse(0)
+    if (sinks.containsKey(baseDir)) 1 else 0
+
+  /** Drop the dir's sink unclosed — the driver state a crash loses. */
+  private[sink] def forget(baseDir: String): Unit = { sinks.remove(baseDir); () }
 }
 
 private[sink] class SegmentStreamingWrite(baseDir: String,
-    schema: StructType, table: String, prefix: String,
+    schema: StructType, queryId: String, table: String, prefix: String,
     policy: RotationPolicy, writeManifest: Boolean)
     extends StreamingWrite {
 
-  // driver-side state, exactly the library sink — rotation, naming,
-  // clamps, manifest and metrics semantics are shared by construction
-  private val spark = SparkSession.active
-  private val sink = new RotatingSegmentSink(spark, baseDir,
-    prefix = prefix, policy = policy, writeManifest = writeManifest)
-  SegmentWrites.register(baseDir, this)
+  // rotation, naming, clamps, manifest and commit are the library
+  // sink's, shared by construction
+  private lazy val sink = SegmentWrites.sink(baseDir,
+    new RotatingSegmentSink(SparkSession.active, baseDir, prefix = prefix,
+      policy = policy, writeManifest = writeManifest))
   private val confSer = new SerializableConfiguration(
-    spark.sessionState.newHadoopConf())
-
-  private def fs = new Path(baseDir).getFileSystem(confSer.value)
-  private def stagingDir(epochId: Long) =
-    new Path(s"$baseDir/.staging/e$epochId")
-  private def marker(epochId: Long) = new Path(s"$baseDir/_epochs/e$epochId")
+    SparkSession.active.sessionState.newHadoopConf())
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory =
-    new SegmentWriterFactory(s"$baseDir/.staging", schema, confSer)
+      : StreamingDataWriterFactory = {
+    val (dir, qid, tables, conf) =
+      (baseDir, queryId, Seq(table -> schema), confSer)
+    (partitionId: Int, taskId: Long, epochId: Long) =>
+      new SegmentDataWriter(RotatingSegmentSink.stagingDir(dir, qid, epochId),
+        partitionId, taskId, tables, conf.value)
+  }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage])
       : Unit = {
-    val f = fs
-    if (f.exists(marker(epochId))) { // replayed, already visible
-      f.delete(stagingDir(epochId), true)
-      return
-    }
-    val msgs = messages.collect {
-      case m: SegmentCommitMessage if m.rows > 0 => m }
-    if (msgs.nonEmpty) {
-      val segTable = new Path(s"${sink.currentSegment}/$table")
-      f.mkdirs(segTable)
-      msgs.foreach { m =>
-        val dest = new Path(segTable,
-          s"part-e$epochId-p${m.partitionId}.parquet")
-        if (f.exists(dest) && !f.delete(dest, false))
-          throw new java.io.IOException(
-            s"graft-binsegment: cannot clear stale part $dest")
-        if (!f.rename(new Path(m.stagedPath), dest))
-          throw new java.io.IOException(
-            s"graft-binsegment: rename ${m.stagedPath} -> $dest " +
-              "returned false; epoch left staged for retry")
-      }
-      sink.noteExternalAppend(table)
-    }
-    val mk = marker(epochId)
-    f.mkdirs(mk.getParent)
-    f.create(mk, true).close()
-    f.delete(stagingDir(epochId), true)
     // an all-empty epoch writes its marker but announces nothing:
     // maybeRotate never closes a segment with no writes
-    sink.maybeRotate()
+    if (sink.commit(queryId, epochId,
+        messages.toSeq.collect { case m: SegmentCommitMessage => m }).nonEmpty)
+      sink.maybeRotate()
     ()
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage])
       : Unit = {
-    fs.delete(stagingDir(epochId), true)
+    val p = new Path(RotatingSegmentSink.stagingDir(baseDir, queryId, epochId))
+    p.getFileSystem(confSer.value).delete(p, true)
     ()
   }
-
-  /** Force-close the open segment (shutdown parity with
-    * [[graft.pipeline.Pipeline.close]]). */
-  def finalRotate(): Option[SegmentInfo] =
-    if (sink.hasPendingWrites) Some(sink.rotate()) else None
-}
-
-private[sink] class SegmentWriterFactory(stagingBase: String,
-    schema: StructType, confSer: SerializableConfiguration)
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new SegmentDataWriter(
-      s"$stagingBase/e$epochId/p$partitionId-t$taskId.parquet",
-      partitionId, schema, confSer)
-}
-
-/** One appender task: streams rows into one staged parquet part file.
-  * The file is created lazily on the first row, so empty partitions
-  * cost nothing (the reference's appenders also no-op on empty
-  * batches). */
-private[sink] class SegmentDataWriter(stagedPath: String,
-    partitionId: Int, schema: StructType,
-    confSer: SerializableConfiguration) extends DataWriter[InternalRow] {
-  import org.apache.spark.sql.graftbridge.ParquetBridge
-
-  private var writer: org.apache.spark.sql.execution.datasources.parquet
-    .ParquetOutputWriter = _
-  private var rows = 0L
-
-  override def write(record: InternalRow): Unit = {
-    if (writer == null)
-      writer = ParquetBridge.writer(stagedPath, schema, confSer.value)
-    writer.write(record)
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) writer.close()
-    SegmentCommitMessage(partitionId, stagedPath, rows)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) writer.close()
-    val p = new Path(stagedPath)
-    val f = p.getFileSystem(confSer.value)
-    if (f.exists(p)) f.delete(p, false)
-    ()
-  }
-
-  override def close(): Unit = ()
 }

@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.TaskType
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetOutputFormat
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOutputWriter, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -18,13 +17,14 @@ import org.apache.spark.sql.types.StructType
 object ParquetBridge {
 
   /** A row writer at `path` (one part file) for a flat or nested
-    * `schema`. Caller must `close()` to finalize the footer. */
+    * `schema`, written all-nullable as `df.write.parquet` does. Caller
+    * must `close()` to finalize the footer. */
   def writer(path: String, schema: StructType, hadoopConf: Configuration)
       : ParquetOutputWriter = {
     val conf = new Configuration(hadoopConf)
     conf.set(ParquetOutputFormat.WRITE_SUPPORT_CLASS,
       classOf[ParquetWriteSupport].getName)
-    ParquetWriteSupport.setSchema(schema, conf)
+    ParquetWriteSupport.setSchema(schema.asNullable, conf)
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
       SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
@@ -39,6 +39,4 @@ object ParquetBridge {
     new ParquetOutputWriter(path,
       new TaskAttemptContextImpl(conf, attempt))
   }
-
-  def write(w: ParquetOutputWriter, row: InternalRow): Unit = w.write(row)
 }

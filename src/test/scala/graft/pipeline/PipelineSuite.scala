@@ -328,12 +328,50 @@ class PipelineSuite extends SparkSpec {
       while (recordsRead.get != last && spins < 50) {
         last = recordsRead.get; spins += 1; Thread.sleep(100)
       }
-      // InputMetrics also counts persisted-block reads (a handful of
-      // columnar-batch units per post-decode job), so allow slack well
-      // under the 2n a second source scan would add.
-      assert(recordsRead.get >= n && recordsRead.get < n * 3 / 2,
+      // no cache and one job per batch: the source rows, exactly once
+      assert(recordsRead.get == n,
         s"source rows read ${recordsRead.get} vs $n — second scan regressed")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a non-rotating micro-batch writing raw, norm and dead letters " +
+      "runs one Spark job") {
+    val root = Files.createTempDirectory("graft-onejob").toString
+    val good = (0L until 40L).map(i =>
+      (s"""{"event_id":$i,"user_id":${i % 7},"event_type":"t${i % 3}",""" +
+        s""""value":${i * 0.5}}""").getBytes("UTF-8"))
+    val bad = Seq.fill(5)("not-json".getBytes("UTF-8"))
+    val batch = (good ++ bad).map(b => (b, new java.sql.Timestamp(0L)))
+      .toDF("value", "timestamp").repartition(3)
+    val pipe = Pipeline(spark, PipelineConfig(
+      source = DataFrameSource(batch),
+      outputDir = s"$root/out",
+      destTable = "events_raw",
+      decode = Decoders.json(payloadSchema),
+      deadLetterTable = Some("dead"),
+      normalizer = Some(NormalizerSpec(Seq("event_id", "event_type"),
+        Seq("event_id", "kind"))),
+      rotation = RotationPolicy(thresholdMB = 1000, durationSec = 100000,
+        clamp = false)))
+    val staged = batch.localCheckpoint() // the shuffle stays out of the count
+    assert(countJobs(pipe.processBatch(staged, 0L)) == 1)
+    assert(pipe.closedSegments().isEmpty, "the batch rotated")
+    pipe.close()
+    val seg = pipe.closedSegments().map(_.path)
+    assert(seg.length == 1)
+    Seq("events_raw" -> 40L, "events_raw_norm" -> 40L, "dead" -> 5L).foreach {
+      case (t, n) =>
+        assert(spark.read.parquet(s"${seg.head}/$t").count() == n, t)
+    }
+    val m = pipe.metrics
+    assert(m.recordsInserted.get == 40 && m.normRecordsInserted.get == 40 &&
+      m.decodeErrors.get == 5 && m.conservationHolds)
+    // per-batch phases and per-table rows join the parity report
+    val r = m.report()
+    Seq("batches_committed", "last_batch_ms", "total_batch_ms", "table_rows",
+      "table_bytes", "decode_write", "rotate_check", "runner", "manifest")
+      .foreach(k => assert(r.contains("\"" + k + "\""), k))
+    assert(r.contains("\"dead\": 5"), r)
   }
 
   test("restart reopens a closed pipeline and resumes offsets (RestartDuck parity)") {
@@ -423,7 +461,7 @@ class PipelineSuite extends SparkSpec {
         munger = Some(Stages.confluentStrip),
         decode = decode,
         deadLetterTable = Some("dead")))
-      pipe.processBatch(batch)
+      pipe.processBatch(batch, 0L)
       pipe.close()
       pipe
     }

@@ -542,7 +542,7 @@ class ProtoCodecSuite extends SparkSpec {
         destTable = "proto",
         decode = decode,
         deadLetterTable = Some("dead")))
-      pipe.processBatch(batch)
+      pipe.processBatch(batch, 0L)
       pipe.close()
       assert(pipe.metrics.recordsProcessed.get == 1, name)
       assert(pipe.metrics.decodeErrors.get == 1, name)

@@ -95,6 +95,99 @@ class SegmentWriteSuite extends SparkSpec {
       "staging dirs left behind")
   }
 
+  /** JSON frames `{"id": i}` for `ids`, one parquet file per call. */
+  private def writeIds(dir: String, ids: Seq[Long]): Unit =
+    ids.toDF("id").select(to_json(struct(col("id"))).cast("binary").as("value"),
+        current_timestamp().as("timestamp"))
+      .coalesce(1).write.mode("append").parquet(dir)
+
+  private val idSchema = StructType(Seq(StructField("id", LongType)))
+
+  /** An id stream from `msgDir` into graft-binsegment at `out`. */
+  private def startIds(msgDir: String, out: String, ckpt: String) =
+    Stages.decodeJson(idSchema)(FileBinarySource(msgDir).stream(spark))
+      .where(col("_corrupt").isNull).select("id")
+      .writeStream
+      .format("graft-binsegment")
+      .option("path", out)
+      .option("table", "t")
+      .option("thresholdMB", "100000")
+      .option("durationSec", "100000")
+      .option("clamp", "false")
+      .option("checkpointLocation", ckpt)
+      .start()
+
+  /** Ids visible through the manifest (the read contract). */
+  private def manifestIds(out: String): Seq[Long] = {
+    val segs = spark.read.parquet(s"$out/_manifest")
+      .select("path").as[String].collect().toSeq
+    assert(segs.distinct == segs, s"manifest lists a segment twice: $segs")
+    spark.read.parquet(segs.map(_ + "/t").filter(new java.io.File(_).exists()): _*)
+      .select("id").as[Long].collect().sorted.toSeq
+  }
+
+  test("a new query on a fresh checkpoint over an existing path keeps " +
+      "its rows; a replay on the same checkpoint is still a no-op") {
+    val root = Files.createTempDirectory("graft-dsv2twoq").toString
+    val out = s"$root/out"
+    writeIds(s"$root/msgsA", 0L until 30L)
+    val a = startIds(s"$root/msgsA", out, s"$root/ckptA")
+    a.processAllAvailable()
+    a.stop() // A's segment stays open: B's first commit closes it
+
+    // B: epochs 0, 1, ... again, under B's own query id
+    writeIds(s"$root/msgsB", 100L until 120L)
+    val ckptB = s"$root/ckptB"
+    val replayed = graft.streaming.StreamReplay.rerunLastBatch(ckptB) {
+      startIds(s"$root/msgsB", out, ckptB)
+    }
+    assert(replayed == 0L)
+    SegmentWrites.finalRotate(out)
+    assert(manifestIds(out) == (0L until 30L) ++ (100L until 120L),
+      "B's rows dropped as replays of A, or the replay re-appended")
+  }
+
+  test("epochs of one query share the open segment until it rotates") {
+    // Spark builds a StreamingWrite per micro-batch; the segment, its
+    // size and its age belong to the base dir, not to one epoch
+    val root = Files.createTempDirectory("graft-dsv2epochs").toString
+    val (out, msgs) = (s"$root/out", s"$root/msgs")
+    writeIds(msgs, 0L until 10L)
+    val q = startIds(msgs, out, s"$root/ckpt")
+    q.processAllAvailable()
+    (1 to 2).foreach { k =>
+      writeIds(msgs, (k * 10L) until (k * 10L + 10L))
+      q.processAllAvailable()
+    }
+    q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    SegmentWrites.finalRotate(out)
+    assert(spark.read.parquet(s"$out/_manifest").count() == 1,
+      "each epoch opened a segment of its own")
+    assert(manifestIds(out) == (0L until 30L))
+  }
+
+  for (point <- Seq("renamed", "marked"))
+    test(s"an epoch stopped at '$point' lands exactly once after a restart " +
+        "from the checkpoint") {
+      val root = Files.createTempDirectory("graft-dsv2crash").toString
+      val (out, msgs, ckpt) = (s"$root/out", s"$root/msgs", s"$root/ckpt")
+      writeIds(msgs, 0L until 25L)
+      val q1 = startIds(msgs, out, ckpt)
+      q1.processAllAvailable()
+      writeIds(msgs, 25L until 60L)
+      RotatingSegmentSink.crashAt.put(out, point)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q1.processAllAvailable())
+      assert(!RotatingSegmentSink.crashAt.containsKey(out))
+      SegmentWrites.forget(out) // the driver process is gone
+      val q2 = startIds(msgs, out, ckpt)
+      q2.processAllAvailable()
+      q2.stop()
+      SegmentWrites.finalRotate(out)
+      assert(manifestIds(out) == (0L until 60L))
+    }
+
   test("finalRotate reaches the engine-constructed write: the tail " +
       "segment below threshold gets announced after query.stop()") {
     // review finding: Spark builds SegmentStreamingWrite internally,
@@ -145,7 +238,7 @@ class SegmentWriteSuite extends SparkSpec {
     val out = s"$root/out"
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("name", StringType)))
-    val write = new SegmentStreamingWrite(out, schema,
+    val write = new SegmentStreamingWrite(out, schema, queryId = "q1",
       table = "t", prefix = "seg",
       policy = RotationPolicy(thresholdMB = 1000000, durationSec = 1000000,
         clamp = false),
@@ -175,7 +268,7 @@ class SegmentWriteSuite extends SparkSpec {
     // the re-run a no-op — rows NOT doubled, staging cleaned
     write.commit(0L, Array(runEpoch(0L, Seq(1L, 2L))))
     assert(visibleIds() == Seq(1L, 2L), "replayed epoch re-appended")
-    assert(!new java.io.File(s"$out/.staging/e0").exists())
+    assert(!new java.io.File(s"$out/.staging/q1-e0").exists())
     // a fresh epoch still lands
     write.commit(1L, Array(runEpoch(1L, Seq(3L))))
     assert(visibleIds() == Seq(1L, 2L, 3L))
@@ -184,14 +277,15 @@ class SegmentWriteSuite extends SparkSpec {
     // rename-returns-false hits our checked throw), never silently
     // drop the epoch
     val err = intercept[java.io.IOException](write.commit(2L,
-      Array(SegmentCommitMessage(0, s"$out/.staging/e2/ghost.parquet", 5L))))
+      Array(SegmentCommitMessage(0, Seq(StagedPart("t",
+        s"$out/.staging/q1-e2/t/ghost.parquet", 5L, 100L))))))
     assert(err.getMessage.contains("ghost.parquet"),
       s"unactionable message: ${err.getMessage}")
-    assert(!new java.io.File(s"$out/_epochs/e2").exists(),
+    assert(!new java.io.File(s"$out/_epochs/q1/e2").exists(),
       "failed epoch must not be marked committed")
     // empty epochs write markers but never announce empty segments
-    write.commit(3L, Array(SegmentCommitMessage(0, "unused", 0L)))
-    assert(new java.io.File(s"$out/_epochs/e3").exists())
+    write.commit(3L, Array(SegmentCommitMessage(0, Nil)))
+    assert(new java.io.File(s"$out/_epochs/q1/e3").exists())
     val manifested = new java.io.File(s"$out/_manifest")
     assert(!manifested.exists(), "rotation fired before any threshold")
   }
