@@ -90,36 +90,37 @@ final class PipelineMetrics(
 
   // ---- per-batch phases and per-table totals, from the commit
   // messages (ingest split into decode-and-write, commit, rotate
-  // check, runner and manifest) ----
+  // check, runner and manifest), and the waits for a segment close ----
   private val Phases = Seq("decode_write", "commit", "rotate_check",
     "runner", "manifest")
   private val lastPhaseNs = new Array[Long](Phases.length)
   private val totalPhaseNs = new Array[Long](Phases.length)
   private var batchesCommitted = 0L
-  private var pendingRotationNs = (0L, 0L) // runner, manifest
+  private var closeWaitNs = 0L
   private val tableTotals =
     scala.collection.mutable.LinkedHashMap[String, TableStats]()
 
-  /** One segment closed: its runner and manifest time count toward
-    * the batch whose rotation check closed it. */
-  def recordRotation(runnerNs: Long, manifestNs: Long): Unit = synchronized {
-    pendingRotationNs = (pendingRotationNs._1 + runnerNs,
-      pendingRotationNs._2 + manifestNs)
+  private def addPhase(i: Int, ns: Long): Unit = {
+    lastPhaseNs(i) = ns; totalPhaseNs(i) += ns
   }
+
+  /** One segment closed, on the sink's close thread: its runner and
+    * manifest time ("last" is the last close's). */
+  def recordRotation(runnerNs: Long, manifestNs: Long): Unit = synchronized {
+    addPhase(3, runnerNs); addPhase(4, manifestNs)
+  }
+
+  /** A rotation or a pipeline close waited `ns` for an earlier segment
+    * close to finish (the runner was slower than the segments filled). */
+  def recordCloseWait(ns: Long): Unit = synchronized { closeWaitNs += ns }
 
   /** One batch through the sink: phase times and the committed
     * per-table rows and bytes (empty for a discarded replay). The
-    * rotate-check time excludes the runner and manifest time of a
-    * rotation it triggered. */
+    * rotate-check time includes any wait for an earlier close, which
+    * `close_wait_ms` also counts. */
   def recordCommit(tables: Map[String, TableStats],
       writeNs: Long, commitNs: Long, rotateNs: Long): Unit = synchronized {
-    val (runnerNs, manifestNs) = pendingRotationNs
-    pendingRotationNs = (0L, 0L)
-    val ns = Array(writeNs, commitNs,
-      math.max(0L, rotateNs - runnerNs - manifestNs), runnerNs, manifestNs)
-    ns.indices.foreach { i =>
-      lastPhaseNs(i) = ns(i); totalPhaseNs(i) += ns(i)
-    }
+    addPhase(0, writeNs); addPhase(1, commitNs); addPhase(2, rotateNs)
     batchesCommitted += 1
     tables.toSeq.sortBy(_._1).foreach { case (t, s) =>
       val prev = tableTotals.getOrElse(t, TableStats(0L, 0L))
@@ -138,6 +139,7 @@ final class PipelineMetrics(
       "batches_committed" -> batchesCommitted.toString,
       "last_batch_ms" -> ms(lastPhaseNs),
       "total_batch_ms" -> ms(totalPhaseNs),
+      "close_wait_ms" -> f"${closeWaitNs / 1e6}%.1f",
       "table_rows" -> per(_.rows),
       "table_bytes" -> per(_.bytes))
   }
@@ -301,7 +303,7 @@ final class PipelineMetrics(
       lastQueueBehind = -1
       java.util.Arrays.fill(lastPhaseNs, 0L)
       java.util.Arrays.fill(totalPhaseNs, 0L)
-      batchesCommitted = 0L; pendingRotationNs = (0L, 0L)
+      batchesCommitted = 0L; closeWaitNs = 0L
       tableTotals.clear()
     }
     samples.clear()

@@ -97,6 +97,12 @@ final case class PipelineConfig(
   * Custom transforms are arbitrary `DataFrame => DataFrame`, so each
   * keeps a job of its own over the decoded batch, cached only then; it
   * stages and commits with the rest of the batch.
+  *
+  * A batch that crosses the rotation threshold hands the segment to the
+  * sink's background close and returns: the segment runner, manifest
+  * and announcement run on the close thread, in a clone of `spark`,
+  * while the next micro-batches commit. At most one close is in flight;
+  * [[close]] and [[closedSegments]] wait for it.
   */
 final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
 
@@ -138,8 +144,9 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
     * called directly, it is this pipeline's own id, so a `batchId`
     * passed twice is a replay and commits nothing the second time. */
   def processBatch(batch: DataFrame, batchId: Long): Unit = try {
-    val queryId = Option(spark.sparkContext.getLocalProperty(
-      "sql.streaming.queryId")).getOrElse(directId)
+    val streamId = Option(spark.sparkContext.getLocalProperty(
+      "sql.streaming.queryId"))
+    val queryId = streamId.getOrElse(directId)
     val staging = sink.stagingDir(queryId, batchId)
     val t0 = System.nanoTime()
     // Wire-level stats (S7 byte counter + consumed count) ride the
@@ -180,11 +187,12 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
           when(!good, struct(decodedAll.columns.map(col).toIndexedSeq: _*))
             .as(t)).toSeq): _*)
       val messages = (customJobs :+ routed)
-        .flatMap(SegmentDataWriter.stage(_, staging))
+        .flatMap(SegmentDataWriter.stage(_, staging, sink.taskConf))
       val observedAll = (customJobs :+ routed)
         .flatMap(_.queryExecution.observedMetrics).toMap
       val t1 = System.nanoTime()
-      val committed = sink.commit(queryId, batchId, messages)
+      val committed = sink.commit(queryId, batchId, messages,
+        keepMarkers = streamId.isEmpty)
       val t2 = System.nanoTime()
       committed.foreach { stats =>
         val wire = observedAll("graft_wire")
@@ -228,13 +236,15 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
     q
   }
 
-  /** Drain closed-segment announcements (DuckPaths parity). */
+  /** Drain closed-segment announcements (DuckPaths parity), after the
+    * close in flight finished. */
   def closedSegments(): Seq[SegmentInfo] = sink.closedSegments()
 
   def error: Option[Throwable] = metrics.error
 
   /** Stop + close final segment (Close parity, quacfka.go:202-216:
-    * final partial flush and last path emit). */
+    * final partial flush and last path emit). Returns once every
+    * segment close finished; a failed close is rethrown here. */
   def close(): Unit = synchronized {
     if (!closed) {
       query.foreach { q =>
@@ -245,7 +255,7 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
         q.stop()
       }
       spark.streams.removeListener(progressListener)
-      if (sink.hasPendingWrites) sink.rotate() // emit final partial segment
+      sink.finish() // emit the final partial segment; wait for every close
       metrics.markEnd()
       closed = true
     }

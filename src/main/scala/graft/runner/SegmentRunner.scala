@@ -2,6 +2,7 @@ package graft.runner
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Export sink for one per-segment statement — COPY-TO / EXPORT parity
@@ -43,6 +44,11 @@ object SegmentQuery {
   * duck.go:87-100); `deleteOnDone` removes the segment afterwards
   * (duck.go:122-132). Errors accumulate; first error is returned but
   * all statements are attempted (errors.Join parity, duck.go:59).
+  *
+  * Inside a pipeline the runner runs on the segment sink's close
+  * thread, while later micro-batches commit (see
+  * [[graft.sink.RotatingSegmentSink]]); `queryFunc` is called there,
+  * with the session clone [[run]] made.
   */
 final case class SegmentRunner(
     queries: Seq[SegmentQuery] = Nil,
@@ -57,11 +63,22 @@ final case class SegmentRunner(
       "deleteOnDone")
 
   /** Run against one closed segment. `tables` maps logical table name →
-    * parquet dir. Each table is registered as a temp view under its
-    * logical name for the duration of the run. `segmentDir` resolves
-    * the `${segment}` token in sink paths. */
+    * parquet dir. The run happens in a clone of `spark`
+    * ([[SessionBridge.inClone]]): it sees the caller's SQL conf, UDFs and
+    * temp views, and each table is a temp view under its logical name
+    * there only, so a caller's view of the same name is neither shadowed
+    * nor dropped, and a thread that uses `spark` meanwhile is not
+    * disturbed. Temp views the statements create are copied back to
+    * `spark` (a statement's effect lands where it did when it ran in the
+    * caller's session). `segmentDir` resolves the `${segment}` token in
+    * sink paths. */
   def run(spark: SparkSession, tables: Map[String, String],
-      segmentDir: Option[String] = None): Seq[Throwable] = {
+      segmentDir: Option[String] = None): Seq[Throwable] =
+    SessionBridge.inClone(spark, own = tables.keySet)(
+      runIn(_, tables, segmentDir))
+
+  private def runIn(spark: SparkSession, tables: Map[String, String],
+      segmentDir: Option[String]): Seq[Throwable] = {
     val errs = scala.collection.mutable.Buffer[Throwable]()
     val views = tables.flatMap { case (name, dir) =>
       try {
@@ -106,14 +123,13 @@ final case class SegmentRunner(
         catch { case t: Throwable => errs += t }
       }
     }
-    views.keys.foreach(spark.catalog.dropTempView)
     errs.toSeq
   }
 
   /** Delete a segment dir (used when `deleteOnDone`). */
   private[graft] def deleteSegment(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(p, true)
   }
 }

@@ -2,11 +2,13 @@ package graft.sink
 
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
@@ -68,18 +70,42 @@ final case class TableStats(rows: Long, bytes: Long)
   *
   * The segment's size is the sum of the committed bytes (the
   * reference's pragma_database_size probe, duck.go:564-593, without a
-  * listing per batch); size and age decide rotation. On rotation the
-  * segment runner executes its SQL against the closed segment, then the
-  * segment is announced on the path queue and in the `_manifest`
-  * parquet table, one file per segment named after it, so closing a
-  * segment twice lists it once.
+  * listing per batch); size and age decide rotation. A rotation hands
+  * the segment to a background close and opens the next segment at
+  * once, so the batch that crossed the threshold and the batches after
+  * it commit while the segment's SQL runs. The close — the one close
+  * routine — runs the segment runner against the closed segment, then
+  * writes its `_manifest` entry (one parquet file per segment, named
+  * after it, so closing a segment twice lists it once), prunes the
+  * epoch markers that can no longer match a replay, records metrics
+  * and announces the segment on the path queue (Q1 ordering parity:
+  * the runner fires after the segment's writes complete and before its
+  * announcement, duck.go:270-278).
+  *
+  * At most one close is in flight per sink, on a daemon thread of its
+  * own; closes finish in rotation order. The next rotation waits for
+  * the close before it, and so do [[finish]] and [[closedSegments]],
+  * so when the runner is slower than the segments fill up the pace
+  * falls back to a synchronous close and memory and disk stay bounded.
+  * The close thread inherits no Spark local properties: its jobs carry
+  * no streaming query's job group, execution id or batch id, so
+  * stopping the query does not cancel them. Runner errors are recorded
+  * in the metrics; any other failure of a close (the manifest write) is
+  * recorded and rethrown by the next commit, rotation or [[finish]].
+  *
+  * The Hadoop conf is built once per sink from the session (so
+  * session-set options such as `fs.<scheme>.impl` reach the sink) and
+  * broadcast once for the staging tasks.
   *
   * Crash recovery (one writer per `baseDir`): the first commit or
-  * close of a sink looks for segment dirs without a manifest entry. It
+  * close of a sink waits for any close in flight on the same dir in
+  * this JVM, then looks for segment dirs without a manifest entry. It
   * deletes their parts whose marker is missing — a batch that crashed
   * before its marker, which the engine replays — and closes each dir
-  * that still holds rows through the normal rotation path. A sink
-  * with `writeManifest = false` has no such record and skips recovery.
+  * that still holds rows through the close routine. A segment whose
+  * close was in flight at a crash has no manifest entry, so it is
+  * closed here. A sink with `writeManifest = false` has no such record
+  * and skips recovery.
   */
 final class RotatingSegmentSink(
     spark: SparkSession,
@@ -93,8 +119,11 @@ final class RotatingSegmentSink(
 
   private val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd_HH-mm-ss")
     .withZone(ZoneOffset.UTC)
-  private val fs: FileSystem =
-    new Path(baseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+  /** The sink's Hadoop conf for its staging tasks, broadcast once. */
+  private[graft] val taskConf: Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+  private val fs: FileSystem = new Path(baseDir).getFileSystem(hadoopConf)
   private val manifestDir = new Path(baseDir, "_manifest")
   private var segIndex = 0L
   private var segStartMs = System.currentTimeMillis()
@@ -108,6 +137,11 @@ final class RotatingSegmentSink(
   private var recovered = false
   private val closedQueue = new ConcurrentLinkedQueue[SegmentInfo]()
   private val tablesWritten = scala.collection.mutable.LinkedHashSet[String]()
+  // latest batch per query id committed into the open segment, for the
+  // marker pruning of its close (ids whose markers are kept excluded)
+  private val segEpochs = scala.collection.mutable.Map[String, Long]()
+  private val closing = new AtomicReference[Thread]()
+  private val closeFailure = new AtomicReference[(String, Throwable)]()
 
   private def newSegmentPath(): String = {
     def at(i: Long) =
@@ -116,15 +150,10 @@ final class RotatingSegmentSink(
     at(segIndex)
   }
 
-  /** Whether the open segment holds committed rows (after recovering
-    * a crashed run's segments). */
-  def hasPendingWrites: Boolean = synchronized {
-    recoverOnce()
-    tablesWritten.nonEmpty
-  }
-
-  /** Drain closed-segment announcements (DuckPaths parity). */
+  /** Drain closed-segment announcements (DuckPaths parity), after
+    * waiting for the close in flight. */
   def closedSegments(): Seq[SegmentInfo] = {
+    awaitClose()
     val out = scala.collection.mutable.Buffer[SegmentInfo]()
     var s = closedQueue.poll()
     while (s != null) { out += s; s = closedQueue.poll() }
@@ -142,10 +171,15 @@ final class RotatingSegmentSink(
     * segment exactly once. Returns per-table rows and bytes, or None
     * when the batch's marker exists (a replay: its staging is
     * discarded). A failed rename throws before the marker, leaving the
-    * batch to its replay. */
+    * batch to its replay. `keepMarkers` is for a caller that may repeat
+    * any earlier batch id (not a streaming query, which never re-runs a
+    * batch once the next one has started): its markers are never
+    * pruned. */
   def commit(queryId: String, batchId: Long,
-      messages: Seq[SegmentCommitMessage]): Option[Map[String, TableStats]] =
+      messages: Seq[SegmentCommitMessage],
+      keepMarkers: Boolean = false): Option[Map[String, TableStats]] =
     synchronized {
+      rethrowCloseFailure()
       recoverOnce()
       val mk = marker(queryId, batchId)
       val staging = new Path(stagingDir(queryId, batchId))
@@ -172,6 +206,8 @@ final class RotatingSegmentSink(
       fs.mkdirs(mk.getParent)
       fs.create(mk, true).close()
       crashPoint(baseDir, "marked")
+      if (!keepMarkers)
+        segEpochs(queryId) = math.max(batchId, segEpochs.getOrElse(queryId, batchId))
       fs.delete(staging, true)
       Some(stats)
     }
@@ -181,7 +217,8 @@ final class RotatingSegmentSink(
     * clause duck.go:421-429). A segment with no writes is never closed
     * (its runner would query tables that do not exist); such a check
     * restarts the age clock instead, so a segment's age counts from
-    * about its first write. */
+    * about its first write. A rotation hands the segment to the
+    * background close (waiting for the close before it) and returns. */
   def maybeRotate(): Option[SegmentInfo] = synchronized {
     if (tablesWritten.isEmpty) {
       segStartMs = System.currentTimeMillis()
@@ -194,46 +231,124 @@ final class RotatingSegmentSink(
     }
   }
 
-  /** Force-close the open segment (also used at pipeline shutdown —
-    * final path emit parity, duck.go:414-418). */
-  def rotate(): SegmentInfo = synchronized {
+  /** Close the open segment if it holds rows (the final partial
+    * segment emit at shutdown, duck.go:414-418) and wait for every
+    * close; rethrows a failed close. */
+  def finish(): Option[SegmentInfo] = synchronized {
     recoverOnce()
-    val info = close(current, segIndex, tablesWritten.toSeq, segBytes,
-      Some(System.currentTimeMillis() - segStartMs))
+    val info = if (tablesWritten.nonEmpty) Some(rotate()) else {
+      countWait(awaitClose()); None
+    }
+    awaitClose()
+    rethrowCloseFailure()
+    info
+  }
+
+  /** Wait for the close in flight, if any, and rethrow its failure —
+    * the DSv2 commit's wait for the close it started. */
+  private[sink] def awaitClosed(): Unit = { awaitClose(); rethrowCloseFailure() }
+
+  private def rotate(): SegmentInfo = {
+    val info = startClose(current, segIndex, tablesWritten.toSeq, segBytes,
+      Some(System.currentTimeMillis() - segStartMs), segEpochs.toMap)
     segIndex += 1
     segStartMs = System.currentTimeMillis()
     segBytes = 0L
     tablesWritten.clear()
+    segEpochs.clear()
     current = newSegmentPath()
     info
   }
 
-  /** Runner, metrics, announcement and manifest for one segment. */
-  private def close(path: String, index: Long, tables: Seq[String],
-      bytes: Long, ageMs: Option[Long]): SegmentInfo = {
+  /** Hand one segment to the background close, after waiting for the
+    * close before it. */
+  private def startClose(path: String, index: Long, tables: Seq[String],
+      bytes: Long, ageMs: Option[Long],
+      epochs: Map[String, Long]): SegmentInfo = {
+    val waitedNs = awaitClose()
+    if (waitedNs > 0) {
+      countWait(waitedNs)
+      log.info(f"segment sink $baseDir: the close of ${new Path(path).getName} " +
+        f"waited ${waitedNs / 1e6}%.0f ms for the close before it")
+    }
+    rethrowCloseFailure()
     val info = SegmentInfo(path, index, Instant.now(), bytes / MB, tables)
-    // Per-segment SQL before announcing (Q1 ordering parity: runner
-    // fires after writes complete, before rotation announce —
-    // /root/reference/duck.go:270-278).
-    val t0 = System.nanoTime()
-    runner.foreach { r =>
-      val errs = r.run(spark, tables.map(t => t -> s"$path/$t").toMap,
-        segmentDir = Some(path))
-      errs.headOption.foreach(e => metrics.foreach(_.recordError(e)))
-      if (r.deleteOnDone) r.deleteSegment(spark, path)
-    }
-    val t1 = System.nanoTime()
-    if (writeManifest) writeManifestRow(info)
-    val t2 = System.nanoTime()
-    metrics.foreach { m =>
-      m.filesClosed.incrementAndGet()
-      m.filesMB.addAndGet(info.sizeMB)
-      ageMs.foreach(m.recordFileDuration)
-      m.recordRotation(runnerNs = t1 - t0, manifestNs = t2 - t1)
-    }
-    closedQueue.add(info)
+    // no inherited thread-locals: a thread started inside a micro-batch
+    // would carry its job group, query id, batch id and execution id
+    val t = new Thread(null, () => close(info, ageMs, epochs),
+      s"graft-segment-close-${new Path(info.path).getName}", 0L, false)
+    t.setDaemon(true)
+    closing.set(t)
+    inFlight.put(baseDir, t)
+    t.start()
     info
   }
+
+  /** Wait for the close in flight, if any; the nanoseconds waited. */
+  private def awaitClose(): Long = {
+    val t = closing.get()
+    if (t == null) 0L
+    else {
+      val t0 = System.nanoTime()
+      t.join()
+      closing.compareAndSet(t, null)
+      System.nanoTime() - t0
+    }
+  }
+
+  private def countWait(ns: Long): Unit = metrics.foreach(_.recordCloseWait(ns))
+
+  private def rethrowCloseFailure(): Unit =
+    Option(closeFailure.getAndSet(null)).foreach { case (seg, t) =>
+      throw new java.io.IOException(s"segment sink: closing $seg failed; " +
+        "it has no manifest entry, so a restarted sink closes it again", t)
+    }
+
+  /** The one close routine, on the close thread: runner, manifest,
+    * marker pruning, metrics, announcement. */
+  private def close(info: SegmentInfo, ageMs: Option[Long],
+      epochs: Map[String, Long]): Unit =
+    try {
+      spark.sparkContext.setJobDescription(
+        s"graft segment close ${new Path(info.path).getName}")
+      crashPoint(baseDir, "closing")
+      val t0 = System.nanoTime()
+      runner.foreach { r =>
+        val errs = r.run(spark, info.tables.map(t => t -> s"${info.path}/$t").toMap,
+          segmentDir = Some(info.path))
+        errs.headOption.foreach(e => metrics.foreach(_.recordError(e)))
+        if (r.deleteOnDone) r.deleteSegment(spark, info.path)
+      }
+      val t1 = System.nanoTime()
+      if (writeManifest) writeManifestRow(info)
+      val t2 = System.nanoTime()
+      pruneMarkers(epochs)
+      metrics.foreach { m =>
+        m.filesClosed.incrementAndGet()
+        m.filesMB.addAndGet(info.sizeMB)
+        ageMs.foreach(m.recordFileDuration)
+        m.recordRotation(runnerNs = t1 - t0, manifestNs = t2 - t1)
+      }
+      closedQueue.add(info)
+    } catch {
+      case t: Throwable =>
+        metrics.foreach(_.recordError(t))
+        closeFailure.set(info.path -> t)
+    } finally inFlight.remove(baseDir, Thread.currentThread())
+
+  /** Delete each query's markers below its latest batch in the closed
+    * segment minus one: the engine never re-runs a batch once the next
+    * one has started. */
+  private def pruneMarkers(epochs: Map[String, Long]): Unit =
+    epochs.foreach { case (queryId, latest) =>
+      val dir = new Path(s"$baseDir/_epochs/$queryId")
+      if (fs.exists(dir)) fs.listStatus(dir).foreach { f =>
+        f.getPath.getName match {
+          case MarkerName(e) if e.toLong < latest - 1 => fs.delete(f.getPath, false)
+          case _ =>
+        }
+      }
+    }
 
   private def manifestFile(segment: String) =
     new Path(manifestDir, new Path(segment).getName + ".parquet")
@@ -244,8 +359,7 @@ final class RotatingSegmentSink(
     import org.apache.spark.unsafe.types.UTF8String.fromString
     val dest = manifestFile(info.path)
     val tmp = new Path(manifestDir, s".${dest.getName}.tmp")
-    val w = ParquetBridge.writer(tmp.toString, ManifestSchema,
-      spark.sparkContext.hadoopConfiguration)
+    val w = ParquetBridge.writer(tmp.toString, ManifestSchema, hadoopConf)
     try w.write(InternalRow(fromString(info.path), info.index,
       fromString(info.closedAt.toString), info.sizeMB,
       fromString(info.tables.mkString(","))))
@@ -262,40 +376,46 @@ final class RotatingSegmentSink(
     }
 
   /** Close the segments a crashed run left open — see the class doc. */
-  private def recover(): Unit = if (fs.exists(new Path(baseDir))) {
-    val manifested =
-      if (!fs.exists(manifestDir)) Set.empty[String]
-      else fs.listStatus(manifestDir).map(_.getPath.getName).toSet
-    if (manifested.exists(_.startsWith("part-")))
-      throw new IllegalStateException(s"segment sink: $manifestDir was " +
-        "written before the one-file-per-segment manifest layout; write " +
-        "to a fresh directory")
-    def ls(p: Path) = fs.listStatus(p).filterNot(f => hidden(f.getPath.getName))
-    ls(new Path(baseDir)).map(_.getPath.getName).sorted
-      .filter(n => n.startsWith(prefix + "_") && n != new Path(current).getName &&
-        !manifested.contains(n + ".parquet"))
-      .foreach { name =>
-        val seg = s"$baseDir/$name"
-        val kept = ls(new Path(seg)).filter(_.isDirectory).map { t =>
-          t.getPath.getName -> ls(t.getPath).filter { f =>
-            f.getPath.getName match {
-              case PartName(q, e) if !fs.exists(marker(q, e.toLong)) =>
-                fs.delete(f.getPath, false); false
-              case n => n.endsWith(".parquet")
+  private def recover(): Unit = {
+    Option(inFlight.get(baseDir)).foreach(_.join())
+    if (fs.exists(new Path(baseDir))) {
+      val manifested =
+        if (!fs.exists(manifestDir)) Set.empty[String]
+        else fs.listStatus(manifestDir).map(_.getPath.getName).toSet
+      if (manifested.exists(_.startsWith("part-")))
+        throw new IllegalStateException(s"segment sink: $manifestDir was " +
+          "written before the one-file-per-segment manifest layout; write " +
+          "to a fresh directory")
+      def ls(p: Path) = fs.listStatus(p).filterNot(f => hidden(f.getPath.getName))
+      ls(new Path(baseDir)).map(_.getPath.getName).sorted
+        .filter(n => n.startsWith(prefix + "_") && n != new Path(current).getName &&
+          !manifested.contains(n + ".parquet"))
+        .foreach { name =>
+          val seg = s"$baseDir/$name"
+          val kept = ls(new Path(seg)).filter(_.isDirectory).map { t =>
+            t.getPath.getName -> ls(t.getPath).filter { f =>
+              f.getPath.getName match {
+                case PartName(q, e) if !fs.exists(marker(q, e.toLong)) =>
+                  fs.delete(f.getPath, false); false
+                case n => n.endsWith(".parquet")
+              }
             }
-          }
-        }.filter(_._2.nonEmpty)
-        if (kept.nonEmpty)
-          close(seg, name.drop(name.lastIndexOf('_') + 1).toLongOption.getOrElse(0L),
-            kept.map(_._1).sorted.toSeq, kept.flatMap(_._2).map(_.getLen).sum, None)
-      }
+          }.filter(_._2.nonEmpty)
+          if (kept.nonEmpty)
+            startClose(seg, name.drop(name.lastIndexOf('_') + 1).toLongOption.getOrElse(0L),
+              kept.map(_._1).sorted.toSeq, kept.flatMap(_._2).map(_.getLen).sum,
+              None, Map.empty)
+        }
+    }
   }
 }
 
 object RotatingSegmentSink {
   private val MB = 1024L * 1024L
   private val PartName = """part-(.+)-e(\d+)-p\d+\.parquet""".r
+  private val MarkerName = """e(\d+)""".r
   private def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[RotatingSegmentSink])
 
   private val ManifestSchema = StructType.fromDDL(
     "path STRING, seg_index BIGINT, closed_at STRING, size_mb BIGINT, tables STRING")
@@ -307,12 +427,18 @@ object RotatingSegmentSink {
   /** Monotone per-JVM sink token — see the segment-path comment. */
   private def nextSinkId(): Long = sinkIds.incrementAndGet()
 
-  /** Test-only crash injection: `baseDir -> point`. The commit of that
-    * sink throws [[SimulatedCrash]] once at the named point:
+  /** The close in flight per base dir in this JVM: a new sink's
+    * recovery waits for it, so an abandoned sink's close and the
+    * recovery never both close one segment. */
+  private val inFlight = new ConcurrentHashMap[String, Thread]()
+
+  /** Test-only crash injection: `baseDir -> point`. That sink throws
+    * [[SimulatedCrash]] once at the named point: in the commit,
     * `"renamed"` (parts in place, no marker) or `"marked"` (marker
-    * written, the engine's commit-log entry not yet). */
-  private[graft] val crashAt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * written, the engine's commit-log entry not yet); on the close
+    * thread, `"closing"` (segment handed off, runner and manifest not
+    * yet run). */
+  private[graft] val crashAt = new ConcurrentHashMap[String, String]()
   private def crashPoint(baseDir: String, point: String): Unit =
     if (crashAt.remove(baseDir, point)) throw new SimulatedCrash(point)
 
@@ -370,8 +496,10 @@ object SegmentDataWriter {
     * named by the column. A struct column is one row of its table; an
     * array-of-struct column is any number of rows (a NULL cell is
     * none). Runs as a SQL execution, so `df`'s observed metrics are
-    * complete when it returns. */
-  def stage(df: DataFrame, stagingDir: String): Seq[SegmentCommitMessage] = {
+    * complete when it returns. `conf` is the sink's broadcast Hadoop
+    * conf ([[RotatingSegmentSink.taskConf]]). */
+  def stage(df: DataFrame, stagingDir: String,
+      conf: Broadcast[SerializableConfiguration]): Seq[SegmentCommitMessage] = {
     val fields = df.schema.fields.toIndexedSeq
     val tables = fields.map { f =>
       f.name -> (f.dataType match {
@@ -383,14 +511,12 @@ object SegmentDataWriter {
     }
     val fanOut = fields.map(_.dataType.isInstanceOf[ArrayType]).toArray
     val widths = tables.map(_._2.length).toArray
-    val conf = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("graft segment stage")) {
       df.sparkSession.sparkContext.runJob(qe.toRdd,
         (ctx: TaskContext, it: Iterator[InternalRow]) => {
           val w = new SegmentDataWriter(stagingDir, ctx.partitionId(),
-            ctx.taskAttemptId(), tables, conf.value)
+            ctx.taskAttemptId(), tables, conf.value.value)
           try {
             it.foreach { row =>
               var c = 0

@@ -10,7 +10,6 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 /** K1's sink as a REAL DataSource-V2 streaming sink — the write-side
   * mirror of [[graft.sources.BinaryQueueProvider]]: the exact
@@ -35,7 +34,12 @@ import org.apache.spark.util.SerializableConfiguration
   * replayed epoch whose marker exists is discarded, and the parts of a
   * crash before the marker are overwritten by the replay under the
   * same names, or deleted first by a restarted driver's recovery
-  * (exactly-once under the engine's replay contract, suite-pinned). Rename is a metadata op on HDFS-likes; on S3-likes
+  * (exactly-once under the engine's replay contract, suite-pinned).
+  * An epoch that rotates runs the library sink's one close routine
+  * (runner, manifest, announcement) and waits for it before its
+  * commit returns: a `StreamingWrite` has no stop hook where a later
+  * wait could go, so unlike the pipeline this path does not overlap
+  * the close with the next epoch. Rename is a metadata op on HDFS-likes; on S3-likes
   * it copies — there, point `path` at a rename-capable store or
   * accept the copy (the manifest, not listing, is the read contract).
   *
@@ -110,9 +114,9 @@ object SegmentWrites {
     sinks.computeIfAbsent(baseDir, _ => make)
 
   /** Close and announce the open segment on `baseDir`, if it holds
-    * rows, and drop the dir's sink. */
+    * rows, wait for every close of the dir's sink, and drop the sink. */
   def finalRotate(baseDir: String): Option[SegmentInfo] =
-    Option(sinks.remove(baseDir)).filter(_.hasPendingWrites).map(_.rotate())
+    Option(sinks.remove(baseDir)).flatMap(_.finish())
 
   private[sink] def registeredCount(baseDir: String): Int =
     if (sinks.containsKey(baseDir)) 1 else 0
@@ -131,18 +135,18 @@ private[sink] class SegmentStreamingWrite(baseDir: String,
   private lazy val sink = SegmentWrites.sink(baseDir,
     new RotatingSegmentSink(SparkSession.active, baseDir, prefix = prefix,
       policy = policy, writeManifest = writeManifest))
-  private val confSer = new SerializableConfiguration(
-    SparkSession.active.sessionState.newHadoopConf())
-
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {
     val (dir, qid, tables, conf) =
-      (baseDir, queryId, Seq(table -> schema), confSer)
+      (baseDir, queryId, Seq(table -> schema), sink.taskConf)
     (partitionId: Int, taskId: Long, epochId: Long) =>
       new SegmentDataWriter(RotatingSegmentSink.stagingDir(dir, qid, epochId),
-        partitionId, taskId, tables, conf.value)
+        partitionId, taskId, tables, conf.value.value)
   }
 
+  /** Commits, then runs a rotation's close and waits for it: Spark gives
+    * a `StreamingWrite` no stop hook where a later wait could go, so the
+    * epoch returns only once its segment is in the manifest. */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage])
       : Unit = {
     // an all-empty epoch writes its marker but announces nothing:
@@ -150,13 +154,13 @@ private[sink] class SegmentStreamingWrite(baseDir: String,
     if (sink.commit(queryId, epochId,
         messages.toSeq.collect { case m: SegmentCommitMessage => m }).nonEmpty)
       sink.maybeRotate()
-    ()
+    sink.awaitClosed()
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage])
       : Unit = {
     val p = new Path(RotatingSegmentSink.stagingDir(baseDir, queryId, epochId))
-    p.getFileSystem(confSer.value).delete(p, true)
+    p.getFileSystem(sink.taskConf.value.value).delete(p, true)
     ()
   }
 }

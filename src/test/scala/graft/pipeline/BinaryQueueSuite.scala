@@ -227,9 +227,9 @@ class BinaryQueueSuite extends SparkSpec {
     val raf = new java.io.RandomAccessFile(s"$dir/p0.log", "rw")
     raf.write(Array.fill[Byte](ckpt._2.toInt)(-1))
     raf.close()
-    val factory = new BinQueueReaderFactory(
+    val factory = new BinQueueReaderFactory(spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+        spark.sessionState.newHadoopConf())))
     val reader = factory.createReader(
       BinQueuePartition(s"$dir/p0.log", 150L, 160L))
     val got = scala.collection.mutable.Buffer[Long]()
@@ -280,6 +280,25 @@ class BinaryQueueSuite extends SparkSpec {
       assert(seen.sum == 6,
         s"session-conf scheme read the wrong record count: $seen")
     } finally spark.conf.unset("fs.graftq.impl")
+  }
+
+  test("the reader factory carries the Hadoop conf as a broadcast: it " +
+      "serializes in under 4 KB") {
+    // a conf shipped inside the factory (~34 KB) is deserialized by
+    // every task of every trigger
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-binq-factory").toString
+    BinaryQueue.append(s"$root/queue", 0, Seq(msg(0L)))
+    val table = new graft.sources.BinaryQueueProvider().getTable(
+        graft.sources.BinaryQueueProvider.Schema, Array.empty,
+        Map("path" -> s"$root/queue").asJava)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+    val factory = table.newScanBuilder(
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().toMicroBatchStream(s"$root/ckpt").createReaderFactory()
+    val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+    val bytes = ser.serialize(factory).remaining()
+    assert(bytes < 4096, s"reader factory serializes to $bytes bytes")
   }
 
   test("short-name registration and torn tail frames: only whole " +

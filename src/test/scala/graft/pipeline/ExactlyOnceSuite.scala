@@ -41,7 +41,8 @@ class ExactlyOnceSuite extends SparkSpec {
   /** Segments the runner ran on, by dir name. */
   private val runs = new ConcurrentLinkedQueue[String]()
 
-  private def pipeline(root: String): Pipeline = Pipeline(spark,
+  private def pipeline(root: String, thresholdMB: Long = 1000): Pipeline =
+    Pipeline(spark,
     PipelineConfig(
       source = BinaryQueueSource(s"$root/queue"),
       outputDir = s"$root/out",
@@ -49,8 +50,8 @@ class ExactlyOnceSuite extends SparkSpec {
       decode = Decoders.json(schema),
       deadLetterTable = Some("dead"),
       normalizer = Some(NormalizerSpec(Seq("id", "tags"), Seq("id", "tag"))),
-      rotation = RotationPolicy(thresholdMB = 1000, durationSec = 100000,
-        clamp = false),
+      rotation = RotationPolicy(thresholdMB = thresholdMB,
+        durationSec = 100000, clamp = false),
       runner = Some(SegmentRunner(exec = false, queryFunc = Some { (_, views) =>
         val f = new Path(views.values.head.inputFiles.head)
         runs.add(f.getParent.getParent.getName)
@@ -105,6 +106,31 @@ class ExactlyOnceSuite extends SparkSpec {
       assert(p2.error.isEmpty, p2.error)
       checkOutput(root, 100, runs.asScala.toSeq)
     }
+
+  test("a close stopped at 'closing' (handed off, no runner, no " +
+      "manifest yet) fails the query; the restart closes it once") {
+    val root = Files.createTempDirectory("graft-crash-close").toString
+    runs.clear()
+    append(s"$root/queue", 0, 50)
+    val p1 = pipeline(root, thresholdMB = 0) // every batch rotates
+    val q1 = p1.run()
+    q1.processAllAvailable()
+    RotatingSegmentSink.crashAt.put(s"$root/out", "closing")
+    append(s"$root/queue", 50, 100)
+    q1.processAllAvailable() // commits; its segment's close crashes
+    append(s"$root/queue", 100, 150)
+    // the next commit or rotation rethrows the failed close
+    val e = intercept[StreamingQueryException](q1.processAllAvailable())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[RotatingSegmentSink.SimulatedCrash]), e)
+    assert(!RotatingSegmentSink.crashAt.containsKey(s"$root/out"))
+
+    val p2 = pipeline(root, thresholdMB = 0)
+    p2.run().processAllAvailable()
+    p2.close()
+    assert(p2.error.isEmpty, p2.error)
+    checkOutput(root, 150, runs.asScala.toSeq)
+  }
 
   test("a run stopped without close(): the restart closes its open " +
       "segment once, through the runner and the manifest") {

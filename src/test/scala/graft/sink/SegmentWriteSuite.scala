@@ -104,14 +104,15 @@ class SegmentWriteSuite extends SparkSpec {
   private val idSchema = StructType(Seq(StructField("id", LongType)))
 
   /** An id stream from `msgDir` into graft-binsegment at `out`. */
-  private def startIds(msgDir: String, out: String, ckpt: String) =
+  private def startIds(msgDir: String, out: String, ckpt: String,
+      thresholdMB: String = "100000") =
     Stages.decodeJson(idSchema)(FileBinarySource(msgDir).stream(spark))
       .where(col("_corrupt").isNull).select("id")
       .writeStream
       .format("graft-binsegment")
       .option("path", out)
       .option("table", "t")
-      .option("thresholdMB", "100000")
+      .option("thresholdMB", thresholdMB)
       .option("durationSec", "100000")
       .option("clamp", "false")
       .option("checkpointLocation", ckpt)
@@ -187,6 +188,36 @@ class SegmentWriteSuite extends SparkSpec {
       SegmentWrites.finalRotate(out)
       assert(manifestIds(out) == (0L until 60L))
     }
+
+  test("an epoch whose close stopped at 'closing' fails its commit; " +
+      "after a restart each segment holding rows is in the manifest once") {
+    val root = Files.createTempDirectory("graft-dsv2close").toString
+    val (out, msgs, ckpt) = (s"$root/out", s"$root/msgs", s"$root/ckpt")
+    writeIds(msgs, 0L until 25L)
+    val q1 = startIds(msgs, out, ckpt, thresholdMB = "0")
+    q1.processAllAvailable()
+    writeIds(msgs, 25L until 60L)
+    RotatingSegmentSink.crashAt.put(out, "closing")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q1.processAllAvailable())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[RotatingSegmentSink.SimulatedCrash]), e)
+    assert(!RotatingSegmentSink.crashAt.containsKey(out))
+    SegmentWrites.forget(out) // the driver process is gone
+    writeIds(msgs, 60L until 70L)
+    val q2 = startIds(msgs, out, ckpt, thresholdMB = "0")
+    q2.processAllAvailable()
+    q2.stop()
+    SegmentWrites.finalRotate(out)
+    assert(manifestIds(out) == (0L until 70L))
+    val withRows = new java.io.File(out).listFiles()
+      .filter(d => d.getName.startsWith("seg_") &&
+        Option(new java.io.File(d, "t").list()).exists(_.nonEmpty))
+      .map(_.getPath).toSeq
+    val manifested = spark.read.parquet(s"$out/_manifest")
+      .select("path").as[String].collect().toSeq
+    assert(withRows.sorted == manifested.sorted)
+  }
 
   test("finalRotate reaches the engine-constructed write: the tail " +
       "segment below threshold gets announced after query.stop()") {
