@@ -244,7 +244,8 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
 
   /** Stop + close final segment (Close parity, quacfka.go:202-216:
     * final partial flush and last path emit). Returns once every
-    * segment close finished; a failed close is rethrown here. */
+    * segment close finished; a failed close is rethrown here, and the
+    * next call runs it again before closing the open segment. */
   def close(): Unit = synchronized {
     if (!closed) {
       query.foreach { q =>

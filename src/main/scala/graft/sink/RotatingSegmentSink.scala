@@ -91,7 +91,11 @@ final case class TableStats(rows: Long, bytes: Long)
   * no streaming query's job group, execution id or batch id, so
   * stopping the query does not cancel them. Runner errors are recorded
   * in the metrics; any other failure of a close (the manifest write) is
-  * recorded and rethrown by the next commit, rotation or [[finish]].
+  * recorded and rethrown once, by the next commit, rotation or
+  * [[finish]]. The failed segment stays this sink's to close: the next
+  * rotation or [[finish]] runs its close again before any other, so no
+  * close prunes markers while an earlier segment lacks its manifest
+  * entry (a later recovery would delete the parts of such a segment).
   *
   * The Hadoop conf is built once per sink from the session (so
   * session-set options such as `fs.<scheme>.impl` reach the sink) and
@@ -140,8 +144,8 @@ final class RotatingSegmentSink(
   // latest batch per query id committed into the open segment, for the
   // marker pruning of its close (ids whose markers are kept excluded)
   private val segEpochs = scala.collection.mutable.Map[String, Long]()
-  private val closing = new AtomicReference[Thread]()
-  private val closeFailure = new AtomicReference[(String, Throwable)]()
+  // the last close that failed: it runs again before any later close
+  private val failed = new AtomicReference[FailedClose]()
 
   private def newSegmentPath(): String = {
     def at(i: Long) =
@@ -237,7 +241,7 @@ final class RotatingSegmentSink(
   def finish(): Option[SegmentInfo] = synchronized {
     recoverOnce()
     val info = if (tablesWritten.nonEmpty) Some(rotate()) else {
-      countWait(awaitClose()); None
+      settle("finish()"); None
     }
     awaitClose()
     rethrowCloseFailure()
@@ -249,8 +253,10 @@ final class RotatingSegmentSink(
   private[sink] def awaitClosed(): Unit = { awaitClose(); rethrowCloseFailure() }
 
   private def rotate(): SegmentInfo = {
-    val info = startClose(current, segIndex, tablesWritten.toSeq, segBytes,
-      Some(System.currentTimeMillis() - segStartMs), segEpochs.toMap)
+    val info = SegmentInfo(current, segIndex, Instant.now(), segBytes / MB,
+      tablesWritten.toSeq)
+    startClose(Close(info, Some(System.currentTimeMillis() - segStartMs),
+      segEpochs.toMap))
     segIndex += 1
     segStartMs = System.currentTimeMillis()
     segBytes = 0L
@@ -260,54 +266,65 @@ final class RotatingSegmentSink(
     info
   }
 
-  /** Hand one segment to the background close, after waiting for the
-    * close before it. */
-  private def startClose(path: String, index: Long, tables: Seq[String],
-      bytes: Long, ageMs: Option[Long],
-      epochs: Map[String, Long]): SegmentInfo = {
-    val waitedNs = awaitClose()
-    if (waitedNs > 0) {
-      countWait(waitedNs)
-      log.info(f"segment sink $baseDir: the close of ${new Path(path).getName} " +
-        f"waited ${waitedNs / 1e6}%.0f ms for the close before it")
-    }
-    rethrowCloseFailure()
-    val info = SegmentInfo(path, index, Instant.now(), bytes / MB, tables)
-    // no inherited thread-locals: a thread started inside a micro-batch
-    // would carry its job group, query id, batch id and execution id
-    val t = new Thread(null, () => close(info, ageMs, epochs),
-      s"graft-segment-close-${new Path(info.path).getName}", 0L, false)
-    t.setDaemon(true)
-    closing.set(t)
-    inFlight.put(baseDir, t)
-    t.start()
-    info
+  /** Hand one segment to the background close, once every earlier
+    * close of this sink succeeded (see [[settle]]). */
+  private def startClose(c: Close): Unit = {
+    settle(s"the close of ${new Path(c.info.path).getName}")
+    spawn(c)
   }
 
-  /** Wait for the close in flight, if any; the nanoseconds waited. */
-  private def awaitClose(): Long = {
-    val t = closing.get()
-    if (t == null) 0L
-    else {
-      val t0 = System.nanoTime()
-      t.join()
-      closing.compareAndSet(t, null)
-      System.nanoTime() - t0
+  /** Wait for the close in flight and rethrow its failure, then run a
+    * failed close (already rethrown) again and wait for it. So a close
+    * never starts, and never prunes markers, while an earlier segment
+    * of this sink lacks its manifest entry; a failed segment stays
+    * this sink's to close, as the open segment does. */
+  private def settle(waiter: String): Unit = {
+    def await(): Unit = {
+      val ns = awaitClose()
+      if (ns > 0) {
+        countWait(ns)
+        log.info(f"segment sink $baseDir: $waiter waited ${ns / 1e6}%.0f ms " +
+          "for the close before it")
+      }
+      rethrowCloseFailure()
     }
+    await()
+    Option(failed.getAndSet(null)).foreach { f => spawn(f.close); await() }
+  }
+
+  /** Start `c` on a close thread of its own. */
+  private def spawn(c: Close): Unit = {
+    // no inherited thread-locals: a thread started inside a micro-batch
+    // would carry its job group, query id, batch id and execution id
+    val t = new Thread(null, () => close(c),
+      s"graft-segment-close-${new Path(c.info.path).getName}", 0L, false)
+    t.setDaemon(true)
+    inFlight.put(baseDir, t)
+    t.start()
+  }
+
+  /** Wait for the dir's close in flight, if any; the nanoseconds
+    * waited. */
+  private def awaitClose(): Long = Option(inFlight.get(baseDir)).fold(0L) { t =>
+    val t0 = System.nanoTime()
+    t.join()
+    System.nanoTime() - t0
   }
 
   private def countWait(ns: Long): Unit = metrics.foreach(_.recordCloseWait(ns))
 
+  /** Rethrow a failed close once; it stays queued for [[settle]]. */
   private def rethrowCloseFailure(): Unit =
-    Option(closeFailure.getAndSet(null)).foreach { case (seg, t) =>
-      throw new java.io.IOException(s"segment sink: closing $seg failed; " +
-        "it has no manifest entry, so a restarted sink closes it again", t)
+    Option(failed.get()).filterNot(_.rethrown).foreach { f =>
+      f.rethrown = true
+      throw new java.io.IOException(s"segment sink: closing ${f.close.info.path} " +
+        "failed; the next rotation or finish() closes it again", f.cause)
     }
 
   /** The one close routine, on the close thread: runner, manifest,
     * marker pruning, metrics, announcement. */
-  private def close(info: SegmentInfo, ageMs: Option[Long],
-      epochs: Map[String, Long]): Unit =
+  private def close(c: Close): Unit = {
+    val info = c.info
     try {
       spark.sparkContext.setJobDescription(
         s"graft segment close ${new Path(info.path).getName}")
@@ -322,19 +339,20 @@ final class RotatingSegmentSink(
       val t1 = System.nanoTime()
       if (writeManifest) writeManifestRow(info)
       val t2 = System.nanoTime()
-      pruneMarkers(epochs)
+      pruneMarkers(c.epochs)
       metrics.foreach { m =>
         m.filesClosed.incrementAndGet()
         m.filesMB.addAndGet(info.sizeMB)
-        ageMs.foreach(m.recordFileDuration)
+        c.ageMs.foreach(m.recordFileDuration)
         m.recordRotation(runnerNs = t1 - t0, manifestNs = t2 - t1)
       }
       closedQueue.add(info)
     } catch {
       case t: Throwable =>
         metrics.foreach(_.recordError(t))
-        closeFailure.set(info.path -> t)
+        failed.set(new FailedClose(c, t))
     } finally inFlight.remove(baseDir, Thread.currentThread())
+  }
 
   /** Delete each query's markers below its latest batch in the closed
     * segment minus one: the engine never re-runs a batch once the next
@@ -369,15 +387,17 @@ final class RotatingSegmentSink(
       throw new java.io.IOException(s"segment sink: rename $tmp -> $dest returned false")
   }
 
+  /** Recover once; a recovery cut short by a failed close starts over
+    * at the next call, after that close ran again. */
   private def recoverOnce(): Unit =
     if (!recovered) {
-      recovered = true
       if (writeManifest) recover()
+      recovered = true
     }
 
   /** Close the segments a crashed run left open — see the class doc. */
   private def recover(): Unit = {
-    Option(inFlight.get(baseDir)).foreach(_.join())
+    settle("recovery")
     if (fs.exists(new Path(baseDir))) {
       val manifested =
         if (!fs.exists(manifestDir)) Set.empty[String]
@@ -402,9 +422,10 @@ final class RotatingSegmentSink(
             }
           }.filter(_._2.nonEmpty)
           if (kept.nonEmpty)
-            startClose(seg, name.drop(name.lastIndexOf('_') + 1).toLongOption.getOrElse(0L),
-              kept.map(_._1).sorted.toSeq, kept.flatMap(_._2).map(_.getLen).sum,
-              None, Map.empty)
+            startClose(Close(SegmentInfo(seg,
+              name.drop(name.lastIndexOf('_') + 1).toLongOption.getOrElse(0L),
+              Instant.now(), kept.flatMap(_._2).map(_.getLen).sum / MB,
+              kept.map(_._1).sorted.toSeq), None, Map.empty))
         }
     }
   }
@@ -427,10 +448,22 @@ object RotatingSegmentSink {
   /** Monotone per-JVM sink token — see the segment-path comment. */
   private def nextSinkId(): Long = sinkIds.incrementAndGet()
 
-  /** The close in flight per base dir in this JVM: a new sink's
-    * recovery waits for it, so an abandoned sink's close and the
-    * recovery never both close one segment. */
+  /** The close in flight per base dir in this JVM — the one record of
+    * it. A sink's waits join it, and so does a new sink's recovery, so
+    * an abandoned sink's close and the recovery never both close one
+    * segment. */
   private val inFlight = new ConcurrentHashMap[String, Thread]()
+
+  /** One close's work: the segment, its age at the handoff (none for a
+    * recovered segment) and the latest batch per query id in it, for
+    * the marker pruning. */
+  private final case class Close(info: SegmentInfo, ageMs: Option[Long],
+      epochs: Map[String, Long])
+
+  /** A close that failed; `rethrown` once a caller has thrown it. */
+  private final class FailedClose(val close: Close, val cause: Throwable) {
+    @volatile var rethrown = false
+  }
 
   /** Test-only crash injection: `baseDir -> point`. That sink throws
     * [[SimulatedCrash]] once at the named point: in the commit,

@@ -39,7 +39,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (runner, manifest, announcement) and waits for it before its
   * commit returns: a `StreamingWrite` has no stop hook where a later
   * wait could go, so unlike the pipeline this path does not overlap
-  * the close with the next epoch. Rename is a metadata op on HDFS-likes; on S3-likes
+  * the close with the next epoch. A failed close fails its epoch; the
+  * dir's sink stays registered and runs that close again at its next
+  * rotation or `finalRotate`, also for a query restarted in the same
+  * JVM. Rename is a metadata op on HDFS-likes; on S3-likes
   * it copies — there, point `path` at a rename-capable store or
   * accept the copy (the manifest, not listing, is the read contract).
   *

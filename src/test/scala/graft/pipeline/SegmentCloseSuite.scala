@@ -9,6 +9,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -96,6 +97,74 @@ class SegmentCloseSuite extends SparkSpec {
     val waited = """"close_wait_ms": ([\d.]+)""".r
       .findFirstMatchIn(pipe.metrics.report()).map(_.group(1).toDouble)
     assert(waited.exists(_ >= 100.0), pipe.metrics.report())
+  }
+
+  test("a close that fails after later batches committed is run again " +
+      "before the next close: its markers survive close(), and a restart " +
+      "finds each id once in the manifest") {
+    val root = Files.createTempDirectory("graft-failed-close").toString
+    val (queue, out) = (s"$root/queue", s"$root/out")
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val runs = new AtomicInteger(0)
+    val config = PipelineConfig(
+      source = BinaryQueueSource(queue),
+      outputDir = out,
+      decode = Decoders.json(StructType(Seq(StructField("id", LongType),
+        StructField("pad", StringType)))),
+      rotation = RotationPolicy(thresholdMB = 1, durationSec = 100000,
+        clamp = false),
+      runner = Some(SegmentRunner(exec = false, queryFunc = Some { (_, _) =>
+        entered.countDown()
+        release.await(60, TimeUnit.SECONDS)
+        runs.incrementAndGet()
+        ()
+      })),
+      checkpointDir = Some(s"$root/ckpt"))
+    def ids(from: Long, until: Long): Unit =
+      BinaryQueue.append(queue, 0, frames(from, until).map(_ -> 0L))
+    // about 1.6 MB of random hex: the first batch crosses the 1 MB threshold
+    val rnd = new scala.util.Random(11)
+    BinaryQueue.append(queue, 0, (0L until 8000L).map { i =>
+      val pad = Array.fill(100)(f"${rnd.nextInt(256)}%02x").mkString
+      s"""{"id":$i,"pad":"$pad"}""".getBytes("UTF-8") -> 0L
+    })
+    val p1 = Pipeline(spark, config)
+    val q1 = p1.run()
+    q1.processAllAvailable()
+    assert(entered.await(60, TimeUnit.SECONDS), "the close never started")
+    (0 until 3).foreach { k => // commit into the next segment meanwhile
+      ids(8000L + 10 * k, 8010L + 10 * k)
+      q1.processAllAvailable()
+    }
+    // the held close's manifest write fails: its dir is a plain file
+    val manifestDir = new java.io.File(s"$out/_manifest")
+    assert(manifestDir.createNewFile())
+    release.countDown()
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (p1.error.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(p1.error.nonEmpty, "the manifest write did not fail")
+    ids(8030, 8040)
+    intercept[StreamingQueryException](q1.processAllAvailable())
+    // while the cause lasts, close() fails again and prunes nothing
+    intercept[java.io.IOException](p1.close())
+    val marker0 = new java.io.File(s"$out/_epochs/${q1.id}/e0")
+    assert(marker0.exists, "a marker of the failed segment was pruned")
+    assert(manifestDir.delete())
+    p1.close() // the failed segment's close, then the open segment's
+    // three attempts on the failed segment, one on the open segment
+    assert(runs.get == 4, "the runner did not run on each close attempt")
+    val closed = manifestPaths(out)
+    assert(closed.length == 2 && closed.distinct == closed, closed)
+
+    val p2 = Pipeline(spark, config) // replays the batch the failure stopped
+    p2.run().processAllAvailable()
+    p2.close()
+    assert(p2.error.isEmpty, p2.error)
+    val paths = manifestPaths(out)
+    assert(paths.distinct == paths, paths)
+    assert(spark.read.parquet(paths.map(_ + "/msgs"): _*).select("id")
+      .as[Long].collect().sorted.toSeq == (0L until 8040L))
   }
 
   test("query.stop() while a close is in flight does not cancel the " +

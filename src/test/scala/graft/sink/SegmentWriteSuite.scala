@@ -219,6 +219,35 @@ class SegmentWriteSuite extends SparkSpec {
     assert(withRows.sorted == manifested.sorted)
   }
 
+  test("a query restarted in the same JVM after a failed close: the " +
+      "dir's sink closes the failed segment before the next, and a later " +
+      "run's recovery finds each id once in the manifest") {
+    val root = Files.createTempDirectory("graft-dsv2reclose").toString
+    val (out, msgs, ckpt) = (s"$root/out", s"$root/msgs", s"$root/ckpt")
+    writeIds(msgs, 0L until 25L)
+    val q1 = startIds(msgs, out, ckpt, thresholdMB = "0")
+    q1.processAllAvailable()
+    writeIds(msgs, 25L until 60L)
+    RotatingSegmentSink.crashAt.put(out, "closing")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q1.processAllAvailable())
+    assert(SegmentWrites.registeredCount(out) == 1)
+    (60L until 90L by 10L).foreach { from => // three epochs, each rotating
+      writeIds(msgs, from until from + 10L)
+      val q = startIds(msgs, out, ckpt, thresholdMB = "0")
+      q.processAllAvailable()
+      q.stop()
+    }
+    SegmentWrites.finalRotate(out)
+    assert(manifestIds(out) == (0L until 90L))
+    writeIds(msgs, 90L until 95L)
+    val q3 = startIds(msgs, out, ckpt) // a new sink: its recovery runs
+    q3.processAllAvailable()
+    q3.stop()
+    SegmentWrites.finalRotate(out)
+    assert(manifestIds(out) == (0L until 95L))
+  }
+
   test("finalRotate reaches the engine-constructed write: the tail " +
       "segment below threshold gets announced after query.stop()") {
     // review finding: Spark builds SegmentStreamingWrite internally,
