@@ -78,7 +78,7 @@ object PipelineDemo {
     println("=== BENCHMARK SAMPLES (2s window) ===")
     print(pipe.metrics.benchmarksReport())
     println("=== MANIFEST ===")
-    spark.read.parquet(s"$root/out/_manifest")
+    spark.read.parquet(s"$root/out/_manifest/*.parquet")
       .orderBy("seg_index").show(false)
     println(s"conservation=${pipe.metrics.conservationHolds}")
     println(s"error=${pipe.error}")

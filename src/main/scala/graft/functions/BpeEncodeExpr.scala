@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,20 +17,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the PqExpr/HyperplaneSigsExpr lesson); parity with the trainer's
   * Column-level `mergeOne` chain is pinned in BpeSuite. */
 case class BpeEncodeExpr(child: Expression,
-    merges: Seq[(String, String)]) extends UnaryExpression {
+    merges: Seq[(String, String)])
+    extends UnaryExpression with NativeExpression {
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bpe_encode needs string, got ${other.sql}")
-    }
 
   @transient private lazy val mergeArr: Array[(String, String)] =
     merges.toArray
@@ -72,13 +63,6 @@ case class BpeEncodeExpr(child: Expression,
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeEncodeExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    defineCodeGen(ctx, ev, c => s"($arrCls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression): BpeEncodeExpr =
     copy(child = c)

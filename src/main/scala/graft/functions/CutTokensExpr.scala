@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: rebuild a token stream with the tokens
@@ -33,8 +33,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * without spans) keeps every token. The expression itself is never
   * null. */
 case class CutTokensExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeExpression {
 
+  override def inputTypes: Seq[DataType] = Seq(
+    ArrayType(StringType),
+    ArrayType(StructType(Seq(
+      StructField("s", LongType), StructField("e", LongType)))))
   override def dataType: DataType = StructType(Seq(
     StructField("text_cut", StringType, nullable = false),
     StructField("n_removed", LongType, nullable = false)))
@@ -82,9 +86,8 @@ case class CutTokensExpr(left: Expression, right: Expression)
     compute(t.asInstanceOf[ArrayData], v.asInstanceOf[ArrayData])
   }
 
-  /** Real codegen (not CodegenFallback): both children may be null
-    * (null text / span-less doc), so the call passes nulls through to
-    * compute() instead of using the nullSafe scaffolding. */
+  /** Own codegen: both children may be null (null text / span-less
+    * doc), and the call passes the nulls through to compute(). */
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("cutTokensExpr", this)

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: per-row Shannon entropy of a text's
@@ -37,8 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * char mode) → 0.0, matching the old chain's left-join + coalesce;
   * NULL text → NULL (the caller coalesces). */
 case class EntropyExpr(child: Expression, tokenMode: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeExpression {
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = child.nullable
 
@@ -94,13 +94,6 @@ case class EntropyExpr(child: Expression, tokenMode: Boolean)
 
   override def nullSafeEval(input: Any): Any =
     java.lang.Double.valueOf(compute(input.asInstanceOf[UTF8String]))
-
-  /** Real codegen (not CodegenFallback) — the repo's expression rule. */
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("entropyExpr", this)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression): EntropyExpr =
     copy(child = c)

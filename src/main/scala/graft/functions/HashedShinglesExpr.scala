@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -25,21 +24,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * keeps the enclosing projection in whole-stage codegen.
   */
 case class HashedShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeExpression {
   require(n >= 1, s"shingle width n=$n must be >= 1")
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hashed_shingles needs array<string>, got ${other.sql}")
-    }
 
   /** One pass; called from interpreted eval and generated code. */
   def compute(tokens: ArrayData): ArrayData = {
@@ -61,13 +51,6 @@ case class HashedShinglesExpr(child: Expression, n: Int)
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shinglesExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    defineCodeGen(ctx, ev, c => s"($arrCls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : HashedShinglesExpr = copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Hilbert-curve index of a 2-D cell — the locality upgrade over the
@@ -29,18 +27,12 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * mask and the 16 unrolled rotation steps bit-for-bit
   * (OperatorQueries.hilbertSql). */
 case class HilbertIndexExpr(left: Expression, right: Expression,
-    bits: Int) extends BinaryExpression {
+    bits: Int) extends BinaryExpression with NativeExpression {
   require(bits >= 1 && bits <= 31, s"bits out of range: $bits")
 
+  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
   override def dataType: DataType = LongType
   override def nullable: Boolean = left.nullable || right.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"hilbert_index needs (bigint, bigint), got (${l.sql}, ${r.sql})")
-    }
 
   def compute(x0: Long, y0: Long): Long = {
     val n = 1L << bits
@@ -63,12 +55,6 @@ case class HilbertIndexExpr(left: Expression, right: Expression,
 
   override def nullSafeEval(xv: Any, yv: Any): Any =
     compute(xv.asInstanceOf[Long], yv.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hilbertIndexExpr", this)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
-  }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): HilbertIndexExpr =

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -29,22 +28,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   */
 case class HyperplaneSigsExpr(child: Expression, nBits: Int,
     nTables: Int, seed: Long, md5Signs: Boolean = false)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeExpression {
   require(nBits >= 1 && nBits <= 63, s"nBits=$nBits out of range")
   require(nTables >= 1, s"nTables=$nTables must be >= 1")
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hyperplane_sigs needs array<double>, got ${other.sql}")
-    }
 
   /** (dim, signs): signs(t * nBits + j)(d) ∈ {+1.0, -1.0}. Rebuilt if
     * a row with a different vector width shows up (embedding columns
@@ -131,13 +121,6 @@ case class HyperplaneSigsExpr(child: Expression, nBits: Int,
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hyperplaneSigsExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    defineCodeGen(ctx, ev, c => s"($arrCls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : HyperplaneSigsExpr = copy(child = c)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -45,28 +44,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output: array<struct<piece: string, cq: long>> sorted piece-asc,
   * zero-quantized entries dropped. Native for the ViterbiSegmentExpr
   * reason — the DP is n × maxPieceLen hash probes plus exp/log per
-  * edge; real `doGenCode` (compute() + addReferenceObj). */
+  * edge; codegen'd through [[NativeExpression]]. */
 case class LatticeMarginalsExpr(child: Expression,
-    pieces: Seq[String], logProbs: Seq[Double]) extends UnaryExpression {
+    pieces: Seq[String], logProbs: Seq[Double])
+    extends UnaryExpression with NativeExpression {
   require(pieces.length == logProbs.length,
     s"${pieces.length} pieces vs ${logProbs.length} logProbs")
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("piece", StringType, nullable = false),
       StructField("cq", LongType, nullable = false))),
     containsNull = false)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lattice_marginals needs string, got ${other.sql}")
-    }
 
   @transient private lazy val lpMap: java.util.HashMap[String, java.lang.Double] = {
     val m = new java.util.HashMap[String, java.lang.Double](pieces.length * 2)
@@ -97,13 +88,6 @@ case class LatticeMarginalsExpr(child: Expression,
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("latticeMarginalsExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    defineCodeGen(ctx, ev, c => s"($arrCls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : LatticeMarginalsExpr = copy(child = c)

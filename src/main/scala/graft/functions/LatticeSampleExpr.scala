@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,26 +26,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-partition-seeded). Distinct seeds give independent draws, so
   * an epoch-keyed seed column is the on-the-fly augmentation path.
   *
-  * Native for the ViterbiSegmentExpr reason; real `doGenCode`. */
+  * Native for the ViterbiSegmentExpr reason; codegen'd through
+  * [[NativeExpression]]. */
 case class LatticeSampleExpr(child: Expression, pieces: Seq[String],
     logProbs: Seq[Double], alpha: Double, seed: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeExpression {
   require(pieces.length == logProbs.length,
     s"${pieces.length} pieces vs ${logProbs.length} logProbs")
   require(alpha >= 0, s"alpha=$alpha must be >= 0")
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lattice_sample needs string, got ${other.sql}")
-    }
 
   @transient private lazy val lpMap: java.util.HashMap[String, java.lang.Double] = {
     val m = new java.util.HashMap[String, java.lang.Double](pieces.length * 2)
@@ -72,13 +63,6 @@ case class LatticeSampleExpr(child: Expression, pieces: Seq[String],
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("latticeSampleExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    defineCodeGen(ctx, ev, c => s"($arrCls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : LatticeSampleExpr = copy(child = c)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -20,13 +19,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * so LSH outputs are unchanged — verified by LlmSuite recall tests.
   */
 case class MinHashSignatureExpr(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeExpression {
 
   private val P = MinHashSignatureExpr.P
 
   private lazy val (as, bs): (Array[Long], Array[Long]) =
     MinHashSignatureExpr.params(k, seed)
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
@@ -55,22 +55,6 @@ case class MinHashSignatureExpr(child: Expression, k: Int, seed: Long)
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
-
-  /** Real codegen (not CodegenFallback): the loop runs as a direct
-    * method call on the referenced expression instance, so this
-    * expression no longer breaks the surrounding whole-stage-codegen
-    * span or boxes its input per row. */
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = ($arrCls) $ref.compute($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : MinHashSignatureExpr = copy(child = c)

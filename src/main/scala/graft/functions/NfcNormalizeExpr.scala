@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,20 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * produces, which is what makes the cross-engine oracle possible).
   * Fast path: Normalizer.isNormalized short-circuits the (common)
   * already-NFC case without allocating. */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
+case class NfcNormalizeExpr(child: Expression)
+    extends UnaryExpression with NativeExpression {
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nfc_normalize needs string, got ${other.sql}")
-    }
 
   def compute(s: UTF8String): UTF8String = {
     val str = s.toString
@@ -41,13 +32,6 @@ case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nfcNormalizeExpr", this)
-    val cls = classOf[UTF8String].getName
-    defineCodeGen(ctx, ev, c => s"($cls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : NfcNormalizeExpr = copy(child = c)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
@@ -23,8 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * never selected (`NaN < best` is false) — Spark's NaN-is-largest
   * ordering. A vector whose width ≠ m·sub (or with a null element)
   * yields NULL — the HOF form's null-propagation shape.
+  *
+  * This trait holds the codebook math both expressions share.
   */
-trait PqCodebookExpression extends UnaryExpression {
+trait PqCodebook {
   def codebooks: Seq[Seq[Seq[Double]]]
 
   @transient protected lazy val m: Int = codebooks.length
@@ -33,18 +34,6 @@ trait PqCodebookExpression extends UnaryExpression {
   /** flat(j*ks + c) = sub-centroid dims, primitive. */
   @transient protected lazy val flat: Array[Array[Double]] =
     codebooks.flatten.map(_.toArray).toArray
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs array<double>, got ${other.sql}")
-    }
 
   /** xs for a valid fixed-width vector, null otherwise. */
   protected def validVec(vec: ArrayData): Array[Double] = {
@@ -69,9 +58,12 @@ trait PqCodebookExpression extends UnaryExpression {
 
 /** Per-vector PQ code array: element j = argmin_c d2(slice_j, cb[j][c]). */
 case class PqCodesExpr(child: Expression,
-    codebooks: Seq[Seq[Seq[Double]]]) extends PqCodebookExpression {
+    codebooks: Seq[Seq[Seq[Double]]])
+    extends UnaryExpression with NativeExpression with PqCodebook {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = true
 
   def compute(vec: ArrayData): ArrayData = {
     val xs = validVec(vec)
@@ -96,15 +88,6 @@ case class PqCodesExpr(child: Expression,
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCodesExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = ($arrCls) $ref.compute($c);
-      ${ev.isNull} = ${ev.value} == null;""")
-  }
-
   override protected def withNewChildInternal(c: Expression): PqCodesExpr =
     copy(child = c)
   override def prettyName: String = "pq_codes"
@@ -113,9 +96,12 @@ case class PqCodesExpr(child: Expression,
 /** Query-side flat ADC distance table: element j*ks+c =
   * d2(slice_j, cb[j][c]). */
 case class PqDistTableExpr(child: Expression,
-    codebooks: Seq[Seq[Seq[Double]]]) extends PqCodebookExpression {
+    codebooks: Seq[Seq[Seq[Double]]])
+    extends UnaryExpression with NativeExpression with PqCodebook {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def nullable: Boolean = true
 
   def compute(vec: ArrayData): ArrayData = {
     val xs = validVec(vec)
@@ -135,15 +121,6 @@ case class PqDistTableExpr(child: Expression,
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqDistTableExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = ($arrCls) $ref.compute($c);
-      ${ev.isNull} = ${ev.value} == null;""")
-  }
 
   override protected def withNewChildInternal(c: Expression): PqDistTableExpr =
     copy(child = c)

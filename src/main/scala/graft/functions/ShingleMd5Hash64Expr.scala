@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -31,21 +30,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * (7.4 s at sf0.1, ~4× the xxhash64 twin).
   */
 case class ShingleMd5Hash64Expr(child: Expression, n: Int,
-    distinct: Boolean) extends UnaryExpression {
+    distinct: Boolean) extends UnaryExpression with NativeExpression {
   require(n >= 1, s"shingle width n=$n must be >= 1")
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_md5_hash64 needs array<string>, got ${other.sql}")
-    }
 
   /** One pass; called from interpreted eval and generated code. */
   def compute(tokens: ArrayData): ArrayData = {
@@ -91,13 +81,6 @@ case class ShingleMd5Hash64Expr(child: Expression, n: Int,
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingleMd5Expr", this)
-    val arrCls = classOf[ArrayData].getName
-    defineCodeGen(ctx, ev, c => s"($arrCls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : ShingleMd5Hash64Expr = copy(child = c)

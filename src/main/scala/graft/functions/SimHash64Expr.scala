@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native Catalyst expression: 64-bit SimHash from an `array<long>` of
   * per-token 64-bit hashes, in one imperative pass (64 vote counters,
@@ -13,8 +12,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * needed 64 interpreted `aggregate` traversals of the array.
   */
 case class SimHash64Expr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeExpression {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
@@ -44,15 +44,6 @@ case class SimHash64Expr(child: Expression)
 
   override def nullSafeEval(input: Any): Any =
     java.lang.Long.valueOf(compute(input.asInstanceOf[ArrayData]))
-
-  /** Real codegen (not CodegenFallback): direct method call on the
-    * referenced instance — stays inside whole-stage codegen, no
-    * per-row boxing. */
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashExpr", this)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression): SimHash64Expr =
     copy(child = c)

@@ -31,20 +31,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * default).
   */
 case class SortedJaccardExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeExpression {
 
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sorted_jaccard needs two array<bigint>, got ${l.sql}, ${r.sql}")
-    }
 
   /** One sorted-merge pass; called from interpreted eval and generated
     * code. Returns null (boxed) when both sides are empty. */
@@ -69,11 +61,11 @@ case class SortedJaccardExpr(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any =
     compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
+  /** Own codegen: a primitive result that can be NULL, so compute()'s
+    * boxed result is unboxed only when it is not null. */
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("sortedJaccardExpr", this)
-    // compute() can return null on (empty, empty): route through a
-    // boxed temp and set isNull — defineCodeGen assumes non-null.
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val boxed = ctx.freshName("jac")
       s"""java.lang.Double $boxed = $ref.compute($a, $b);

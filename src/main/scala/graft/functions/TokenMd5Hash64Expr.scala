@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,21 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * (higher-order functions evaluate their lambda per element with no
   * codegen — the measured dominant cost of the simhash query).
   */
-case class TokenMd5Hash64Expr(child: Expression) extends UnaryExpression {
+case class TokenMd5Hash64Expr(child: Expression)
+    extends UnaryExpression with NativeExpression {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_md5_hash64 needs array<string>, got ${other.sql}")
-    }
-  }
 
   /** One pass over the token array; called from interpreted eval and
     * generated code. NULL elements hash as empty strings (the SQL
@@ -60,13 +50,6 @@ case class TokenMd5Hash64Expr(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("md5Hash64Expr", this)
-    val arrCls = classOf[ArrayData].getName
-    defineCodeGen(ctx, ev, c => s"($arrCls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : TokenMd5Hash64Expr = copy(child = c)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 
@@ -16,21 +15,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   * odds ~1e-8 per pair, the same stance as the dedup operators).
   */
 case class TopShingleFreqExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeExpression {
   require(n >= 1, s"shingle width n=$n must be >= 1")
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_shingle_freq needs array<string>, got ${other.sql}")
-    }
 
   /** One pass; called from interpreted eval and generated code. */
   def compute(tokens: ArrayData): Double = {
@@ -53,12 +43,6 @@ case class TopShingleFreqExpr(child: Expression, n: Int)
 
   override def nullSafeEval(input: Any): Any =
     java.lang.Double.valueOf(compute(input.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("topFreqExpr", this)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : TopShingleFreqExpr = copy(child = c)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,25 +24,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Native for the BpeEncodeExpr reason: the DP is |word|·maxPieceLen
   * hash probes per word — as a Column HOF chain that is nested
-  * interpreted folds; here it is one codegen'd call (real doGenCode,
-  * compute() + addReferenceObj — the repo's expression discipline). */
+  * interpreted folds; here it is one codegen'd call (the
+  * [[NativeExpression]] scaffold). */
 case class ViterbiSegmentExpr(child: Expression,
-    pieces: Seq[String], logProbs: Seq[Double]) extends UnaryExpression {
+    pieces: Seq[String], logProbs: Seq[Double])
+    extends UnaryExpression with NativeExpression {
   require(pieces.length == logProbs.length,
     s"${pieces.length} pieces vs ${logProbs.length} logProbs")
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"viterbi_segment needs string, got ${other.sql}")
-    }
 
   @transient private lazy val lpMap: java.util.HashMap[String, java.lang.Double] = {
     val m = new java.util.HashMap[String, java.lang.Double](pieces.length * 2)
@@ -103,13 +94,6 @@ case class ViterbiSegmentExpr(child: Expression,
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("viterbiSegmentExpr", this)
-    val arrCls = classOf[ArrayData].getName
-    defineCodeGen(ctx, ev, c => s"($arrCls) $ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression)
       : ViterbiSegmentExpr = copy(child = c)

@@ -6,12 +6,13 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.NativeExpression
 
 /** The nested `Site` message of [[ProtoRecord]]: field 2 (`site`) and
   * each element of field 8 (`stores`). */
@@ -417,23 +418,12 @@ object ProtoCodec {
   * Strings land as `UTF8String` slices straight off the record bytes
   * (no intermediate java.lang.String); codegen'd via a direct
   * `compute` call. */
-case class ProtoParseExpr(child: Expression) extends UnaryExpression {
+case class ProtoParseExpr(child: Expression)
+    extends UnaryExpression with NativeExpression {
   import ProtoWire._
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("site", StructType(Seq(
-      StructField("id", StringType), StructField("kind", StringType)))),
-    StructField("score", DoubleType),
-    StructField("flag", BooleanType),
-    StructField("ts", LongType),
-    StructField("tags", org.apache.spark.sql.types.ArrayType(LongType)),
-    StructField("attrs",
-      org.apache.spark.sql.types.MapType(StringType, LongType)),
-    StructField("stores", org.apache.spark.sql.types.ArrayType(
-      StructType(Seq(StructField("id", StringType),
-        StructField("kind", StringType))))),
-    StructField("_corrupt", StringType)))
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
+  override def dataType: DataType = ProtoParseExpr.Schema
   override def nullable: Boolean = true
 
   /** Parses one `Site` fragment, MERGING into `base` (null base =
@@ -559,19 +549,29 @@ case class ProtoParseExpr(child: Expression) extends UnaryExpression {
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("protoParseExpr", this)
-    val rowCls = classOf[InternalRow].getName
-    defineCodeGen(ctx, ev, c => s"($rowCls) $ref.compute($c)")
-  }
-
   override protected def withNewChildInternal(c: Expression): ProtoParseExpr =
     copy(child = c)
   override def prettyName: String = "proto_parse"
 }
 
 object ProtoParseExpr {
+  /** The parsed record; every field but `_corrupt` is also a field of
+    * [[ProtoEncodeExpr]]'s input. */
+  val Schema: StructType = StructType(Seq(
+    StructField("id", LongType),
+    StructField("site", StructType(Seq(
+      StructField("id", StringType), StructField("kind", StringType)))),
+    StructField("score", DoubleType),
+    StructField("flag", BooleanType),
+    StructField("ts", LongType),
+    StructField("tags", org.apache.spark.sql.types.ArrayType(LongType)),
+    StructField("attrs",
+      org.apache.spark.sql.types.MapType(StringType, LongType)),
+    StructField("stores", org.apache.spark.sql.types.ArrayType(
+      StructType(Seq(StructField("id", StringType),
+        StructField("kind", StringType))))),
+    StructField("_corrupt", StringType)))
+
   /** Shared read-only empties for the absent-repeated/map common case
     * (UnsafeProjection COPIES values out, so cross-row sharing is
     * safe); keeps the hot decode path allocation-free for messages
@@ -591,9 +591,20 @@ object ProtoParseExpr {
   * and the throughput A/B. Null input struct → null bytes; a null
   * `site` field omits field 2; null strings inside site encode as
   * absent (decode to ""). */
-case class ProtoEncodeExpr(child: Expression) extends UnaryExpression {
+case class ProtoEncodeExpr(child: Expression)
+    extends UnaryExpression with NativeExpression {
   import ProtoWire._
 
+  /** The first 5 to 8 fields of [[ProtoParseExpr.Schema]], names and
+    * types included: the trailing repeated, map and repeated-message
+    * fields are optional (see `compute`). */
+  override def inputTypes: Seq[DataType] = {
+    val width = child.dataType match {
+      case s: StructType => math.min(math.max(s.length, 5), 8)
+      case _ => 8
+    }
+    Seq(StructType(ProtoParseExpr.Schema.take(width)))
+  }
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
 
@@ -694,12 +705,6 @@ case class ProtoEncodeExpr(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[InternalRow])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("protoEncodeExpr", this)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
 
   override protected def withNewChildInternal(c: Expression): ProtoEncodeExpr =
     copy(child = c)

@@ -331,7 +331,7 @@ object OperatorQueries {
         clamp = false)))
     pipe.processBatch(msgs, 0L)
     pipe.close()
-    s.read.parquet(s"$root/out/_manifest")
+    s.read.parquet(s"$root/out/_manifest/*.parquet")
       .select("seg_index", "size_mb", "tables")
   }
 

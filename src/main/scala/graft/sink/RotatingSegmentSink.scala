@@ -108,8 +108,13 @@ final case class TableStats(rows: Long, bytes: Long)
   * before its marker, which the engine replays — and closes each dir
   * that still holds rows through the close routine. A segment whose
   * close was in flight at a crash has no manifest entry, so it is
-  * closed here. A sink with `writeManifest = false` has no such record
-  * and skips recovery.
+  * closed here.
+  *
+  * Reading: the manifest is the read contract. Read it by the glob of
+  * its files, `*.parquet` inside `<baseDir>/_manifest`: Spark treats a
+  * path whose last name starts with `_` as hidden, so reading the
+  * `_manifest` dir itself logs `All paths were ignored` (the rows come
+  * back all the same).
   */
 final class RotatingSegmentSink(
     spark: SparkSession,
@@ -117,8 +122,7 @@ final class RotatingSegmentSink(
     prefix: String = "seg",
     policy: RotationPolicy = RotationPolicy(),
     runner: Option[SegmentRunner] = None,
-    metrics: Option[PipelineMetrics] = None,
-    writeManifest: Boolean = true) {
+    metrics: Option[PipelineMetrics] = None) {
   import RotatingSegmentSink._
 
   private val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd_HH-mm-ss")
@@ -337,7 +341,7 @@ final class RotatingSegmentSink(
         if (r.deleteOnDone) r.deleteSegment(spark, info.path)
       }
       val t1 = System.nanoTime()
-      if (writeManifest) writeManifestRow(info)
+      writeManifestRow(info)
       val t2 = System.nanoTime()
       pruneMarkers(c.epochs)
       metrics.foreach { m =>
@@ -391,7 +395,7 @@ final class RotatingSegmentSink(
     * at the next call, after that close ran again. */
   private def recoverOnce(): Unit =
     if (!recovered) {
-      if (writeManifest) recover()
+      recover()
       recovered = true
     }
 

@@ -44,12 +44,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * rotation or `finalRotate`, also for a query restarted in the same
   * JVM. Rename is a metadata op on HDFS-likes; on S3-likes
   * it copies — there, point `path` at a rename-capable store or
-  * accept the copy (the manifest, not listing, is the read contract).
+  * accept the copy (the manifest, not listing, is the read contract:
+  * read it by the glob `*.parquet` inside `<path>/_manifest`, see
+  * [[RotatingSegmentSink]]).
   *
   * Options: `path` (required), `table` (logical table, default
   * `events`), `prefix`, `thresholdMB`/`durationSec`/`clamp` (the
-  * [[RotationPolicy]] knobs, reference-clamped by default),
-  * `manifest` (default true). One provider instance writes ONE
+  * [[RotationPolicy]] knobs, reference-clamped by default). Every
+  * closed segment gets its manifest entry, and crash recovery always
+  * runs. One provider instance writes ONE
   * logical table — the Kafka writer's one-topic shape; multi-table
   * fan-out stays on the library sink. */
 class SegmentWriteProvider extends TableProvider
@@ -91,9 +94,7 @@ private[sink] class SegmentWriteTable(baseDir: String,
               durationSec =
                 Option(opts.get("durationSec")).map(_.toLong).getOrElse(60L),
               clamp =
-                Option(opts.get("clamp")).forall(_.toBoolean)),
-            writeManifest =
-              Option(opts.get("manifest")).forall(_.toBoolean))
+                Option(opts.get("clamp")).forall(_.toBoolean)))
       }
     }
 }
@@ -130,14 +131,14 @@ object SegmentWrites {
 
 private[sink] class SegmentStreamingWrite(baseDir: String,
     schema: StructType, queryId: String, table: String, prefix: String,
-    policy: RotationPolicy, writeManifest: Boolean)
+    policy: RotationPolicy)
     extends StreamingWrite {
 
   // rotation, naming, clamps, manifest and commit are the library
   // sink's, shared by construction
   private lazy val sink = SegmentWrites.sink(baseDir,
     new RotatingSegmentSink(SparkSession.active, baseDir, prefix = prefix,
-      policy = policy, writeManifest = writeManifest))
+      policy = policy))
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {
     val (dir, qid, tables, conf) =

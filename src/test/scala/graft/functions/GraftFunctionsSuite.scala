@@ -149,6 +149,50 @@ class GraftFunctionsSuite extends SparkSpec {
     }
   }
 
+  test("simhash64 and minhash_signature reject array<int> and string " +
+      "inputs at analysis, naming the function") {
+    GraftFunctions.register(spark)
+    val df = spark.range(4).select(col("id"),
+      array(col("id").cast("int"), (col("id") + 1).cast("int"), lit(7))
+        .as("ai"),
+      array(col("id"), col("id") + 1, lit(7L)).as("al"),
+      col("id").cast("string").as("s"))
+    df.createOrReplaceTempView("gf_types")
+    // array<bigint> results are unchanged
+    val ok = spark.sql(
+      """SELECT graft_simhash64(al) AS sim,
+        |  graft_minhash_signature(al, 2, 1L) AS sig
+        |FROM gf_types ORDER BY id""".stripMargin).collect()
+    assert(ok.map(_.getLong(0)).toSeq == Seq(1L, 3L, 3L, 7L))
+    val ref = df.orderBy("id")
+      .select(graft.llm.Dedup.minhashSignature(col("al"), 2, 1L))
+      .collect().map(_.getSeq[Long](0))
+    assert(ok.map(_.getSeq[Long](1)).toSeq == ref.toSeq)
+    def rejected(name: String, arg: String)(run: => Any): Unit = {
+      val err = intercept[org.apache.spark.sql.AnalysisException](run)
+      assert(err.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
+        err.getMessage.take(300))
+      assert(err.getMessage.contains(s"$name($arg)") &&
+        err.getMessage.contains("\"ARRAY<BIGINT>\""),
+        err.getMessage.take(300))
+    }
+    Seq("ai", "s").foreach { c =>
+      rejected("simhash64", c) {
+        spark.sql(s"SELECT graft_simhash64($c) FROM gf_types")
+      }
+      rejected("minhash_signature", c) {
+        spark.sql(s"SELECT graft_minhash_signature($c, 2, 1L) FROM gf_types")
+      }
+      // the same check through the Column API
+      rejected("simhash64", c) {
+        df.select(SimHash64Expr.simhash64(col(c)))
+      }
+      rejected("minhash_signature", c) {
+        df.select(MinHashSignatureExpr.minhash_signature(col(c), 2, 1L))
+      }
+    }
+  }
+
   test("GraftExtensions injects the functions (static-conf route)") {
     val orig = spark
     SparkSession.clearActiveSession()

@@ -54,6 +54,12 @@ class MinHashSignatureExprSuite extends SparkSpec {
     assert(proj(InternalRow(new GenericArrayData(Array.empty[Long])))
       .isNullAt(0)) // empty → NULL survives codegen
     assert(proj(InternalRow(null)).isNullAt(0)) // null child
+    // a non-nullable child: the empty → NULL result still survives
+    val strict = GenerateUnsafeProjection.generate(Seq(MinHashSignatureExpr(
+      BoundReference(0, ArrayType(LongType), nullable = false), 4, 7L)))
+    assert(strict(InternalRow(new GenericArrayData(Array.empty[Long])))
+      .isNullAt(0))
+    assert(!strict(InternalRow(new GenericArrayData(Array(3L)))).isNullAt(0))
   }
 
   test("SQL registration works") {

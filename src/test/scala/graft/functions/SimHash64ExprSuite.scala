@@ -37,6 +37,22 @@ class SimHash64ExprSuite extends SparkSpec {
     out.foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1))
     }
+    // generated code ≡ interpreted eval, a NULL input included
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val expr = TokenMd5Hash64Expr(
+      BoundReference(0, ArrayType(StringType), nullable = true))
+    val proj = GenerateUnsafeProjection.generate(Seq(expr)) // throws on bad code
+    val in = InternalRow(new GenericArrayData(
+      Array[Any](UTF8String.fromString("résumé"), UTF8String.fromString(""))))
+    assert(proj(in).getArray(0).toLongArray.toSeq ==
+      expr.eval(in).asInstanceOf[ArrayData].toLongArray.toSeq)
+    assert(proj(InternalRow(null)).isNullAt(0))
+    assert(expr.eval(InternalRow(null)) == null)
   }
 
   test("doGenCode compiles and matches eval (no silent fallback)") {

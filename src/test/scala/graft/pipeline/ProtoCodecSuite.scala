@@ -365,6 +365,16 @@ class ProtoCodecSuite extends SparkSpec {
       1.5, true, -2L))
     assert(proj(InternalRow(in)).getBinary(0).toSeq == goldenBytes.toSeq)
     assert(proj(InternalRow(null)).isNullAt(0))
+    // input types: the first 5 to 8 parsed fields, names and types
+    def typeChecks(t: org.apache.spark.sql.types.DataType): Boolean =
+      ProtoEncodeExpr(BoundReference(0, t, nullable = true))
+        .checkInputDataTypes().isSuccess
+    val parsed = ProtoParseExpr.Schema.dropRight(1)
+    assert((5 to 8).forall(n => typeChecks(StructType(parsed.take(n)))))
+    assert(!typeChecks(StructType(parsed.take(4))))
+    assert(!typeChecks(StructType(StructField("id", StringType) +:
+      parsed.tail.take(4))))
+    assert(!typeChecks(StringType))
   }
 
   test("typed and columnar encoders agree on map key order beyond the " +

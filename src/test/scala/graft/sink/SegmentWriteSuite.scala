@@ -301,8 +301,7 @@ class SegmentWriteSuite extends SparkSpec {
     val write = new SegmentStreamingWrite(out, schema, queryId = "q1",
       table = "t", prefix = "seg",
       policy = RotationPolicy(thresholdMB = 1000000, durationSec = 1000000,
-        clamp = false),
-      writeManifest = true)
+        clamp = false))
     val factory = write.createStreamingWriterFactory(null)
 
     def runEpoch(epochId: Long, ids: Seq[Long]): WriterCommitMessage = {
