@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.fs.NioLocalFileSystem
 import graft.normalize.{Normalizer, NormalizerSpec}
 import graft.ops.{CustomTransform, Stages}
 import graft.runner.SegmentRunner
@@ -231,6 +232,8 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
     config.trigger.foreach(t => w = w.trigger(t))
     config.checkpointDir.foreach(d => w = w.option("checkpointLocation", d))
     spark.streams.addListener(progressListener)
+    // before start(): the query builds its checkpoint logs there
+    NioLocalFileSystem.installFileContext(spark.sparkContext)
     val q = w.start()
     query = Some(q)
     q

@@ -18,6 +18,7 @@ import org.apache.spark.sql.graftbridge.ParquetBridge
 import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.fs.NioLocalFileSystem
 import graft.pipeline.PipelineMetrics
 import graft.runner.SegmentRunner
 
@@ -99,7 +100,9 @@ final case class TableStats(rows: Long, bytes: Long)
   *
   * The Hadoop conf is built once per sink from the session (so
   * session-set options such as `fs.<scheme>.impl` reach the sink) and
-  * broadcast once for the staging tasks.
+  * broadcast once for the staging tasks. Unless the session names its
+  * own, its `file:` filesystem is [[graft.fs.NioLocalFileSystem]], so
+  * local parts, markers and manifest files fork no `chmod`.
   *
   * Crash recovery (one writer per `baseDir`): the first commit or
   * close of a sink waits for any close in flight on the same dir in
@@ -127,7 +130,8 @@ final class RotatingSegmentSink(
 
   private val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd_HH-mm-ss")
     .withZone(ZoneOffset.UTC)
-  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private val hadoopConf =
+    NioLocalFileSystem.install(spark.sessionState.newHadoopConf())
   /** The sink's Hadoop conf for its staging tasks, broadcast once. */
   private[graft] val taskConf: Broadcast[SerializableConfiguration] =
     spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))

@@ -11,6 +11,8 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.fs.NioLocalFileSystem
+
 /** K1's sink as a REAL DataSource-V2 streaming sink — the write-side
   * mirror of [[graft.sources.BinaryQueueProvider]]: the exact
   * `SupportsWrite`/`StreamingWrite` API the Kafka connector's writer
@@ -70,6 +72,9 @@ class SegmentWriteProvider extends TableProvider
     val dir = Option(opts.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "graft-binsegment needs a path option (the segment base dir)"))
+    // table resolution precedes the query's checkpoint logs; the sink
+    // itself is built only at the first commit
+    NioLocalFileSystem.installFileContext(SparkSession.active.sparkContext)
     new SegmentWriteTable(dir, schema, opts)
   }
 }

@@ -119,8 +119,10 @@ private[sources] class BinQueueMicroBatchStream(dir: String,
   // session-set Hadoop option — s3a credentials, endpoint overrides,
   // custom fs.<scheme>.impl schemes. A broadcast, because a conf
   // shipped inside the reader factory (~34 KB) is deserialized by every
-  // task.
-  private val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
+  // task. Local files (the `.idx` sidecars) go through the fork-free
+  // NioLocalFileSystem unless the session names its own file: impl.
+  private val hadoopConf = graft.fs.NioLocalFileSystem.install(
+    SparkSession.active.sessionState.newHadoopConf())
   private val confBc = SparkSession.active.sparkContext.broadcast(
     new org.apache.spark.util.SerializableConfiguration(hadoopConf))
 
