@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
 import org.apache.hadoop.fs.local.{LocalConfigKeys, LocalFs}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
 
 /** Hadoop's local filesystem without the shell forks.
   *
@@ -94,18 +95,31 @@ object NioLocalFileSystem {
   private val FsKey = "fs.file.impl"
   private val FileContextKey = "fs.AbstractFileSystem.file.impl"
 
-  /** Route `conf`'s `file:` FileSystem through [[NioLocalFileSystem]]
-    * unless `conf` names an implementation of its own. Also turns off
-    * the `file:` instance cache on `conf`: the JVM-wide cached instance
-    * ignores `fs.file.impl`. Returns `conf`. */
-  def install(conf: Configuration): Configuration = {
+  /** The keys that route `conf`'s `file:` FileSystem through
+    * [[NioLocalFileSystem]], none when `conf` names an implementation of
+    * its own. They also turn off the `file:` instance cache: the
+    * JVM-wide cached instance ignores `fs.file.impl`. */
+  private def keys(conf: Configuration): Seq[(String, String)] = {
     val own = conf.get(FsKey)
-    if (own == null || own == classOf[LocalFileSystem].getName) {
-      conf.set(FsKey, classOf[NioLocalFileSystem].getName)
-      conf.setBoolean(s"$FsKey.disable.cache", true)
-    }
+    if (own != null && own != classOf[LocalFileSystem].getName) Nil
+    else Seq(FsKey -> classOf[NioLocalFileSystem].getName,
+      s"$FsKey.disable.cache" -> "true")
+  }
+
+  /** Set [[keys]] on `conf`. Returns `conf`. */
+  def install(conf: Configuration): Configuration = {
+    keys(conf).foreach { case (k, v) => conf.set(k, v) }
     conf
   }
+
+  /** Set [[keys]] on `spark`'s SQL conf, which every Hadoop conf the
+    * session builds copies: its reads, writes and their tasks then
+    * fork no `chmod`. For a session of graft's own, such as the
+    * segment runner's clone; a caller's session is left as it is. */
+  def install(spark: SparkSession): Unit =
+    keys(spark.sessionState.newHadoopConf()).foreach {
+      case (k, v) => spark.conf.set(k, v)
+    }
 
   /** Route FileContext's `file:` filesystem — Spark's checkpoint logs —
     * through [[NioLocalFs]] on `sc`'s Hadoop conf, unless it names an

@@ -97,6 +97,7 @@ final class PipelineMetrics(
   private val totalPhaseNs = new Array[Long](Phases.length)
   private var batchesCommitted = 0L
   private var closeWaitNs = 0L
+  private val runnerCloseNs = scala.collection.mutable.Queue[Long]() // last 100
   private val tableTotals =
     scala.collection.mutable.LinkedHashMap[String, TableStats]()
 
@@ -105,9 +106,12 @@ final class PipelineMetrics(
   }
 
   /** One segment closed, on the sink's close thread: its runner and
-    * manifest time ("last" is the last close's). */
+    * manifest time ("last" is the last close's). The runner times of
+    * the last 100 closes give `runner_close_ms`. */
   def recordRotation(runnerNs: Long, manifestNs: Long): Unit = synchronized {
     addPhase(3, runnerNs); addPhase(4, manifestNs)
+    runnerCloseNs.enqueue(runnerNs)
+    if (runnerCloseNs.size > 100) runnerCloseNs.dequeue()
   }
 
   /** A rotation or a pipeline close waited `ns` for an earlier segment
@@ -134,12 +138,18 @@ final class PipelineMetrics(
       .mkString("{", ", ", "}")
     def per(f: TableStats => Long) = tableTotals
       .map { case (t, s) => s""""$t": ${f(s)}""" }.mkString("{", ", ", "}")
+    // nearest rank over the window of closes
+    def pct(sorted: IndexedSeq[Long], p: Double) =
+      sorted(math.ceil(p * sorted.length).toInt - 1) / 1e6
+    val runner = Option(runnerCloseNs.toIndexedSeq.sorted).filter(_.nonEmpty)
+      .map(r => "runner_close_ms" -> (f"""{"p50": ${pct(r, 0.5)}%.1f, """ +
+        f""""p99": ${pct(r, 0.99)}%.1f, "closes": ${r.length}}"""))
     if (batchesCommitted == 0) Nil
     else Seq(
       "batches_committed" -> batchesCommitted.toString,
       "last_batch_ms" -> ms(lastPhaseNs),
       "total_batch_ms" -> ms(totalPhaseNs),
-      "close_wait_ms" -> f"${closeWaitNs / 1e6}%.1f",
+      "close_wait_ms" -> f"${closeWaitNs / 1e6}%.1f") ++ runner ++ Seq(
       "table_rows" -> per(_.rows),
       "table_bytes" -> per(_.bytes))
   }
@@ -304,6 +314,7 @@ final class PipelineMetrics(
       java.util.Arrays.fill(lastPhaseNs, 0L)
       java.util.Arrays.fill(totalPhaseNs, 0L)
       batchesCommitted = 0L; closeWaitNs = 0L
+      runnerCloseNs.clear()
       tableTotals.clear()
     }
     samples.clear()

@@ -1,9 +1,16 @@
 package graft.runner
 
-import org.apache.hadoop.fs.Path
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.plans.logical.CommandResult
-import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.graftbridge.{ParquetBridge, SessionBridge}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.fs.NioLocalFileSystem
 
 /** Export sink for one per-segment statement — COPY-TO / EXPORT parity
   * with the reference's exec-mode statements
@@ -71,7 +78,12 @@ final case class SegmentRunner(
     * disturbed. Temp views the statements create are copied back to
     * `spark` (a statement's effect lands where it did when it ran in the
     * caller's session). `segmentDir` resolves the `${segment}` token in
-    * sink paths. */
+    * sink paths.
+    *
+    * Each table is read as [[SegmentScan]] reads it: in splits sized by
+    * its bytes, not one task per part, with its schema from one part's
+    * footer. Unless the session names its own `file:` filesystem, the
+    * clone writes exports through [[graft.fs.NioLocalFileSystem]]. */
   def run(spark: SparkSession, tables: Map[String, String],
       segmentDir: Option[String] = None): Seq[Throwable] =
     SessionBridge.inClone(spark, own = tables.keySet)(
@@ -80,9 +92,11 @@ final case class SegmentRunner(
   private def runIn(spark: SparkSession, tables: Map[String, String],
       segmentDir: Option[String]): Seq[Throwable] = {
     val errs = scala.collection.mutable.Buffer[Throwable]()
+    NioLocalFileSystem.install(spark)
+    val hadoopConf = spark.sessionState.newHadoopConf()
     val views = tables.flatMap { case (name, dir) =>
       try {
-        val df = spark.read.parquet(dir)
+        val df = SegmentScan.read(spark, hadoopConf, name, dir)
         df.createOrReplaceTempView(name)
         Some(name -> df)
       } catch { case t: Throwable => errs += t; None }
@@ -132,4 +146,61 @@ final case class SegmentRunner(
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(p, true)
   }
+}
+
+/** How the runner reads one closed segment table. A segment holds many
+  * small parts (one per staging task and micro-batch), and a plain
+  * `spark.read.parquet` pays two costs for them on the close thread:
+  *  - a schema-inference job that reads one footer in one task;
+  *  - one scan task per part, because a part is smaller than Spark's
+  *    open cost and no two parts share a split. Those tasks queue
+  *    ahead of the next micro-batch's on the shared executors.
+  *
+  * So the schema comes from one part's footer, read on the driver
+  * (what Spark's inference without merging reads), and the scan is
+  * coalesced to `k = ceil(bytes / maxSplit)` splits, where `maxSplit`
+  * is Spark's `FilePartition.maxSplitBytes` for the table taken as one
+  * file, and `k` is at most the part count. Filters and column pruning
+  * still reach the scan. Spark's inference stays where the footer path
+  * would differ from it: `spark.sql.parquet.mergeSchema` set, a footer
+  * without Spark's schema, or no part at the dir's root (a partitioned
+  * dir, whose partition columns no footer holds). */
+private[runner] object SegmentScan {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[SegmentRunner])
+
+  /** Spark's file index skips these names (`HadoopFSUtils`). */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** `dir`'s parquet table as a DataFrame of `spark`; `conf` is the
+    * session's Hadoop conf. */
+  def read(spark: SparkSession, conf: Configuration, name: String,
+      dir: String): DataFrame = {
+    val path = new Path(dir)
+    // a missing dir goes to Spark's read, which names it in its error
+    val listing = try path.getFileSystem(conf).listStatus(path).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val parts = listing.filter(s => s.isFile && !hidden(s.getPath.getName))
+    val bytes = parts.map(_.getLen).sum
+    val sqlConf = spark.sessionState.conf
+    val schema =
+      if (parts.isEmpty || sqlConf.getConf(SQLConf.PARQUET_SCHEMA_MERGING_ENABLED)) None
+      else footerSchema(parts.head, conf, sqlConf)
+    val df = schema.fold(spark.read)(spark.read.schema).parquet(dir)
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      bytes + sqlConf.filesOpenCostInBytes)
+    val k = math.max(1L, math.min(parts.length.toLong,
+      (bytes + maxSplit - 1) / maxSplit)).toInt
+    log.info(s"segment table $name: ${parts.length} files, $bytes bytes, " +
+      s"$k splits, schema from ${if (schema.isDefined) "a footer" else "inference"}")
+    if (k < parts.length) df.coalesce(k) else df
+  }
+
+  /** None sends the read to Spark's inference, which also reports a
+    * footer that cannot be read. */
+  private def footerSchema(part: FileStatus, conf: Configuration,
+      sqlConf: SQLConf) =
+    try ParquetBridge.sparkSchema(part, conf, sqlConf)
+    catch { case NonFatal(_) => None }
 }

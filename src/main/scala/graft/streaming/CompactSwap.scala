@@ -67,12 +67,14 @@ private[streaming] object CompactSwap {
     * `partitionBy`), from which `spark.read.parquet` cannot infer a
     * schema. Hadoop FS, never java.io.File: the latter is always
     * false for hdfs:// and s3a:// paths (round-11 ADVICE). */
-  def hasDataFile(fs: FileSystem, p: Path): Boolean = fs.exists(p) && {
-    val it = fs.listFiles(p, true)
-    var hit = false
-    while (!hit && it.hasNext)
-      hit = it.next().getPath.getName.endsWith(".parquet")
-    hit
+  def hasDataFile(fs: FileSystem, p: Path): Boolean = {
+    // listStatus, not listFiles: a LocatedFileStatus loads each file's
+    // permission, which Hadoop's local filesystem forks `ls` for
+    def walk(dir: Path): Boolean = fs.listStatus(dir).exists { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else s.getPath.getName.endsWith(".parquet")
+    }
+    fs.exists(p) && walk(p)
   }
 
   def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
@@ -152,7 +154,7 @@ private[streaming] object CompactSwap {
 /** A parquet store partitioned by `batch_id=N` (see [[CompactSwap]]
   * State). `partitionBy` sub-partitions each batch (the vector
   * index's `cid`); compactions stage under `dir/.compact_tmp`. */
-private[streaming] final case class BatchLog(dir: String,
+private[graft] final case class BatchLog(dir: String,
     partitionBy: Seq[String] = Nil) {
   import CompactSwap._
 
