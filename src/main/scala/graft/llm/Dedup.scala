@@ -773,7 +773,16 @@ object Dedup {
     // artifact — every invocation recomputes from its inputs.
     // Ids are read as BIGINT on both paths (an INT pair table gets
     // the same output schema above and below the cap); a probe
-    // holding a NULL id falls through to the loop.
+    // holding a NULL id falls through to the loop. Only integral ids
+    // widen exactly: a string id would fail inside the cast, and a
+    // fractional one would truncate and merge distinct documents.
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    Seq("id_a", "id_b").foreach { c =>
+      val t = pairs.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"dedupClusters needs integral ids; column $c is ${t.simpleString} " +
+          "(accepted: tinyint, smallint, int, bigint)")
+    }
     val ids = pairs.select(col("id_a").cast("long").as("id_a"),
       col("id_b").cast("long").as("id_b"))
     val probe = ids.limit(maxDriverPairs + 1).collect()

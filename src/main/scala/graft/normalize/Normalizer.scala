@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.ExprUtils
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Path segment of the normalizer field DSL: `name` or `name[idx]`. */
 final case class PathSeg(name: String, index: Option[Int]) {
@@ -41,7 +41,8 @@ object PathParser {
   *    columns repeated; an EMPTY list yields exactly one row with NULL
   *    in the list-derived columns (= Spark `explode_outer`);
   *  - `aliases` rename output columns (default: path with separators
-  *    mapped to `_`).
+  *    mapped to `_`); two fields may not output one name, whether by
+  *    alias or by derived name, compared case-insensitively.
   */
 final case class NormalizerSpec(
     fields: Seq[String],
@@ -49,22 +50,29 @@ final case class NormalizerSpec(
     failOnRangeError: Boolean = false) {
   require(aliases.isEmpty || aliases.length == fields.length,
     s"aliases length ${aliases.length} != fields length ${fields.length}")
+  for (j <- outputNames.indices; i <- 0 until j)
+    require(!outputNames(i).equalsIgnoreCase(outputNames(j)),
+      s"normalizer fields '${fields(i)}' and '${fields(j)}' both output " +
+      s"the column '${outputNames(j)}' (output names compare " +
+      "case-insensitively)")
   def outputNames: Seq[String] =
     if (aliases.nonEmpty) aliases
     else fields.map(_.replaceAll("""[\[\]]""", "").replace('.', '_'))
 }
 
 /** Flatten/unnest projection over nested columns — the reference's
-  * normalizer (N1 in SURVEY.md §2) as a pure Catalyst projection:
-  * path resolution compiles to `getField`/`get`/`transform`, so
-  * predicate pushdown, column pruning and whole-stage codegen all
-  * apply. No shuffle is introduced — at 100 TB this stays a map-only
-  * stage fused with the scan.
+  * normalizer (N1 in SURVEY.md §2). No shuffle is introduced — at
+  * 100 TB this stays a map-only stage fused with the scan.
   *
   * [[rows]] is the one definition: per input row, the array of its
-  * normalized rows. [[normalize]] is `inline_outer` over it, and the
-  * pipeline sink writes the array straight into the norm table from
-  * the same scan that writes the raw table.
+  * normalized rows, computed by ONE native expression
+  * ([[NormalizeRowsExpr]], `graft_normalize_rows`) running a path
+  * program compiled here, on the driver. [[normalize]] is
+  * `inline_outer` over it, and the pipeline sink writes the array
+  * straight into the norm table from the same scan that writes the raw
+  * table. Not built from `transform`/`flatten`: Spark interprets
+  * higher-order-function lambdas once per element (SCALE.md, note of
+  * 2026-10-21).
   *
   * Fields sharing an un-indexed list prefix share ONE fan-out (aligned
   * elements). Distinct un-indexed lists nest → cross product (the
@@ -80,42 +88,17 @@ object Normalizer {
   /** `array<struct<outputNames>>`: the normalized rows of one input
     * row, in `explode_outer` order — one row per element of each
     * un-indexed list, and one row with NULL list-derived columns for a
-    * NULL or empty list. The referenced top-level columns are pinned
-    * with [[ExprUtils.bindOnce]], so the per-element lambdas read them
-    * instead of re-running an upstream decode for every element. */
+    * NULL or empty list. The kernel's one input is the struct of the
+    * referenced top-level columns, so an upstream decode runs once per
+    * input row however many rows it fans out to. */
   def rows(schema: StructType, spec: NormalizerSpec): Column = {
     val parsed = spec.fields.map(PathParser.parse)
-
-    // Fan-out points (prefixes ending in an un-indexed array), in
-    // first-seen order; nested ones sort after their parents because
-    // they have strictly more segments.
-    val points = mutable.LinkedHashMap[String, Seq[PathSeg]]()
-    parsed.foreach { segs =>
-      explodePrefixes(schema, segs).foreach { p =>
-        points.getOrElseUpdate(canonical(p), p)
-      }
-    }
-    val ordered = points.values.toSeq.sortBy(_.length)
-    val roots = parsed.map(_.head.name).distinct
-
-    ExprUtils.bindOnce(struct(roots.map(n => col(n).as(n)): _*)) { r =>
-      // bound: canonical fan-out point -> its current element
-      def level(k: Int, bound: Map[String, Column]): Column =
-        if (k == ordered.length) {
-          array(struct(parsed.zip(spec.outputNames).map { case (segs, name) =>
-            resolve(schema, segs, r, bound, spec.failOnRangeError).as(name)
-          }: _*))
-        } else {
-          val segs = ordered(k)
-          val arr = resolve(schema, segs, r, bound, spec.failOnRangeError)
-          val nullElem = lit(null).cast(arrayElementType(schema, segs))
-          val outer = when(arr.isNull || size(arr) === 0, array(nullElem))
-            .otherwise(arr)
-          flatten(transform(outer,
-            x => level(k + 1, bound + (canonical(segs) -> x))))
-        }
-      level(0, Map.empty)
-    }
+    val rootType = StructType(parsed.distinctBy(_.head.name).map(segs =>
+      schema.fields(fieldIndex(schema, segs.head, segs))))
+    ColumnBridge.column(NormalizeRowsExpr(
+      ColumnBridge.expression(
+        struct(rootType.fieldNames.map(n => col(n).as(n)).toIndexedSeq: _*)),
+      compile(rootType, spec)))
   }
 
   /** Derive the flat output schema of `normalize(df, spec)` without
@@ -125,28 +108,62 @@ object Normalizer {
     * /root/reference/quacfka.go:110-111). Un-indexed list paths
     * resolve to their ELEMENT type (the per-row fan-out type); all
     * outputs are nullable (empty-list ⇒ NULL-row semantics). */
-  def normalizedSchema(schema: StructType, spec: NormalizerSpec): StructType = {
-    val fields = spec.fields.map(PathParser.parse)
-      .zip(spec.outputNames).map { case (segs, name) =>
-        var dt: DataType = schema
-        segs.foreach { seg =>
-          dt = structField(dt, seg, segs) match {
-            case ArrayType(elem, _) => elem // indexed OR exploded element
-            case other => other
-          }
+  def normalizedSchema(schema: StructType, spec: NormalizerSpec): StructType =
+    StructType(compile(schema, spec).rowType.map(_.copy(nullable = true)))
+
+  /** Compile `spec` against `root` into the kernel's path program.
+    * Fan-out points are the path prefixes ending in an un-indexed
+    * array, in first-seen order, nested ones after their parents (they
+    * have strictly more segments). Each path starts from the longest
+    * of its prefixes that is a point already entered (for a point, an
+    * earlier one). A field is nullable when it comes from a list
+    * element, passes an index, or passes a nullable field. */
+  private[normalize] def compile(
+      root: StructType, spec: NormalizerSpec): NormalizerProgram = {
+    val parsed = spec.fields.map(PathParser.parse)
+    val points = parsed.flatMap(explodePrefixes(root, _))
+      .distinctBy(canonical).sortBy(_.length)
+    val keys = points.map(canonical)
+
+    // (compiled path, its value type, whether it can be NULL)
+    def path(segs: Seq[PathSeg],
+        entered: Int): (CompiledPath, DataType, Boolean) = {
+      val from = (segs.length to 1 by -1).iterator
+        .map(k => keys.indexOf(canonical(segs.take(k))))
+        .find(i => i >= 0 && i < entered).getOrElse(-1)
+      val start = if (from < 0) 0 else points(from).length
+      var dt: DataType =
+        if (from < 0) root else elementType(root, points(from))
+      var nullable = start > 0
+      val hops = segs.drop(start).map { seg =>
+        val ordinal = fieldIndex(dt, seg, segs)
+        val f = dt.asInstanceOf[StructType].fields(ordinal)
+        nullable ||= f.nullable || seg.index.isDefined
+        dt = f.dataType match {
+          case ArrayType(elem, _) if seg.index.isDefined => elem
+          case other => other
         }
-        StructField(name, dt, nullable = true)
+        PathHop(ordinal, f.dataType, seg.index.getOrElse(-1))
       }
-    StructType(fields)
+      (CompiledPath(from, hops, canonical(segs)), dt, nullable)
+    }
+
+    val fields = parsed.map(path(_, points.length))
+    NormalizerProgram(root,
+      points.zipWithIndex.map { case (p, k) => path(p, k)._1 },
+      fields.map(_._1),
+      StructType(spec.outputNames.zip(fields).map { case (n, (_, dt, nul)) =>
+        StructField(n, dt, nul) }),
+      spec.failOnRangeError)
   }
 
-  private def canonical(segs: Seq[PathSeg]): String =
+  private[normalize] def canonical(segs: Seq[PathSeg]): String =
     segs.map(_.canonical).mkString(".")
 
   /** All prefixes of `segs` that end at an un-indexed array field
     * (each such prefix is one fan-out). The terminal segment counts:
     * an un-indexed terminal array also fans out per element. */
-  private def explodePrefixes(
+  private[normalize] def explodePrefixes(
       schema: StructType, segs: Seq[PathSeg]): Seq[Seq[PathSeg]] = {
     val out = mutable.Buffer[Seq[PathSeg]]()
     var dt: DataType = schema
@@ -154,85 +171,42 @@ object Normalizer {
       dt = structField(dt, seg, segs)
       dt match {
         case ArrayType(elem, _) =>
-          if (seg.index.isDefined) dt = elem
-          else { out += segs.take(i + 1); dt = elem }
+          if (seg.index.isEmpty) out += segs.take(i + 1)
+          dt = elem
         case _ => ()
       }
     }
     out.toSeq
   }
 
-  /** Descend one struct field; clear error if the path is invalid. */
-  private def structField(
-      dt: DataType, seg: PathSeg, full: Seq[PathSeg]): DataType = dt match {
-    case st: StructType =>
-      st.fields.find(_.name == seg.name).map(_.dataType).getOrElse {
-        throw new IllegalArgumentException(
+  /** Ordinal of `seg`'s field in `dt`; clear error if the path is
+    * invalid. */
+  private def fieldIndex(dt: DataType, seg: PathSeg, full: Seq[PathSeg]): Int =
+    dt match {
+      case st: StructType =>
+        val i = st.fields.indexWhere(_.name == seg.name)
+        if (i < 0) throw new IllegalArgumentException(
           s"normalizer path '${canonical(full)}': no field '${seg.name}' " +
           s"in struct [${st.fieldNames.mkString(", ")}]")
-      }
-    case other => throw new IllegalArgumentException(
-      s"normalizer path '${canonical(full)}': cannot descend into " +
-      s"${other.simpleString} at '${seg.name}'")
-  }
+        i
+      case other => throw new IllegalArgumentException(
+        s"normalizer path '${canonical(full)}': cannot descend into " +
+        s"${other.simpleString} at '${seg.name}'")
+    }
 
-  /** Element type of the array at fan-out point `segs`. */
-  private def arrayElementType(
-      schema: StructType, segs: Seq[PathSeg]): DataType = {
-    var dt: DataType = schema
-    segs.foreach { seg =>
-      dt = structField(dt, seg, segs) match {
+  /** Descend one struct field; clear error if the path is invalid. */
+  private[normalize] def structField(
+      dt: DataType, seg: PathSeg, full: Seq[PathSeg]): DataType =
+    dt.asInstanceOf[StructType].fields(fieldIndex(dt, seg, full)).dataType
+
+  /** Type reached at the end of `segs`, arrays stepped into (the
+    * element type of the array at a fan-out point). */
+  private[normalize] def elementType(
+      schema: StructType, segs: Seq[PathSeg]): DataType =
+    segs.foldLeft(schema: DataType) { (dt, seg) =>
+      structField(dt, seg, segs) match {
         case ArrayType(elem, _) => elem
         case other => other
       }
     }
-    dt
-  }
-
-  /** Resolve a parsed path to a Column: top-level fields read from
-    * the bound root struct `r`, or from the current element of the
-    * longest fan-out point already entered (`bound`). */
-  private def resolve(
-      rootSchema: StructType,
-      segs: Seq[PathSeg],
-      r: Column,
-      bound: Map[String, Column],
-      strict: Boolean): Column = {
-
-    val start = (segs.length to 1 by -1).find { k =>
-      bound.contains(canonical(segs.take(k)))
-    }.getOrElse(0)
-
-    var c: Column = r
-    var dt: DataType = rootSchema
-    if (start > 0) {
-      c = bound(canonical(segs.take(start)))
-      dt = arrayElementType(rootSchema, segs.take(start))
-    }
-
-    // an un-indexed array left in the path is the fan-out point being
-    // entered (its value is the array); every earlier one is bound
-    segs.drop(start).foreach { seg =>
-      dt = structField(dt, seg, segs)
-      c = c.getField(seg.name)
-      (dt, seg.index) match {
-        case (ArrayType(elem, _), Some(i)) =>
-          c = elementAt(c, i, strict, canonical(segs))
-          dt = elem
-        case _ => ()
-      }
-    }
-    c
-  }
-
-  /** 0-based element access. Lenient → NULL out of range (`get`);
-    * strict → raise, matching `failOnRangeError`
-    * (/root/reference/quacfka.go:114-119). NULL arrays stay NULL. */
-  private def elementAt(
-      arr: Column, idx: Int, strict: Boolean, path: String): Column =
-    if (!strict) get(arr, lit(idx))
-    else when(arr.isNotNull && size(arr) <= lit(idx),
-        raise_error(lit(s"normalizer range error: index $idx out of " +
-          s"range in path '$path'")))
-      .otherwise(get(arr, lit(idx)))
 }

@@ -95,6 +95,11 @@ final class PipelineMetrics(
     "runner", "manifest")
   private val lastPhaseNs = new Array[Long](Phases.length)
   private val totalPhaseNs = new Array[Long](Phases.length)
+  // the staging tasks' time, summed over a batch's tasks: rows pulled
+  // (decode, normalize, routing) and parquet writes
+  private val StageParts = Seq("rows_pulled", "parquet_write")
+  private val lastStageNs = new Array[Long](StageParts.length)
+  private val totalStageNs = new Array[Long](StageParts.length)
   private var batchesCommitted = 0L
   private var closeWaitNs = 0L
   private val runnerCloseNs = scala.collection.mutable.Queue[Long]() // last 100
@@ -118,13 +123,16 @@ final class PipelineMetrics(
     * close to finish (the runner was slower than the segments filled). */
   def recordCloseWait(ns: Long): Unit = synchronized { closeWaitNs += ns }
 
-  /** One batch through the sink: phase times and the committed
-    * per-table rows and bytes (empty for a discarded replay). The
-    * rotate-check time includes any wait for an earlier close, which
-    * `close_wait_ms` also counts. */
+  /** One batch through the sink: phase times, its staging tasks' pull
+    * and write times, and the committed per-table rows and bytes
+    * (empty for a discarded replay). The rotate-check time includes any
+    * wait for an earlier close, which `close_wait_ms` also counts. */
   def recordCommit(tables: Map[String, TableStats],
-      writeNs: Long, commitNs: Long, rotateNs: Long): Unit = synchronized {
+      writeNs: Long, commitNs: Long, rotateNs: Long,
+      pullTaskNs: Long = 0L, writeTaskNs: Long = 0L): Unit = synchronized {
     addPhase(0, writeNs); addPhase(1, commitNs); addPhase(2, rotateNs)
+    lastStageNs(0) = pullTaskNs; totalStageNs(0) += pullTaskNs
+    lastStageNs(1) = writeTaskNs; totalStageNs(1) += writeTaskNs
     batchesCommitted += 1
     tables.toSeq.sortBy(_._1).foreach { case (t, s) =>
       val prev = tableTotals.getOrElse(t, TableStats(0L, 0L))
@@ -133,8 +141,8 @@ final class PipelineMetrics(
   }
 
   private def phaseFields: Seq[(String, String)] = synchronized {
-    def ms(a: Array[Long]) = Phases.indices
-      .map(i => f""""${Phases(i)}": ${a(i) / 1e6}%.1f""")
+    def ms(a: Array[Long], names: Seq[String] = Phases) = names.indices
+      .map(i => f""""${names(i)}": ${a(i) / 1e6}%.1f""")
       .mkString("{", ", ", "}")
     def per(f: TableStats => Long) = tableTotals
       .map { case (t, s) => s""""$t": ${f(s)}""" }.mkString("{", ", ", "}")
@@ -149,6 +157,8 @@ final class PipelineMetrics(
       "batches_committed" -> batchesCommitted.toString,
       "last_batch_ms" -> ms(lastPhaseNs),
       "total_batch_ms" -> ms(totalPhaseNs),
+      "last_stage_task_ms" -> ms(lastStageNs, StageParts),
+      "total_stage_task_ms" -> ms(totalStageNs, StageParts),
       "close_wait_ms" -> f"${closeWaitNs / 1e6}%.1f") ++ runner ++ Seq(
       "table_rows" -> per(_.rows),
       "table_bytes" -> per(_.bytes))
@@ -313,6 +323,8 @@ final class PipelineMetrics(
       lastQueueBehind = -1
       java.util.Arrays.fill(lastPhaseNs, 0L)
       java.util.Arrays.fill(totalPhaseNs, 0L)
+      java.util.Arrays.fill(lastStageNs, 0L)
+      java.util.Arrays.fill(totalStageNs, 0L)
       batchesCommitted = 0L; closeWaitNs = 0L
       runnerCloseNs.clear()
       tableTotals.clear()

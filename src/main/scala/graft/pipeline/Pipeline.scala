@@ -216,7 +216,9 @@ final class Pipeline(val spark: SparkSession, val config: PipelineConfig) {
       sink.maybeRotate()
       metrics.recordCommit(committed.getOrElse(Map.empty),
         writeNs = t1 - t0, commitNs = t2 - t1,
-        rotateNs = System.nanoTime() - t2)
+        rotateNs = System.nanoTime() - t2,
+        pullTaskNs = messages.map(_.pullNs).sum,
+        writeTaskNs = messages.map(_.writeNs).sum)
     } finally if (cached) decoded.unpersist()
   } catch {
     case t: Throwable => metrics.recordError(t); throw t

@@ -42,9 +42,14 @@ final case class SegmentInfo(path: String, index: Long, closedAt: Instant,
 final case class StagedPart(table: String, path: String, rows: Long,
     bytes: Long)
 
-/** What one task of a staging job reports to the driver's commit. */
+/** What one task of a staging job reports to the driver's commit:
+  * its parts and, from [[SegmentDataWriter.stage]], the task's time
+  * split into pulling its input rows (the upstream plan: decode,
+  * normalize, routing) and writing them (the parquet writers, their
+  * close included). */
 final case class SegmentCommitMessage(partitionId: Int,
-    parts: Seq[StagedPart]) extends WriterCommitMessage
+    parts: Seq[StagedPart], pullNs: Long = 0L, writeNs: Long = 0L)
+    extends WriterCommitMessage
 
 /** Per-table totals of one committed batch. */
 final case class TableStats(rows: Long, bytes: Long)
@@ -559,7 +564,12 @@ object SegmentDataWriter {
           val w = new SegmentDataWriter(stagingDir, ctx.partitionId(),
             ctx.taskAttemptId(), tables, conf.value.value)
           try {
+            // two clock reads per input row, around its writes; the
+            // rest of the loop is the pull of the rows
+            val start = System.nanoTime()
+            var writeNs = 0L
             it.foreach { row =>
+              val t = System.nanoTime()
               var c = 0
               while (c < widths.length) {
                 if (!row.isNullAt(c)) {
@@ -573,8 +583,13 @@ object SegmentDataWriter {
                 }
                 c += 1
               }
+              writeNs += System.nanoTime() - t
             }
-            w.commit()
+            val t = System.nanoTime()
+            val m = w.commit()
+            val end = System.nanoTime()
+            writeNs += end - t
+            m.copy(pullNs = end - start - writeNs, writeNs = writeNs)
           } catch { case t: Throwable => w.abort(); throw t }
         }).toSeq
     }

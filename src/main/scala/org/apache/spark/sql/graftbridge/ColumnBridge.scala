@@ -13,3 +13,16 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** `raise_error(message)`'s exception, for a native expression that
+  * reports a user error exactly as the SQL function would (Spark keeps
+  * its error constructors private[sql]). */
+object ErrorBridge {
+  def raiseError(message: String): RuntimeException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.raiseError(
+      org.apache.spark.unsafe.types.UTF8String.fromString("USER_RAISED_EXCEPTION"),
+      org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+        Map[Any, Any](
+          org.apache.spark.unsafe.types.UTF8String.fromString("errorMessage") ->
+            org.apache.spark.unsafe.types.UTF8String.fromString(message))))
+}

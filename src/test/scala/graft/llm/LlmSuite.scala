@@ -1096,6 +1096,26 @@ class LlmSuite extends SparkSpec {
     assert(labels(nulls, 0) == fromNulls)
   }
 
+  test("dedup clusters: only integral ids, other types refused by name " +
+      "on both paths") {
+    val ints = Seq((1, 2), (2, 3)).toDF("id_a", "id_b")
+    Seq(200000, 0).foreach { cap =>
+      assert(Dedup.dedupClusters(ints, maxDriverPairs = cap).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+      Seq(
+        Seq(("a", "b")).toDF("id_a", "id_b") -> ("id_a", "string"),
+        Seq((1.0, 1.2), (1.7, 2.0)).toDF("id_a", "id_b") -> ("id_a", "double"),
+        Seq((1L, BigDecimal(2))).toDF("id_a", "id_b") -> ("id_b", "decimal(38,18)")
+      ).foreach { case (pairs, (c, t)) =>
+        val e = intercept[IllegalArgumentException](
+          Dedup.dedupClusters(pairs, maxDriverPairs = cap))
+        Seq("dedupClusters", s"column $c is $t", "tinyint, smallint, int, bigint")
+          .foreach(s => assert(e.getMessage.contains(s), e.getMessage))
+      }
+    }
+  }
+
   test("dedup clusters on the real pair output keep one rep per planted dup") {
     val out = LlmQueries.dedupClusters(spark, sf0001)
     val sizes = out.collect().map(r => r.getLong(1))

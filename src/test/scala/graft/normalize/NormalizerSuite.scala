@@ -89,6 +89,21 @@ class NormalizerSuite extends SparkSpec {
     assert(spec.outputNames == Seq("site_id", "stores0_gallery_deals_id"))
   }
 
+  test("output names that collide are refused up front, naming both fields") {
+    def refused(spec: => NormalizerSpec, a: String, b: String): Unit = {
+      val e = intercept[IllegalArgumentException](spec)
+      assert(e.getMessage.contains(s"'$a'") && e.getMessage.contains(s"'$b'"),
+        e.getMessage)
+    }
+    refused(NormalizerSpec(Seq("event_id", "event_type"), Seq("x", "x")),
+      "event_id", "event_type")
+    // by derived name, and case-insensitively
+    refused(NormalizerSpec(Seq("site.id", "site_id")), "site.id", "site_id")
+    refused(NormalizerSpec(Seq("id", "site.id"), Seq("ID", "id")), "id", "site.id")
+    assert(NormalizerSpec(Seq("id", "site.id"), Seq("id", "site")).outputNames ==
+      Seq("id", "site"))
+  }
+
   test("bad path reports the missing field") {
     val e = intercept[IllegalArgumentException] {
       Normalizer.normalize(fixture.toDF(),

@@ -374,6 +374,55 @@ class PipelineSuite extends SparkSpec {
     assert(r.contains("\"dead\": 5"), r)
   }
 
+  test("the staging job normalizes with the native kernel, and the " +
+      "report splits its task time into rows pulled and parquet writes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val root = Files.createTempDirectory("graft-kernel").toString
+    val batch = (0L until 40L).map(i =>
+      (s"""{"event_id":$i,"user_id":${i % 7},"event_type":"t${i % 3}",""" +
+        s""""value":${i * 0.5}}""").getBytes("UTF-8"))
+      .map(b => (b, new java.sql.Timestamp(0L)))
+      .toDF("value", "timestamp").repartition(2).localCheckpoint()
+    val pipe = Pipeline(spark, PipelineConfig(
+      source = DataFrameSource(batch),
+      outputDir = s"$root/out",
+      destTable = "events_raw",
+      decode = Decoders.json(payloadSchema),
+      normalizer = Some(NormalizerSpec(Seq("event_id", "event_type"),
+        Seq("event_id", "kind"))),
+      rotation = RotationPolicy(thresholdMB = 1000, durationSec = 100000,
+        clamp = false)))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("AS events_raw_norm") =>
+          plans.add(s.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try countJobs(pipe.processBatch(batch, 0L)) // flushes the listener bus
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(plans.size == 1) // the staging job
+    val plan = plans.peek()
+    assert(plan.contains("graft_normalize_rows"), plan)
+    assert(!plan.toLowerCase.contains("lambdafunction"), plan)
+
+    val r = pipe.metrics.report()
+    Seq("last_stage_task_ms", "total_stage_task_ms").foreach { k =>
+      val split = (s""""$k": [{]"rows_pulled": ([0-9.]+), """ +
+        """"parquet_write": ([0-9.]+)[}]""").r.findFirstMatchIn(r)
+      assert(split.nonEmpty, s"$k missing in $r")
+      assert(split.get.group(1).toDouble > 0 && split.get.group(2).toDouble > 0,
+        s"$k: ${split.get}")
+    }
+    pipe.close()
+    assert(spark.read.parquet(s"${pipe.closedSegments().head.path}/events_raw_norm")
+      .count() == 40)
+  }
+
   test("restart reopens a closed pipeline and resumes offsets (RestartDuck parity)") {
     val root = Files.createTempDirectory("graft-restart").toString
     val n1 = writeMessages(s"$root/messages")
