@@ -23,8 +23,7 @@ stats, compression and the rest), other generated code, and other.
 Window: `--until-system-gc` ends it at the first `System.gc()` of the run
 (the ingest workload calls it between its bulk drain and its paced
 phase); `--skip-s` drops the first seconds after the first executor
-sample (the warm-up triggers); `--from-ms`/`--to-ms` bound it by epoch
-milliseconds.
+sample (the warm-up triggers).
 """
 
 import argparse
@@ -141,8 +140,6 @@ def main():
     ap.add_argument("recording")
     ap.add_argument("--until-system-gc", action="store_true")
     ap.add_argument("--skip-s", type=float, default=0.0)
-    ap.add_argument("--from-ms", type=float)
-    ap.add_argument("--to-ms", type=float)
     args = ap.parse_args()
 
     samples, gc_ms = [], None
@@ -167,10 +164,6 @@ def main():
         if gc_ms is None:
             sys.exit("no System.gc() in the recording")
         hi = gc_ms
-    if args.from_ms is not None:
-        lo = max(lo, args.from_ms)
-    if args.to_ms is not None:
-        hi = min(hi, args.to_ms)
     kept = [c for t, c in samples if lo <= t < hi]
     if not kept:
         sys.exit("no executor task samples in the window")

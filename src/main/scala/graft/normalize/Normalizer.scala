@@ -138,12 +138,18 @@ object Normalizer {
       val hops = segs.drop(start).map { seg =>
         val ordinal = fieldIndex(dt, seg, segs)
         val f = dt.asInstanceOf[StructType].fields(ordinal)
-        nullable ||= f.nullable || seg.index.isDefined
-        dt = f.dataType match {
-          case ArrayType(elem, _) if seg.index.isDefined => elem
-          case other => other
+        // an index on a field that is not an array is ignored, as the
+        // lambda form ignored it
+        val index = f.dataType match {
+          case ArrayType(elem, _) if seg.index.isDefined =>
+            dt = elem
+            seg.index.get
+          case other =>
+            dt = other
+            -1
         }
-        PathHop(ordinal, f.dataType, seg.index.getOrElse(-1))
+        nullable ||= f.nullable || index >= 0
+        PathHop(ordinal, f.dataType, index)
       }
       (CompiledPath(from, hops, canonical(segs)), dt, nullable)
     }

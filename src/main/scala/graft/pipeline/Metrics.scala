@@ -129,7 +129,7 @@ final class PipelineMetrics(
     * wait for an earlier close, which `close_wait_ms` also counts. */
   def recordCommit(tables: Map[String, TableStats],
       writeNs: Long, commitNs: Long, rotateNs: Long,
-      pullTaskNs: Long = 0L, writeTaskNs: Long = 0L): Unit = synchronized {
+      pullTaskNs: Long, writeTaskNs: Long): Unit = synchronized {
     addPhase(0, writeNs); addPhase(1, commitNs); addPhase(2, rotateNs)
     lastStageNs(0) = pullTaskNs; totalStageNs(0) += pullTaskNs
     lastStageNs(1) = writeTaskNs; totalStageNs(1) += writeTaskNs

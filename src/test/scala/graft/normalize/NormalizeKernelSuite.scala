@@ -79,7 +79,14 @@ class NormalizeKernelSuite extends SparkSpec {
       Seq("id", "first", "price", "deal")),
     "strict, in range" -> NormalizerSpec(
       Seq("id", "stores[0].gallery"), Seq("id", "gallery"),
-      failOnRangeError = true))
+      failOnRangeError = true),
+    // a string and a struct field: the index is ignored
+    "index on a non-array field" -> NormalizerSpec(
+      Seq("id[0]", "site[0].id", "stores[0].gallery[0].deals.id"),
+      Seq("id", "site", "deal")),
+    "index on a non-array field, strict" -> NormalizerSpec(
+      Seq("id[3]", "site[2].id", "timestamp[1].seconds"),
+      Seq("id", "site", "seconds"), failOnRangeError = true))
 
   private val protoSpecs: Seq[(String, NormalizerSpec)] = Seq(
     "ingest decode schema" -> NormalizerSpec(
@@ -87,7 +94,9 @@ class NormalizeKernelSuite extends SparkSpec {
       Seq("id", "site", "store", "score")),
     "repeated fields crossed" -> NormalizerSpec(
       Seq("id", "site.kind", "tags", "attrs", "stores.kind", "stores[0].id"),
-      Seq("id", "site_kind", "tag", "attrs", "store_kind", "store0_id")))
+      Seq("id", "site_kind", "tag", "attrs", "store_kind", "store0_id")),
+    "index on a map field" -> NormalizerSpec(
+      Seq("id", "attrs[0]", "site[0].kind"), Seq("id", "attrs", "site_kind")))
 
   private def assertSame(df: DataFrame, spec: NormalizerSpec, clue: String): Unit = {
     val kernel = Normalizer.normalize(df, spec)

@@ -168,7 +168,7 @@ class SegmentRunnerSuite extends SparkSpec {
 
   test("the report gives the runner's p50 and p99 over the last 100 closes") {
     val m = new PipelineMetrics()
-    m.recordCommit(Map("t" -> TableStats(1L, 1L)), 0L, 0L, 0L)
+    m.recordCommit(Map("t" -> TableStats(1L, 1L)), 0L, 0L, 0L, 0L, 0L)
     assert(!m.report().contains("runner_close_ms"), "no close yet")
     (1 to 150).foreach(i => m.recordRotation(i * 1000000L, 0L))
     assert(m.report().contains(
